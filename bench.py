@@ -48,6 +48,7 @@ is machine-readable round-over-round.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -462,11 +463,8 @@ def main() -> None:
         try:
             from tools.make_multisplit import rewrite as _ms_rewrite
 
-            _stdout, sys.stdout = sys.stdout, sys.stderr  # tool prints per-table lines
-            try:
+            with contextlib.redirect_stdout(sys.stderr):  # tool prints per-table lines
                 _ms_rewrite(sf_dir, ms_dir, 8, 4)
-            finally:
-                sys.stdout = _stdout
             ms = _bench_keys(spark, qs, ms_dir, scaling_keys)
             scaling = {
                 "layout": "8x4",

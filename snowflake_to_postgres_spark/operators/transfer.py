@@ -32,7 +32,8 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -148,8 +149,6 @@ class TransferEngine:
 
     def _write(self, df: DataFrame, target_path: str) -> int:
         # Observe row count during the write itself — no second scan.
-        from pyspark.sql import Observation
-
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if self.repartition_to:
@@ -195,8 +194,15 @@ class TransferEngine:
 
         if workers <= 1:
             return [one(n) for n in names]
+        # Pool threads start without the caller's local properties, so
+        # their jobs would escape its job group. Each task is wrapped on
+        # its own and so carries its own copy: threads sharing one would
+        # race on the SQL execution id that every query sets there.
         with ThreadPoolExecutor(max_workers=workers) as pool:
-            return list(pool.map(one, names))
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(one), n) for n in names
+            ]
+            return [f.result() for f in futures]
 
 
 def rollup_stats(stats: list[TransferStats]) -> dict:
@@ -241,8 +247,6 @@ def transfer_partitioned(
     date_col = partition_col or detect_date_column(df.schema)
     bucket = F.date_format(F.col(date_col).cast("date"), 
                            "yyyy-MM" if granularity == "month" else "yyyy-MM-dd")
-    from pyspark.sql import Observation
-
     obs = Observation()
     out = df.withColumn("_pt", bucket).observe(obs, F.count(F.lit(1)).alias("rows"))
     (
@@ -287,6 +291,23 @@ def _hadoop_delete(spark: SparkSession, path: str) -> None:
     fs.delete(jpath, True)
 
 
+def _overwrite_partitions(
+    spark: SparkSession, df: DataFrame, target_path: str, partition_col: str
+) -> int:
+    """Write ``df`` hive-partitioned into ``target_path`` under dynamic
+    partition overwrite — only the partitions present in ``df`` are
+    replaced — and return its row count, observed during the write."""
+    obs = Observation()
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
+    return obs.get["rows"]
+
+
 def merge_upsert_partitioned(
     spark: SparkSession,
     target_path: str,
@@ -305,8 +326,8 @@ def merge_upsert_partitioned(
 
     * **Partition-scoped IO.** The affected partition list comes from
       the updates (driver-sized — a day's feed touches a day's
-      partitions); only those partitions are read and merged.
-      ``spark.sql.sources.partitionOverwriteMode=dynamic`` then rewrites
+      partitions); only those partitions are read and merged. The
+      write's ``partitionOverwriteMode=dynamic`` option then rewrites
       exactly the partitions present in the merged frame — untouched
       partitions are never read, never written (asserted by file mtime
       in tests). A 100 TB table with a 100 GB daily feed does 100 GB of
@@ -316,16 +337,16 @@ def merge_upsert_partitioned(
       max-version row per key survives, source-of-update winning ties —
       the idempotent form for at-least-once feeds (replaying yesterday's
       feed cannot regress a newer row).
-    * **Staging, not self-overwrite.** Spark refuses to overwrite a path
-      it is reading ("Cannot overwrite a path that is also being read
-      from"), so the merged slice stages to a sibling directory under
-      the TARGET's filesystem (:func:`_staging_path`) and the dynamic
-      overwrite reads from there. Two bounded writes of the affected
-      slice beats pinning it in executor memory (localCheckpoint) —
-      spill-safe at any partition size. The staging location must share
-      the target's scheme: a driver-local tempdir only works when
-      driver and executors share one disk (local mode), never on a
-      cluster.
+    * **One write, straight into the target.** The merged slice is
+      written to ``target_path`` itself under dynamic partition
+      overwrite, and its row count is observed during that write. Spark
+      allows this self-overwrite in dynamic mode: tasks write under
+      ``{target}/.spark-staging-<job>``, and the touched partitions are
+      swapped in only at job commit, after every task has finished
+      reading them. A job that fails aborts and removes its staging
+      directory, leaving every target file as it was (pinned in tests).
+      One bounded write of the affected slice, spill-safe at any
+      partition size.
 
     **Contract: ``partition_col`` must be functionally determined by
     ``key_cols``** (e.g. ``_pt`` derived from an immutable event date).
@@ -350,12 +371,14 @@ def merge_upsert_partitioned(
 
     t0 = _time.perf_counter()
     parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
+    # duplicate keys on the build side of a semi/anti join change nothing
+    keys = updates.select(*key_cols)
+    target = spark.read.parquet(target_path)  # one listing for both uses
     if check_moved_keys:
         moved = (
-            spark.read.parquet(target_path)
-            .select(*key_cols, partition_col)
+            target.select(*key_cols, partition_col)
             .filter(~_in_parts(partition_col, parts))
-            .join(updates.select(*key_cols).distinct(), key_cols, "left_semi")
+            .join(keys, key_cols, "left_semi")
         )
         sample = moved.limit(5).collect()
         if sample:
@@ -366,11 +389,9 @@ def merge_upsert_partitioned(
                 f"be functionally determined by key_cols. Sample: "
                 f"{[tuple(r) for r in sample]}"
             )
-    tgt = spark.read.parquet(target_path).filter(_in_parts(partition_col, parts))
+    tgt = target.filter(_in_parts(partition_col, parts))
     if version_col is None:
-        merged = tgt.join(
-            updates.select(*key_cols).distinct(), key_cols, "left_anti"
-        ).unionByName(updates)
+        merged = tgt.join(keys, key_cols, "left_anti").unionByName(updates)
     else:
         w = Window.partitionBy(*key_cols).orderBy(
             F.col(version_col).desc(), F.col("_is_update").desc()
@@ -382,23 +403,9 @@ def merge_upsert_partitioned(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_is_update")
         )
-
-    staging = _staging_path(target_path)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        merged.repartition(partition_col).write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        n = staged.count()
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            staged.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-        _hadoop_delete(spark, staging)
+    n = _overwrite_partitions(
+        spark, merged.repartition(partition_col), target_path, partition_col
+    )
     return TransferStats("merge_upsert", n, _time.perf_counter() - t0)
 
 
@@ -461,9 +468,9 @@ def compact_partitions(
       ``repartition(partition_col)`` would force ONE file per partition
       regardless of size — wrong for a partition bigger than a sane
       file target.
-    * **Same staging discipline as the merge**: rewrite stages to a
-      sibling on the target's filesystem, then dynamic partition
-      overwrite swaps only the compacted partitions in.
+    * **Same single write as the merge**: the compacted partitions are
+      written straight into the target under dynamic partition
+      overwrite, which swaps only them in at job commit.
     """
     import math
     import time as _time
@@ -492,28 +499,14 @@ def compact_partitions(
                         F.col("_n_files")).cast("int")
     ).drop("_n_files")
 
-    staging = _staging_path(target_path)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        # _salt rides through staging so the FINAL write can repartition
-        # on it — one shuffle task per (partition, salt) materializes one
-        # output file, landing exactly the computed file counts. (A final
-        # repartition(partition_col) alone would collapse every partition
-        # back to one file however large.)
-        salted.write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        n = staged.count()
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            staged.repartition(partition_col, "_salt")
-            .drop("_salt")
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-        _hadoop_delete(spark, staging)
+    # one shuffle task per (partition, salt) materializes one output file,
+    # landing exactly the computed file counts
+    n = _overwrite_partitions(
+        spark,
+        salted.repartition(partition_col, "_salt").drop("_salt"),
+        target_path,
+        partition_col,
+    )
     return TransferStats("compact", n, _time.perf_counter() - t0)
 
 
@@ -679,18 +672,9 @@ def repair_partitions(
     to_rewrite = [v for v in stale if v not in extra_set]
     if to_rewrite:
         slice_ = src.filter(_in_parts(partition_col, to_rewrite))
-        rewritten = slice_.count()
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            (
-                slice_.repartition(partition_col)
-                .write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(target_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        rewritten = _overwrite_partitions(
+            spark, slice_.repartition(partition_col), target_path, partition_col
+        )
     return {
         "checked": checked,
         "stale": sorted(map(str, stale)),
@@ -721,8 +705,10 @@ def delete_keys_partitioned(
       write ZERO rows — invisible to dynamic overwrite (the
       repair_partitions lesson), so those partitions are deleted
       through the Hadoop FS API instead.
-    * **Staging.** Same sibling-path staging as merge (Spark cannot
-      overwrite a path it is reading).
+    * **Staging.** Unlike the merge, the survivors stage to a sibling
+      path (:func:`_staging_path`) before the dynamic overwrite: the
+      staged output tells which partitions lost every row without a
+      second pass over the target slice.
 
     ``keys`` may be any frame carrying ``key_cols`` (a parquet list of
     user ids, a subquery); it is reduced to distinct keys and broadcast
@@ -744,7 +730,6 @@ def delete_keys_partitioned(
     survivors = tgt.join(k, key_cols, "left_anti")
 
     staging = _staging_path(target_path)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         survivors.repartition(partition_col).write.mode("overwrite").parquet(staging)
         staged = spark.read.parquet(staging)
@@ -761,14 +746,9 @@ def delete_keys_partitioned(
                     spark, f"{target_path.rstrip('/')}/{partition_col}={dirname}"
                 )
         if n > 0:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            (
-                staged.repartition(partition_col)
-                .write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(target_path)
+            _overwrite_partitions(
+                spark, staged.repartition(partition_col), target_path, partition_col
             )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
         _hadoop_delete(spark, staging)
     return TransferStats("delete_keys", n, _time.perf_counter() - t0)

@@ -263,7 +263,6 @@ class DataValidator:
             *pks, *[_norm_col(f).alias(f"t_{f.name}") for f in fields]
         )
         j = s.join(F.broadcast(t.join(F.broadcast(s.select(*pks)), pks, "left_semi")), pks, "left")
-        not_found = j.filter(F.col(f"t_{fields[0].name}").isNull())
         mismatch_cond = None
         for f in fields:
             cond = ~F.col(f"s_{f.name}").eqNullSafe(F.col(f"t_{f.name}"))
@@ -271,8 +270,9 @@ class DataValidator:
         agg = j.agg(
             F.count("*").alias("sampled"),
             F.sum(F.when(mismatch_cond, 1).otherwise(0)).alias("mismatched"),
+            F.count(F.when(F.col(f"t_{fields[0].name}").isNull(), 1)).alias("missing"),
         ).collect()[0]
-        n_missing = not_found.count()
+        n_missing = agg["missing"]
         ok = (agg["mismatched"] or 0) == 0 and n_missing == 0
         details = []
         if n_missing:

@@ -1,0 +1,89 @@
+"""Spark job accounting per operator call: every job a call submits,
+including those from its worker threads, lands in the caller's job
+group, and the job counts of the merge and the row-sample check stay
+pinned."""
+
+from __future__ import annotations
+
+import pyspark.sql.functions as F
+
+from snowflake_to_postgres_spark.operators.transfer import (
+    TransferEngine,
+    merge_upsert_partitioned,
+    transfer_partitioned,
+)
+from snowflake_to_postgres_spark.operators.validation import DataValidator
+from snowflake_to_postgres_spark.sources import load_table, table_path
+
+
+def _group_jobs(spark, group: str, fn) -> set[int]:
+    """Run ``fn`` under job group ``group``; return the ids of the jobs
+    it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _untagged_jobs(spark) -> set[int]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_transfer_schema_jobs_inherit_the_callers_group(spark, sf_dir, tmp_path):
+    """The fan-out's pool threads submit their jobs under the job group
+    of the thread that called transfer_schema, not untagged."""
+    tables = {t: table_path(sf_dir, t) for t in ("nation", "region")}
+    untagged = _untagged_jobs(spark)
+    stats = []
+    jobs = _group_jobs(
+        spark,
+        "transfer_schema_group",
+        lambda: stats.extend(
+            TransferEngine(spark).transfer_schema(tables, str(tmp_path / "out"), workers=2)
+        ),
+    )
+    assert all(s.error is None and s.rows > 0 for s in stats)
+    assert len(jobs) >= len(tables)
+    assert _untagged_jobs(spark) == untagged
+
+
+def test_merge_job_count_pinned(spark, sf_dir, tmp_path):
+    """One listing of the target, no distinct shuffles on the update
+    keys and one dynamic-overwrite write: 10 jobs. Staging the slice
+    through a sibling path, listing the target twice and de-duplicating
+    the keys took the same merge to 19."""
+    out = str(tmp_path / "orders_pt")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
+    upd_path = str(tmp_path / "updates")
+    (
+        spark.read.parquet(out)
+        .filter(F.col("_pt").isin("1997-03", "1997-04"))
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1))
+        .write.parquet(upd_path)
+    )
+    updates = spark.read.parquet(upd_path)
+    jobs = _group_jobs(
+        spark,
+        "merge_job_count",
+        lambda: merge_upsert_partitioned(spark, out, updates, ["o_orderkey"]),
+    )
+    assert len(jobs) == 10
+
+
+def test_row_sample_job_count_pinned(spark, sf_dir):
+    """The sample join runs once: missing rows are counted inside the
+    same aggregate as the mismatches (7 jobs; a second pass of the join
+    for the missing rows took 11)."""
+    orders = load_table(spark, sf_dir, "orders")
+    v = DataValidator(orders, orders, pk_columns=["o_orderkey"])
+    res = []
+    jobs = _group_jobs(spark, "row_sample_job_count", lambda: res.append(v.check_row_sample()))
+    assert res[0].passed
+    assert len(jobs) == 7

@@ -22,7 +22,6 @@ from __future__ import annotations
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from snowflake_to_postgres_spark.operators.dedup import dedup_simhash_pairs

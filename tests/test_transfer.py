@@ -289,6 +289,91 @@ def test_merge_upsert_version_latest_wins(spark, sf_dir, tmp_path):
     assert len(got) == 1 and float(got[0][0]) == old_price
 
 
+def test_merge_repeated_update_keys_latest_wins(spark, sf_dir, tmp_path):
+    """Updates that carry one key several times: with a version column
+    the newest update row is the only copy left; without one, no target
+    copy of the key survives the anti-join."""
+    from snowflake_to_postgres_spark.operators.transfer import (
+        merge_upsert_partitioned,
+        transfer_partitioned,
+    )
+
+    out = str(tmp_path / "orders_rep")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
+    key = spark.read.parquet(out).agg(F.min("o_orderkey")).collect()[0][0]
+    n_before = spark.read.parquet(out).count()
+    base = spark.createDataFrame(
+        spark.read.parquet(out).filter(F.col("o_orderkey") == key).collect()
+    )
+
+    def bumped(price: float, days: int):
+        return base.withColumn(
+            "o_totalprice", F.lit(price).cast(base.schema["o_totalprice"].dataType)
+        ).withColumn("o_orderdate", F.date_add(F.col("o_orderdate"), days))
+
+    repeated = bumped(1.0, 1).unionByName(bumped(3.0, 3)).unionByName(bumped(2.0, 2))
+    merge_upsert_partitioned(spark, out, repeated, ["o_orderkey"], version_col="o_orderdate")
+    after = spark.read.parquet(out)
+    got = after.filter(F.col("o_orderkey") == key).select("o_totalprice").collect()
+    assert [float(r[0]) for r in got] == [3.0]
+    assert after.count() == n_before
+
+    old_price = float(got[0][0])
+    merge_upsert_partitioned(
+        spark, out, bumped(5.0, 5).unionByName(bumped(5.0, 5)), ["o_orderkey"]
+    )
+    got = spark.read.parquet(out).filter(F.col("o_orderkey") == key).collect()
+    assert got and all(float(r["o_totalprice"]) == 5.0 for r in got)
+    assert old_price not in {float(r["o_totalprice"]) for r in got}
+
+
+def test_merge_failed_write_leaves_target_untouched(spark, sf_dir, tmp_path):
+    """The merge writes straight into the target. A task that raises
+    mid-write aborts the job: every target file keeps its bytes and
+    mtime, and neither a sibling staging directory nor Spark's
+    ``.spark-staging-*`` directory is left behind."""
+    import glob
+
+    import pytest
+
+    from snowflake_to_postgres_spark.operators.transfer import (
+        merge_upsert_partitioned,
+        transfer_partitioned,
+    )
+
+    out = str(tmp_path / "orders_fail")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
+
+    def snapshot() -> dict[str, tuple[int, float]]:
+        return {
+            os.path.relpath(os.path.join(d, f), out): (
+                os.path.getsize(os.path.join(d, f)),
+                os.path.getmtime(os.path.join(d, f)),
+            )
+            for d, _, files in os.walk(out)
+            for f in files
+        }
+
+    before = snapshot()
+    n_before = spark.read.parquet(out).count()
+    poisoned = (
+        spark.read.parquet(out)
+        .filter(F.col("_pt").isin("1997-03", "1997-04"))
+        .withColumn(
+            "o_totalprice",
+            F.when(F.col("o_orderkey") > 0, F.raise_error(F.lit("poisoned update"))).otherwise(
+                F.col("o_totalprice")
+            ),
+        )
+    )
+    with pytest.raises(Exception, match="poisoned update"):
+        merge_upsert_partitioned(spark, out, poisoned, ["o_orderkey"])
+    assert snapshot() == before
+    assert not any(".spark-staging" in d for d, _, _ in os.walk(out))
+    assert glob.glob(str(tmp_path / "*__staging_*")) == []
+    assert spark.read.parquet(out).count() == n_before
+
+
 def test_compact_partitions_scoped(spark, sf_dir, tmp_path):
     """Compaction rewrites ONLY partitions over the file-count bar, back
     to one file; untouched partitions keep their exact files/mtimes, and

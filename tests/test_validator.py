@@ -116,6 +116,13 @@ def test_missing_sampled_rows_reported(spark, sf_dir):
         DataValidator(orders, tgt, pk_columns=["o_orderkey"]).validate()
     )
     assert not checks["row_sample"].passed
+    # the missing count is exact: sampled source keys absent from target
+    sampled = orders.filter(
+        F.md5(F.col("o_orderkey").cast("string")).startswith("0")
+    )
+    n_missing = sampled.filter(F.col("o_orderkey") <= 50).count()
+    assert n_missing > 0, "fixture has no sampled key <= 50"
+    assert f"{n_missing} sampled rows missing in target" in checks["row_sample"].details
 
 
 def test_date_column_heuristic(spark, sf_dir):
