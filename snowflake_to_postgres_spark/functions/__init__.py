@@ -18,42 +18,6 @@ def iff(cond: Column, a, b) -> Column:
     return F.when(cond, a).otherwise(b)
 
 
-def nvl(a: Column, b) -> Column:
-    """F2: NVL/IFNULL → coalesce."""
-    return F.coalesce(a, F.lit(b) if not isinstance(b, Column) else b)
-
-
-def split_to_table(col, delim: str) -> Column:
-    """F9: SPLIT_TO_TABLE's value column — use inside select() with
-    explode fan-out."""
-    return F.explode(F.split(col, delim))
-
-
-def to_timestamp_sf(col, sf_format: str | None = None) -> Column:
-    """F5: TO_TIMESTAMP with a Snowflake format string."""
-    from snowflake_to_postgres_spark.plans.dialect import translate_format_string
-
-    if sf_format is None:
-        return F.to_timestamp(col)
-    return F.to_timestamp(col, translate_format_string(sf_format))
-
-
-def datediff_sf(part: str, start: Column, end: Column) -> Column:
-    """F7: Snowflake DATEDIFF(part, a, b) semantics (boundary count, not
-    elapsed) — days via datediff, months via months_between floor,
-    others via timestampdiff."""
-    p = part.lower()
-    if p in ("day", "dd", "d"):
-        return F.datediff(end.cast("date"), start.cast("date"))
-    if p in ("month", "mm", "mon"):
-        return (
-            (F.year(end) * 12 + F.month(end)) - (F.year(start) * 12 + F.month(start))
-        )
-    if p in ("year", "yy", "yyyy"):
-        return F.year(end) - F.year(start)
-    return F.timestamp_diff(part, start, end)
-
-
 def null_byte_scrub(col) -> Column:
     """P7 (data_transfer.py:343-352): strip NUL bytes — only needed for
     text-protocol legacy sinks."""

@@ -771,15 +771,6 @@ LEFT JOIN hits h ON h.doc_id = f.doc_id
 # 8 hex chars of md5(w), extracted with pure integer arithmetic (portable —
 # no hex→int cast needed in either engine).
 
-def _hex_bit(hexpos: int, bit_in_digit: int, col: str = "w") -> str:
-    """SQL for bit value of hex digit at 1-based position ``hexpos``.
-    (Legacy nibble form — the simhash oracle now shifts the single
-    parsed integer instead; kept for reference/tests.)"""
-    div = 2 ** bit_in_digit
-    return (
-        f"(( (strpos('0123456789abcdef', substr(md5({col}), {hexpos}, 1)) - 1) "
-        f"// {div}) % 2)"
-    )
 
 
 def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:

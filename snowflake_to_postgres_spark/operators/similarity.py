@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 from snowflake_to_postgres_spark.registry import QuerySpec
 from snowflake_to_postgres_spark.sources import load_table
+from snowflake_to_postgres_spark.util.sqlview import temp_view_for
 
 N_QUERIES = 5        # query set: vec_id < 5
 TOP_K = 5
@@ -95,6 +96,138 @@ norms AS (
 """
 
 
+# ---------------------------------------------------------------------------
+# Spark SQL fragments: the one text of each shared kernel. Each builder
+# returns one SELECT over the relations it is given, by name or as a
+# parenthesized subquery (_sub); the registered queries and the DataFrame
+# helpers nest the same builders, each helper in one spark.sql call. Hints
+# sit where the kernels broadcast: centroids, hyperplanes, probe lists,
+# the query block and the query norms.
+#
+# Every frame, the components included, enters through temp_view_for,
+# never as a spark.sql parameter: substitution drops the cache entry of
+# any plan-equal frame (util/sqlview.py), and emb_matryoshka_recall
+# persists a components frame that every other build here would match.
+# The helpers build without a WITH so callers can cache their frames: on
+# Spark 4.1.2 a cached plan that contains a WITH is found again only when
+# its CTEs come first in the reading plan (the cache lookup renumbers CTE
+# ids across the whole plan).
+# ---------------------------------------------------------------------------
+
+
+def _sub(sql: str) -> str:
+    """``sql`` as a parenthesized relation for another fragment."""
+    return f"(\n{sql}\n)"
+
+
+def _cosine_sql(
+    comp: str, cand: str | None = None, k: int | None = None, n_queries: int = N_QUERIES
+) -> str:
+    """SELECT of (qid, neighbor_id, cosine): exact decimal cosine of each
+    query vector (vec_id < ``n_queries``) against the whole corpus or,
+    given the relation ``cand`` of (qid, vec_id) pairs, against those
+    candidates only (the exact rescore of every bucketed ANN path). With
+    ``k``, (qid, rank, neighbor_id, cosine) of the k best per query, ties
+    on neighbor_id.
+
+    Rounded to DECIMAL(10,8): DuckDB's wide-decimal→double conversion can
+    differ from the JVM's by 1 ULP; 8 decimals collapses that while
+    keeping a meaningful similarity score. Ranking uses the rounded
+    value."""
+    norms = (
+        "(SELECT vec_id, CAST(SUM(val * val) AS DECIMAL(38,18)) AS n2 "
+        f"FROM {comp} GROUP BY vec_id)"
+    )
+    q = f"(SELECT vec_id AS qid, idx, val AS qval FROM {comp} WHERE vec_id < {n_queries})"
+    if cand is None:
+        qid = "q.qid"
+        dots_from = f"{comp} c JOIN {q} q ON q.idx = c.idx WHERE c.vec_id != q.qid"
+    else:
+        qid = "s.qid"
+        dots_from = (
+            f"{comp} c JOIN {cand} s ON s.vec_id = c.vec_id\n"
+            f"    JOIN {q} q ON q.qid = s.qid AND q.idx = c.idx"
+        )
+    ranked = f"""SELECT /*+ BROADCAST(qn) */ d.qid, d.vec_id AS neighbor_id,
+       CAST(CAST(dot AS DOUBLE)
+            / (SQRT(CAST(qn.n2 AS DOUBLE)) * SQRT(CAST(nn.n2 AS DOUBLE)))
+            AS DECIMAL(10,8)) AS cosine
+FROM (
+  SELECT /*+ BROADCAST(q) */ {qid}, c.vec_id,
+         CAST(SUM(c.val * q.qval) AS DECIMAL(38,18)) AS dot
+  FROM {dots_from}
+  GROUP BY {qid}, c.vec_id
+) d
+JOIN (SELECT vec_id AS qid, n2 FROM {norms}) qn ON qn.qid = d.qid
+JOIN {norms} nn ON nn.vec_id = d.vec_id"""
+    if k is None:
+        return ranked
+    return f"""SELECT qid, rank, neighbor_id, cosine FROM (
+  SELECT qid, neighbor_id, cosine,
+         CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id)
+              AS BIGINT) AS rank
+  FROM {_sub(ranked)}
+) WHERE rank <= {k}"""
+
+
+def _ivf_cent_sql(comp: str) -> str:
+    """SELECT of (cid, idx, cval): the first N_CENTROIDS corpus vectors,
+    a deterministic stand-in for trained centroids."""
+    return (
+        f"SELECT vec_id AS cid, idx, val AS cval FROM {comp} WHERE vec_id < {N_CENTROIDS}"
+    )
+
+
+def _ivf_d2_sql(comp: str, cent: str) -> str:
+    """SELECT of (vec_id, cid, d2): exact squared L2 of every ``comp``
+    vector to every centroid of ``cent``."""
+    return f"""SELECT /*+ BROADCAST(cent) */ vec_id, cid,
+       CAST(SUM((val - cval) * (val - cval)) AS DECIMAL(38,18)) AS d2
+FROM {comp} JOIN {cent} cent USING (idx) GROUP BY vec_id, cid"""
+
+
+def _ivf_ranked_sql(d2: str) -> str:
+    """SELECT of (vec_id, cid, rn): every vector's centroids of the
+    (vec_id, cid, d2) relation ``d2`` ranked by distance, ties on cid."""
+    return f"""SELECT vec_id, cid,
+       ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
+FROM {d2}"""
+
+
+def _ivf_assign_sql(d2: str) -> str:
+    """SELECT of (vec_id, cell): each vector's nearest centroid."""
+    return f"SELECT vec_id, cid AS cell FROM {_sub(_ivf_ranked_sql(d2))} WHERE rn = 1"
+
+
+def _ivf_cells_sql(d2: str) -> str:
+    """SELECT of (qid, cell, rn): each query's cells by distance."""
+    return (
+        f"SELECT vec_id AS qid, cid AS cell, rn FROM {_sub(_ivf_ranked_sql(d2))} "
+        f"WHERE vec_id < {N_QUERIES}"
+    )
+
+
+def _ivf_probes_sql(cells: str) -> str:
+    """SELECT of (qid, cell): the N_PROBE nearest cells per query."""
+    return f"SELECT qid, cell FROM {cells} WHERE rn <= {N_PROBE}"
+
+
+def _ivf_stages(comp: str) -> tuple[str, str]:
+    """The assign and cells stages of IVF over ``comp`` (centroids from
+    the corpus itself) as subqueries."""
+    d2 = _sub(_ivf_d2_sql(comp, _sub(_ivf_cent_sql(comp))))
+    return _sub(_ivf_assign_sql(d2)), _sub(_ivf_cells_sql(d2))
+
+
+def _ivf_cand_sql(comp: str) -> str:
+    """SELECT of (qid, vec_id): IVF cell pruning — the vectors assigned to
+    a query's N_PROBE nearest cells."""
+    assign, cells = _ivf_stages(comp)
+    return f"""SELECT /*+ BROADCAST(probes) */ qid, vec_id
+FROM {assign} assign JOIN {_sub(_ivf_probes_sql(cells))} probes USING (cell)
+WHERE vec_id != qid"""
+
+
 def _bf_cosines(
     spark: SparkSession, sf_dir: str, n_queries: int = N_QUERIES
 ) -> DataFrame:
@@ -102,42 +235,15 @@ def _bf_cosines(
     full corpus — the exact-cosine block shared by the brute-force
     top-k, the radius (range) search, and the label-noise audit (which
     widens the query block via ``n_queries``)."""
-    comp = _components(spark, sf_dir)
-    norms = _norms(comp)
-    q = comp.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"), "idx", F.col("val").alias("qval")
-    )
-    dots = (
-        comp.join(F.broadcast(q), "idx")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum(F.col("val") * F.col("qval")).cast("decimal(38,18)").alias("dot"))
-    )
-    qn = norms.select(F.col("vec_id").alias("qid"), F.col("n2").alias("qn2"))
-    # Rounded to DECIMAL(10,8): DuckDB's wide-decimal→double conversion can
-    # differ from the JVM's by 1 ULP; 8 decimals collapses that while keeping
-    # a meaningful similarity score. Ranking uses the rounded value.
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("qn2").cast("double")) * F.sqrt(F.col("n2").cast("double")))
-    ).cast("decimal(10,8)")
-    return (
-        dots.join(F.broadcast(qn), "qid")
-        .join(norms, "vec_id")
-        .select("qid", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-    )
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    return spark.sql(_cosine_sql(comp, n_queries=n_queries))
 
 
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: every query vector against the full
     corpus. Join on component idx, exact-decimal dot, rank per query."""
-    ranked = _bf_cosines(spark, sf_dir)
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "rank", "neighbor_id", "cosine")
-    )
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    return spark.sql(_cosine_sql(comp, k=TOP_K))
 
 
 SIM_TOPK_ORACLE = _COMP_CTES + f""",
@@ -173,28 +279,19 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-oracle-able); the *search* topology is the real IVF plan: the
     candidate join shuffles on cell id, cutting scanned vectors by
     ~N_PROBE/N_CENTROIDS."""
-    comp = _components(spark, sf_dir)
-    candidates = _ivf_candidates(comp)
-    return _rank_candidates(comp, candidates, k=3)
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    return spark.sql(_cosine_sql(comp, _sub(_ivf_cand_sql(comp)), 3))
 
 
 def _ivf_centroids(comp: DataFrame) -> DataFrame:
     """(cid, idx, cval) — the deterministic centroid set."""
-    return comp.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), "idx", F.col("val").alias("cval")
-    )
+    return comp.sparkSession.sql(_ivf_cent_sql(temp_view_for(comp, "comp")))
 
 
 def _ivf_cell_d2(vectors: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, cid, d2) — exact squared L2 to every centroid."""
-    return (
-        vectors.join(F.broadcast(cent), "idx")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum((F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval")))
-            .cast("decimal(38,18)")
-            .alias("d2")
-        )
+    return vectors.sparkSession.sql(
+        _ivf_d2_sql(temp_view_for(vectors, "ivf_vectors"), temp_view_for(cent, "ivf_cent"))
     )
 
 
@@ -205,21 +302,13 @@ def _w_assign():
 
 def _ivf_assign(d2: DataFrame) -> DataFrame:
     """(vec_id, cell) — nearest-centroid cell per vector."""
-    return (
-        d2.withColumn("rn", F.row_number().over(_w_assign()))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cid").alias("cell"))
-    )
+    return d2.sparkSession.sql(_ivf_assign_sql(temp_view_for(d2, "ivf_d2")))
 
 
 def _ivf_probes(d2: DataFrame) -> DataFrame:
     """(qid, cell) — the N_PROBE nearest cells per query vector."""
-    return (
-        d2.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("rn", F.row_number().over(_w_assign()))
-        .filter(F.col("rn") <= N_PROBE)
-        .select(F.col("vec_id").alias("qid"), F.col("cid").alias("cell"))
-    )
+    cells = _sub(_ivf_cells_sql(temp_view_for(d2, "ivf_d2")))
+    return d2.sparkSession.sql(_ivf_probes_sql(cells))
 
 
 def _ivf_candidates(comp: DataFrame) -> DataFrame:
@@ -227,52 +316,16 @@ def _ivf_candidates(comp: DataFrame) -> DataFrame:
     nearest centroid cell, candidates = vectors in the N_PROBE cells
     nearest each query. Shared by sim_ivf_topk (exact in-cell scoring)
     and sim_ivf_pq_topk (ADC in-cell scoring)."""
-    d2 = _ivf_cell_d2(comp, _ivf_centroids(comp))
-    assign = _ivf_assign(d2)
-    probes = _ivf_probes(d2)
-    return (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-    )
+    return comp.sparkSession.sql(_ivf_cand_sql(temp_view_for(comp, "comp")))
 
 
 def _rank_candidates(comp: DataFrame, candidates: DataFrame, k: int) -> DataFrame:
     """Exact-cosine scoring + per-query top-k over a (qid, vec_id)
     candidate set — the shared tail of every bucketed ANN variant (IVF,
     RP-LSH). Candidate frames are tiny relative to the corpus (that is
-    the point of bucketing), so the query block and norms broadcast.
-
-    Rounded to DECIMAL(10,8): DuckDB's wide-decimal→double conversion can
-    differ from the JVM's by 1 ULP; 8 decimals collapses that while
-    keeping a meaningful similarity score. Ranking uses the rounded
-    value, ties on neighbor_id."""
-    norms = _norms(comp)
-    q = comp.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), "idx", F.col("val").alias("qval")
-    )
-    dots = (
-        comp.join(candidates, "vec_id")
-        .join(F.broadcast(q), ["qid", "idx"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum(F.col("val") * F.col("qval")).cast("decimal(38,18)").alias("dot"))
-    )
-    qn = norms.select(F.col("vec_id").alias("qid"), F.col("n2").alias("qn2"))
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("qn2").cast("double")) * F.sqrt(F.col("n2").cast("double")))
-    ).cast("decimal(10,8)")
-    ranked = (
-        dots.join(F.broadcast(qn), "qid")
-        .join(norms, "vec_id")
-        .select("qid", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id", "cosine")
-    )
+    the point of bucketing), so the query block and norms broadcast."""
+    sql = _cosine_sql(temp_view_for(comp, "comp"), temp_view_for(candidates, "cand"), k)
+    return comp.sparkSession.sql(sql)
 
 
 SIM_IVF_ORACLE = _COMP_CTES + f""",
@@ -385,6 +438,49 @@ def rp_auto_bits(n_vectors: int, tables: int = RP_TABLES) -> int:
     return max(1, min(bits, n_vectors // (2 * tables)))
 
 
+def _rp_lsh_sql(
+    comp: str, bits: int = RP_BITS, tables: int = RP_TABLES, radius: int = RP_PROBE_RADIUS
+) -> str:
+    """SELECT of the RP-LSH candidate pairs (qid, vec_id) over ``comp``:
+    hyper — table t's hyperplane h is v_{t·2B+h} − v_{t·2B+B+h} (disjoint
+    corpus-vector slices per table, so the ``tables`` signatures are
+    independent draws from the same direction-unbiased family) → proj
+    (exact decimal projections) → bucketed(vec_id, t, bucket) — the
+    ``bits``-bit sign signature per table → variants — every bucket
+    within Hamming distance ``radius`` of a query's signature → the
+    distinct pairs sharing a bucket, so a neighbor probed by several
+    tables scores once."""
+    span = 2 * bits
+    masks = ", ".join(
+        f"CAST(bucket ^ {m} AS BIGINT)" for m in _probe_masks(bits, radius)
+    )
+    src = f"""(
+    SELECT CAST(FLOOR(vec_id / {span}) AS INT) AS t,
+           CAST(vec_id % {span} AS INT) AS r, idx, val
+    FROM {comp} WHERE vec_id < {tables * span})"""
+    hyper = f"""(
+    SELECT t, h, idx, av - bv AS hval
+    FROM (SELECT t, r AS h, idx, val AS av FROM {src} WHERE r < {bits}) ha
+    JOIN (SELECT t, r - {bits} AS h, idx, val AS bv FROM {src} WHERE r >= {bits}) hb
+    USING (t, h, idx))"""
+    proj = f"""(
+    SELECT /*+ BROADCAST(hyper) */ c.vec_id, hyper.t, hyper.h,
+           CAST(SUM(c.val * hyper.hval) AS DECIMAL(38,18)) AS p
+    FROM {comp} c JOIN {hyper} hyper USING (idx)
+    GROUP BY c.vec_id, hyper.t, hyper.h)"""
+    bucketed = f"""(
+    SELECT vec_id, t,
+           CAST(SUM(CASE WHEN p > 0 THEN CAST(SHIFTLEFT(1, h) AS BIGINT)
+                         ELSE 0 END) AS BIGINT) AS bucket
+    FROM {proj} GROUP BY vec_id, t)"""
+    variants = f"""(
+    SELECT vec_id AS qid, t, explode(array({masks})) AS bucket
+    FROM {bucketed} WHERE vec_id < {N_QUERIES})"""
+    return f"""SELECT /*+ BROADCAST(v) */ DISTINCT v.qid, b.vec_id
+  FROM {bucketed} b JOIN {variants} v ON v.t = b.t AND v.bucket = b.bucket
+  WHERE b.vec_id != v.qid"""
+
+
 def sim_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-random-projection (SimHash-for-vectors) LSH ANN — the
     second bucketed scale path next to IVF (Charikar's random-hyperplane
@@ -412,82 +508,11 @@ def sim_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus. For 10⁹ vectors you'd raise RP_BITS so bucket occupancy
     stays ~constant (bits ≈ log2(N / target_bucket_size)).
 
-    Round 15 (guide §7.3, the _ivf_pq_ranked pattern): the registered
-    pinned-constant form builds as ONE spark.sql statement instead of
-    the py4j helper walk — every CTE mirrors rp_lsh_candidates +
-    _rank_candidates expression-for-expression (same broadcast hints
-    where the helpers call F.broadcast: hyper, variants, q, qn; same
-    join order, same window tie-break), so the plan and all values are
-    unchanged (exceptAll 0 both ways; oracle green both SFs). The
-    parameterized :func:`rp_lsh_candidates` kernel stays — the ladder
-    tool and the auto-bits path use it."""
-    comp = _components(spark, sf_dir)
-    span = 2 * RP_BITS
-    mask_arr = ", ".join(
-        f"CAST(bucket ^ {m} AS BIGINT)" for m in RP_PROBE_MASKS
-    )
-    return spark.sql(
-        f"""
-WITH src AS (
-  SELECT CAST(FLOOR(vec_id / {span}) AS INT) AS t,
-         CAST(vec_id % {span} AS INT) AS r, idx, val
-  FROM {{comp}} WHERE vec_id < {RP_TABLES * span}
-),
-ha AS (SELECT t, r AS h, idx, val AS av FROM src WHERE r < {RP_BITS}),
-hb AS (SELECT t, r - {RP_BITS} AS h, idx, val AS bv FROM src WHERE r >= {RP_BITS}),
-hyper AS (SELECT t, h, idx, av - bv AS hval FROM ha JOIN hb USING (t, h, idx)),
-proj AS (
-  SELECT /*+ BROADCAST(hyper) */ c.vec_id, hyper.t, hyper.h,
-         CAST(SUM(c.val * hyper.hval) AS DECIMAL(38,18)) AS p
-  FROM {{comp}} c JOIN hyper USING (idx)
-  GROUP BY c.vec_id, hyper.t, hyper.h
-),
-bucketed AS (
-  SELECT vec_id, t,
-         CAST(SUM(CASE WHEN p > 0 THEN CAST(SHIFTLEFT(1, h) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS bucket
-  FROM proj GROUP BY vec_id, t
-),
-variants AS (
-  SELECT vec_id AS qid, t, explode(array({mask_arr})) AS bucket
-  FROM bucketed WHERE vec_id < {N_QUERIES}
-),
-cand AS (
-  SELECT /*+ BROADCAST(v) */ DISTINCT v.qid, b.vec_id
-  FROM bucketed b JOIN variants v ON v.t = b.t AND v.bucket = b.bucket
-  WHERE b.vec_id != v.qid
-),
-norms AS (
-  SELECT vec_id, CAST(SUM(val * val) AS DECIMAL(38,18)) AS n2
-  FROM {{comp}} GROUP BY vec_id
-),
-q AS (SELECT vec_id AS qid, idx, val AS qval FROM {{comp}} WHERE vec_id < {N_QUERIES}),
-dots AS (
-  SELECT /*+ BROADCAST(q) */ c.qid, c.vec_id,
-         CAST(SUM(comp.val * q.qval) AS DECIMAL(38,18)) AS dot
-  FROM {{comp}} comp JOIN cand c ON c.vec_id = comp.vec_id
-  JOIN q ON q.qid = c.qid AND q.idx = comp.idx
-  GROUP BY c.qid, c.vec_id
-),
-ranked AS (
-  SELECT /*+ BROADCAST(qn) */ dots.qid, dots.vec_id AS neighbor_id,
-         CAST(CAST(dot AS DOUBLE)
-              / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE)))
-              AS DECIMAL(10,8)) AS cosine
-  FROM dots
-  JOIN (SELECT vec_id AS qid, n2 FROM norms) qn ON qn.qid = dots.qid
-  JOIN norms nn ON nn.vec_id = dots.vec_id
-)
-SELECT qid, rank, neighbor_id, cosine FROM (
-  SELECT qid, neighbor_id, cosine,
-         CAST(ROW_NUMBER() OVER (PARTITION BY qid
-                                 ORDER BY cosine DESC, neighbor_id)
-              AS BIGINT) AS rank
-  FROM ranked
-) WHERE rank <= 3
-""",
-        comp=comp,
-    )
+    The registered query runs the pinned module constants through the
+    same fragment as the parameterized :func:`rp_lsh_candidates` (the
+    ladder tool and the auto-bits path)."""
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    return spark.sql(_cosine_sql(comp, _sub(_rp_lsh_sql(comp)), 3))
 
 
 def rp_lsh_candidates(
@@ -517,54 +542,8 @@ def rp_lsh_candidates(
             comp.select("vec_id").agg(F.max("vec_id")).first()[0] or 0
         ) + 1
         bits = rp_auto_bits(n_vectors, tables)
-    # Table t's hyperplane j is v_{t·2B+j} − v_{t·2B+B+j}: disjoint
-    # corpus-vector slices per table, so the ``tables`` signatures are
-    # independent draws from the same direction-unbiased family.
-    span = 2 * bits
-    src = comp.filter(F.col("vec_id") < tables * span)
-    t_col = F.floor(F.col("vec_id") / span).cast("int")
-    r_col = (F.col("vec_id") % span).cast("int")
-    ha = src.filter(r_col < bits).select(
-        t_col.alias("t"), r_col.alias("h"), "idx", F.col("val").alias("av")
-    )
-    hb = src.filter(r_col >= bits).select(
-        t_col.alias("t"), (r_col - bits).alias("h"), "idx", F.col("val").alias("bv")
-    )
-    hyper = ha.join(hb, ["t", "h", "idx"]).select(
-        "t", "h", "idx", (F.col("av") - F.col("bv")).alias("hval")
-    )
-    proj = (
-        comp.join(F.broadcast(hyper), "idx")
-        .groupBy("vec_id", "t", "h")
-        .agg(F.sum(F.col("val") * F.col("hval")).cast("decimal(38,18)").alias("p"))
-    )
-    bucket = proj.groupBy("vec_id", "t").agg(
-        F.sum(
-            F.when(F.col("p") > 0, F.expr("cast(shiftleft(1, h) as bigint)")).otherwise(
-                F.lit(0)
-            )
-        )
-        .cast("bigint")
-        .alias("bucket")
-    )
-    masks = _probe_masks(bits, radius)
-    variants = (
-        bucket.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            "t",
-            F.explode(
-                F.array(*[F.expr(f"cast(bucket ^ {m} as bigint)") for m in masks])
-            ).alias("bucket"),
-        )
-    )
-    # distinct: a neighbor probed by several tables must score ONCE
-    # (the rescore sums partial dot products per (qid, vec_id))
-    return (
-        bucket.join(F.broadcast(variants), ["t", "bucket"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
+    return comp.sparkSession.sql(
+        _rp_lsh_sql(temp_view_for(comp, "comp"), bits, tables, radius)
     )
 
 
@@ -1243,45 +1222,18 @@ SELECT qid, rank, neighbor_id, cosine FROM (
 
 def _ivf_pq_ranked(spark: SparkSession, comp: DataFrame, k: int) -> DataFrame:
     """The composed IVF → PQ-ADC → exact-rescore chain (the
-    sim_ivf_pq_topk pipeline) built as ONE ``spark.sql`` string with
-    DataFrame substitution — round 14, guide §7.3: the helper-chain
-    build (_ivf_candidates → _pq_adc_scores → _rank_candidates) spent
-    ~0.6 s per call in py4j round trips and incremental plan analysis
-    (2 461 py4j commands, zero jobs — the val_referential_integrity
-    pattern); one parse + one analysis pass drops that to ~0.1 s. Every
-    CTE mirrors the helper it replaces expression-for-expression —
-    same broadcast hints where the helpers called ``F.broadcast``
-    (cent, probes, cb, tbl, q, qn), same join order (left-deep), same
-    window frames and tie-breaks — so the physical plan and all values
-    are unchanged (proven by exceptAll both ways + the DuckDB oracle
-    at both SFs). ``k`` parameterizes the final top-k exactly as
-    ``_rank_candidates(k=...)`` did."""
+    sim_ivf_pq_topk pipeline) as ONE ``spark.sql`` string: the IVF and
+    rescore fragments around the PQ-ADC CTEs, which score each IVF
+    candidate from its codes and keep the ADC_SHORTLIST best per query
+    for the exact rescore. One parse + one analysis pass instead of the
+    py4j-bound helper walk (_ivf_candidates → _pq_adc_scores →
+    _rank_candidates: ~0.6 s of round trips per call vs ~0.1 s)."""
+    comp = temp_view_for(comp, "comp")
     return spark.sql(
         f"""
-WITH cent AS (SELECT vec_id AS cid, idx, val AS cval FROM {{comp}} WHERE vec_id < {N_CENTROIDS}),
-celld2 AS (
-  SELECT /*+ BROADCAST(cent) */ vec_id, cid,
-         CAST(SUM((val - cval) * (val - cval)) AS DECIMAL(38,18)) AS d2
-  FROM {{comp}} JOIN cent USING (idx) GROUP BY vec_id, cid
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-    FROM celld2) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS qid, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-    FROM celld2 WHERE vec_id < {N_QUERIES}) WHERE rn <= {N_PROBE}
-),
-candidates AS (
-  SELECT /*+ BROADCAST(probes) */ qid, vec_id
-  FROM assign JOIN probes USING (cell) WHERE vec_id != qid
-),
+WITH ivf_cand AS {_sub(_ivf_cand_sql(comp))},
 comp2 AS (
-  SELECT vec_id, idx, val, CAST(idx / {64 // PQ_BLOCKS} AS INT) AS block FROM {{comp}}
+  SELECT vec_id, idx, val, CAST(idx / {64 // PQ_BLOCKS} AS INT) AS block FROM {comp}
 ),
 cb AS (
   SELECT vec_id AS cid, block, idx, val AS cval FROM comp2 WHERE vec_id < {PQ_CODEBOOK}
@@ -1306,7 +1258,7 @@ tbl AS (
 ),
 partials AS (
   SELECT /*+ BROADCAST(tbl) */ ca.qid, ca.vec_id, tbl.t
-  FROM candidates ca
+  FROM ivf_cand ca
   JOIN codes ON codes.vec_id = ca.vec_id
   JOIN tbl ON tbl.qid = ca.qid AND tbl.block = codes.block AND tbl.cid = codes.code
 ),
@@ -1319,32 +1271,9 @@ shortlist AS (
     SELECT qid, vec_id,
            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adot DESC, vec_id ASC) AS rn
     FROM adc) WHERE rn <= {ADC_SHORTLIST}
-),
-norms AS (SELECT vec_id, CAST(SUM(val * val) AS DECIMAL(38,18)) AS n2 FROM {{comp}} GROUP BY vec_id),
-q AS (SELECT vec_id AS qid, idx, val AS qval FROM {{comp}} WHERE vec_id < {N_QUERIES}),
-dots AS (
-  SELECT /*+ BROADCAST(q) */ s.qid, c.vec_id,
-         CAST(SUM(c.val * q.qval) AS DECIMAL(38,18)) AS dot
-  FROM {{comp}} c
-  JOIN shortlist s ON s.vec_id = c.vec_id
-  JOIN q ON q.qid = s.qid AND q.idx = c.idx
-  GROUP BY s.qid, c.vec_id
-),
-qn AS (SELECT vec_id AS qid, n2 AS qn2 FROM norms),
-ranked AS (
-  SELECT /*+ BROADCAST(qn) */ d.qid, d.vec_id AS neighbor_id,
-         CAST(CAST(dot AS DOUBLE) /
-              (SQRT(CAST(qn.qn2 AS DOUBLE)) * SQRT(CAST(nn.n2 AS DOUBLE)))
-              AS DECIMAL(10,8)) AS cosine
-  FROM dots d JOIN qn ON qn.qid = d.qid JOIN norms nn ON nn.vec_id = d.vec_id
 )
-SELECT qid, rank, neighbor_id, cosine FROM (
-  SELECT qid, neighbor_id, cosine,
-         CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-              AS BIGINT) AS rank
-  FROM ranked) WHERE rank <= {k}
-""",
-        comp=comp,
+{_cosine_sql(comp, "shortlist", k)}
+"""
     )
 
 
@@ -1876,39 +1805,42 @@ def sim_ivf_pq_search(spark: SparkSession, index_dir: str) -> DataFrame:
     ADC_SHORTLIST survivors. Returns the same shape as the in-query
     sim_ivf_pq_topk and must agree with it row for row (tested)."""
     comp = spark.read.parquet(f"{index_dir}/components")
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    q = comp.filter(F.col("vec_id") < N_QUERIES)
-    qd2 = _ivf_cell_d2(q, cent)
-    probes = _ivf_probes(qd2)
-    probe_rows = probes.collect()  # N_QUERIES x N_PROBE — driver-sized
-    cells = sorted({r["cell"] for r in probe_rows})
-    codes = spark.read.parquet(f"{index_dir}/codes").filter(
-        F.col("cell").isin(cells)  # static partition pruning
+    d2 = _ivf_d2_sql(
+        temp_view_for(comp.filter(F.col("vec_id") < N_QUERIES), "ivf_vectors"),
+        temp_view_for(spark.read.parquet(f"{index_dir}/centroids"), "ivf_cent"),
     )
-    probes_df = spark.createDataFrame(probe_rows, "qid BIGINT, cell BIGINT")
-    cb = spark.read.parquet(f"{index_dir}/codebook")
-    # Round 14 (the _ivf_pq_ranked pattern, guide §7.3): the ADC-score +
-    # rescore tail builds as ONE spark.sql string instead of the py4j
-    # helper walk — same broadcast hints (probes_df, table, q, qn), same
-    # left-deep join order, same windows/tie-breaks; the probe collect
-    # and the STATIC cell partition filter above are untouched (the
-    # static filter is what the plan audit asserts prunes unprobed
-    # cells). Rows proven identical to the pre-change build and pinned
-    # equal to sim_ivf_pq_topk in test_sim_dense.py.
+    probe_rows = spark.sql(  # N_QUERIES x N_PROBE — driver-sized
+        _ivf_probes_sql(_sub(_ivf_cells_sql(_sub(d2))))
+    ).collect()
+    cells = sorted({r["cell"] for r in probe_rows})
+    codes = temp_view_for(
+        spark.read.parquet(f"{index_dir}/codes").filter(
+            F.col("cell").isin(cells)  # static partition pruning
+        ),
+        "pq_codes",
+    )
+    probes = temp_view_for(
+        spark.createDataFrame(probe_rows, "qid BIGINT, cell BIGINT"), "ivf_probes"
+    )
+    cb = temp_view_for(spark.read.parquet(f"{index_dir}/codebook"), "pq_codebook")
+    comp = temp_view_for(comp, "comp")
+    # The probe collect and the STATIC cell partition filter above are
+    # what the plan audit asserts prunes unprobed cells; the ADC scan +
+    # rescore tail is pinned equal to sim_ivf_pq_topk in test_sim_dense.py.
     return spark.sql(
         f"""
 WITH qb AS (
   SELECT vec_id AS qid, CAST(idx / {64 // PQ_BLOCKS} AS INT) AS block, idx, val AS qval
-  FROM {{comp}} WHERE vec_id < {N_QUERIES}
+  FROM {comp} WHERE vec_id < {N_QUERIES}
 ),
 tbl AS (
   SELECT qb.qid, cb.block, cb.cid, CAST(SUM(qval * cval) AS DECIMAL(38,18)) AS t
-  FROM qb JOIN {{cb}} cb ON cb.block = qb.block AND cb.idx = qb.idx
+  FROM qb JOIN {cb} cb ON cb.block = qb.block AND cb.idx = qb.idx
   GROUP BY qb.qid, cb.block, cb.cid
 ),
 in_cell AS (
   SELECT /*+ BROADCAST(p) */ p.qid, c.vec_id, c.block, c.code
-  FROM {{codes}} c JOIN {{probes}} p USING (cell)
+  FROM {codes} c JOIN {probes} p USING (cell)
   WHERE c.vec_id != p.qid
 ),
 partials AS (
@@ -1925,35 +1857,9 @@ shortlist AS (
     SELECT qid, vec_id,
            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adot DESC, vec_id ASC) AS rn
     FROM adc) WHERE rn <= {ADC_SHORTLIST}
-),
-norms AS (SELECT vec_id, CAST(SUM(val * val) AS DECIMAL(38,18)) AS n2 FROM {{comp}} GROUP BY vec_id),
-q AS (SELECT vec_id AS qid, idx, val AS qval FROM {{comp}} WHERE vec_id < {N_QUERIES}),
-dots AS (
-  SELECT /*+ BROADCAST(q) */ s.qid, c.vec_id,
-         CAST(SUM(c.val * q.qval) AS DECIMAL(38,18)) AS dot
-  FROM {{comp}} c
-  JOIN shortlist s ON s.vec_id = c.vec_id
-  JOIN q ON q.qid = s.qid AND q.idx = c.idx
-  GROUP BY s.qid, c.vec_id
-),
-qn AS (SELECT vec_id AS qid, n2 AS qn2 FROM norms),
-ranked AS (
-  SELECT /*+ BROADCAST(qn) */ d.qid, d.vec_id AS neighbor_id,
-         CAST(CAST(dot AS DOUBLE) /
-              (SQRT(CAST(qn.qn2 AS DOUBLE)) * SQRT(CAST(nn.n2 AS DOUBLE)))
-              AS DECIMAL(10,8)) AS cosine
-  FROM dots d JOIN qn ON qn.qid = d.qid JOIN norms nn ON nn.vec_id = d.vec_id
 )
-SELECT qid, rank, neighbor_id, cosine FROM (
-  SELECT qid, neighbor_id, cosine,
-         CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-              AS BIGINT) AS rank
-  FROM ranked) WHERE rank <= {ANN_EVAL_K}
-""",
-        comp=comp,
-        cb=cb,
-        codes=codes,
-        probes=probes_df,
+{_cosine_sql(comp, "shortlist", ANN_EVAL_K)}
+"""
     )
 
 
@@ -2212,51 +2118,15 @@ def _mmr_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-decimal dots, the sim_topk kernel) joined back to their raw
     embedding arrays — (qid, neighbor_id, cosine, embedding).
 
-    Round 15 (guide §7.3, the _ivf_pq_ranked pattern): built as ONE
-    spark.sql statement mirroring the former helper walk expression-
-    for-expression (same F.broadcast sites as hints: q, qn; same join
-    order, window tie-break and casts) — plan and values unchanged
-    (exceptAll 0 both ways; oracle green both SFs through
-    sim_mmr_rerank). Neither substituted frame is cached."""
-    comp = _components(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
+    One spark.sql statement over the brute-force cosine fragment."""
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    emb = temp_view_for(load_table(spark, sf_dir, "embeddings"), "embeddings")
     return spark.sql(
         f"""
-WITH norms AS (
-  SELECT vec_id, CAST(SUM(val * val) AS DECIMAL(38,18)) AS n2
-  FROM {{comp}} GROUP BY vec_id
-),
-q AS (SELECT vec_id AS qid, idx, val AS qval FROM {{comp}} WHERE vec_id < {N_QUERIES}),
-dots AS (
-  SELECT /*+ BROADCAST(q) */ q.qid, c.vec_id,
-         CAST(SUM(c.val * q.qval) AS DECIMAL(38,18)) AS dot
-  FROM {{comp}} c JOIN q USING (idx)
-  WHERE c.vec_id != q.qid
-  GROUP BY q.qid, c.vec_id
-),
-ranked AS (
-  SELECT /*+ BROADCAST(qn) */ dots.qid, dots.vec_id AS neighbor_id,
-         CAST(CAST(dot AS DOUBLE)
-              / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE)))
-              AS DECIMAL(10,8)) AS cosine
-  FROM dots
-  JOIN (SELECT vec_id AS qid, n2 FROM norms) qn ON qn.qid = dots.qid
-  JOIN norms nn ON nn.vec_id = dots.vec_id
-),
-shortlist AS (
-  SELECT qid, neighbor_id, cosine FROM (
-    SELECT qid, neighbor_id, cosine,
-           ROW_NUMBER() OVER (PARTITION BY qid
-                              ORDER BY cosine DESC, neighbor_id) AS rnk
-    FROM ranked
-  ) WHERE rnk <= {MMR_SHORTLIST}
-)
 SELECT s.qid, s.neighbor_id, CAST(s.cosine AS DOUBLE) AS cosine, e.embedding
-FROM shortlist s
-JOIN (SELECT vec_id AS neighbor_id, embedding FROM {{emb}}) e USING (neighbor_id)
-""",
-        comp=comp,
-        emb=emb,
+FROM {_sub(_cosine_sql(comp, k=MMR_SHORTLIST))} s
+JOIN (SELECT vec_id AS neighbor_id, embedding FROM {emb}) e USING (neighbor_id)
+"""
     )
 
 
@@ -2878,20 +2748,66 @@ FILTERED_MIN_ELIGIBLE = 12
 FILTERED_BRUTE_MAX = FILTERED_MIN_ELIGIBLE * N_CENTROIDS // N_PROBE
 
 
-def _all_eligible_pairs(assign: DataFrame, mod: int) -> DataFrame:
-    """(qid, vec_id) — every (query, eligible vector) pair, the exact
-    tier's candidate set. Built with a map-side explode of the constant
+def _eligible_pairs_sql(mod: int, assign: str) -> str:
+    """SELECT of every (query, eligible vector) pair over ``assign`` —
+    the exact tier's candidate set. A map-side explode of the constant
     query-id range, NOT a cross join (keeps the global no-cartesian
     plan invariant; a qid with no stored vector scores to nothing
     downstream, so over-generating from the literal range is safe)."""
-    return (
-        assign.filter(F.col("vec_id") % mod == 0)
-        .select("vec_id")
-        .withColumn(
-            "qid", F.explode(F.array(*[F.lit(i) for i in range(N_QUERIES)]))
-        )
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
+    qids = ", ".join(str(i) for i in range(N_QUERIES))
+    return f"""SELECT qid, vec_id FROM (
+    SELECT vec_id, explode(array({qids})) AS qid FROM {assign} WHERE vec_id % {mod} = 0
+  ) WHERE vec_id != qid"""
+
+
+def _adaptive_probes_sql(
+    cells: str,
+    elig: str,
+    n_probe: int = N_PROBE,
+    min_eligible: int = FILTERED_MIN_ELIGIBLE,
+) -> str:
+    """SELECT of (qid, cell) over the query cells ``cells`` (qid, cell,
+    rn): the ``n_probe`` nearest cells per query, EXTENDED while the
+    cumulative eligible count of strictly-nearer cells is below
+    ``min_eligible`` — a cell is probed iff rn ≤ n_probe OR the cells
+    ranked before it hold fewer than min_eligible eligible vectors.
+    Deterministic (rank ties on cid, exact integer counts) and replayed
+    verbatim by the SQL oracles. ``elig`` is (cell, n_elig) — bounded at
+    N_CENTROIDS rows, hence the broadcast."""
+    return f"""SELECT qid, cell FROM (
+  SELECT /*+ BROADCAST(e) */ r.qid, r.cell, r.rn,
+         COALESCE(SUM(COALESCE(e.n_elig, 0)) OVER (
+           PARTITION BY r.qid ORDER BY r.rn
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_prev
+  FROM {cells} r LEFT JOIN {elig} e ON e.cell = r.cell
+) WHERE rn <= {n_probe} OR cum_prev < {min_eligible}"""
+
+
+def _filtered_cand_sql(mod: int, n_elig_total: int, comp: str) -> str:
+    """SELECT of (qid, vec_id): the eligible (vec_id % mod = 0) IVF
+    candidates over ``comp`` under the two-tier filtered-search policy —
+    every eligible vector when the filter leaves at most
+    FILTERED_BRUTE_MAX of them in total (exact tier), else the eligible
+    vectors of the ADAPTIVELY probed cells (the filter runs inside the
+    probe, and the probe list grows per query where the filter starves
+    the nearest cells)."""
+    assign, cells = _ivf_stages(comp)
+    if n_elig_total <= FILTERED_BRUTE_MAX:
+        return _eligible_pairs_sql(mod, assign)
+    elig = _sub(
+        f"SELECT cell, COUNT(*) AS n_elig FROM {assign} "
+        f"WHERE vec_id % {mod} = 0 GROUP BY cell"
+    )
+    return f"""SELECT /*+ BROADCAST(p) */ p.qid, a.vec_id
+FROM {assign} a JOIN {_sub(_adaptive_probes_sql(cells, elig))} p ON p.cell = a.cell
+WHERE a.vec_id % {mod} = 0 AND a.vec_id != p.qid"""
+
+
+def _all_eligible_pairs(assign: DataFrame, mod: int) -> DataFrame:
+    """(qid, vec_id) — every (query, eligible vector) pair of an
+    assignment frame (see :func:`_eligible_pairs_sql`)."""
+    return assign.sparkSession.sql(
+        _eligible_pairs_sql(mod, temp_view_for(assign, "ivf_assign"))
     )
 
 
@@ -2901,51 +2817,20 @@ def _ivf_probes_adaptive(
     n_probe: int = N_PROBE,
     min_eligible: int = FILTERED_MIN_ELIGIBLE,
 ) -> DataFrame:
-    """(qid, cell) — the ``n_probe`` nearest cells per query, EXTENDED
-    while the cumulative eligible count of strictly-nearer cells is
-    below ``min_eligible``: a cell is probed iff rn ≤ n_probe OR the
-    cells ranked before it hold fewer than min_eligible eligible
-    vectors. Deterministic (rank ties on cid, exact integer counts) and
-    replayed verbatim by the SQL oracles. ``elig_cells`` is
-    (cell, n_elig) — bounded at N_CENTROIDS rows, hence the broadcast
-    (sketch/grid-metadata hint class)."""
-    ranked = (
-        d2.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("rn", F.row_number().over(_w_assign()))
-        .select(F.col("vec_id").alias("qid"), F.col("cid").alias("cell"), "rn")
-    )
-    w_prev = (
-        Window.partitionBy("qid")
-        .orderBy("rn")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        ranked.join(F.broadcast(elig_cells), "cell", "left")
-        .withColumn(
-            "cum_prev",
-            F.coalesce(
-                F.sum(F.coalesce(F.col("n_elig"), F.lit(0))).over(w_prev), F.lit(0)
-            ),
-        )
-        .filter(
-            (F.col("rn") <= n_probe) | (F.col("cum_prev") < min_eligible)
-        )
-        .select("qid", "cell")
-    )
+    """(qid, cell) — the adaptive probe list of :func:`_adaptive_probes_sql`
+    over a (vec_id, cid, d2) frame and a (cell, n_elig) frame."""
+    cells = _sub(_ivf_cells_sql(temp_view_for(d2, "ivf_d2")))
+    elig = temp_view_for(elig_cells, "ivf_elig")
+    return d2.sparkSession.sql(_adaptive_probes_sql(cells, elig, n_probe, min_eligible))
 
 
 def _ivf_candidates_filtered(
     comp: DataFrame, mod: int, n_elig_total: int | None = None
 ) -> DataFrame:
     """(qid, vec_id) — eligible candidates (vec_id % mod = 0) under the
-    two-tier filtered-search policy: if the filter leaves at most
-    FILTERED_BRUTE_MAX eligible vectors in total, EVERY eligible vector
-    is a candidate (exact tier); otherwise candidates come from the
-    ADAPTIVELY probed cells (the filter runs inside the probe, and the
-    probe list grows per query where the filter starves the nearest
-    cells — see _ivf_probes_adaptive). The tier choice is an exact
-    integer count (bounded 1-row collect), so the SQL oracles replay
-    the same branch with the same condition.
+    two-tier filtered-search policy of :func:`_filtered_cand_sql`. The
+    tier choice is an exact integer count (bounded 1-row result), so the
+    SQL oracles replay the same branch with the same condition.
 
     ``n_elig_total`` lets the caller supply that count from a cheaper
     but PROVABLY identical plan (round 14, guide §1.2 "don't compute
@@ -2956,24 +2841,14 @@ def _ivf_candidates_filtered(
     centroid join, no window. sim_filtered_ann passes the scan-side
     count; equality of the two counts is pinned in
     tests/test_round14_ops.py."""
-    d2 = _ivf_cell_d2(comp, _ivf_centroids(comp))
-    assign = _ivf_assign(d2)
+    spark = comp.sparkSession
+    comp = temp_view_for(comp, "comp")
     if n_elig_total is None:
-        n_elig_total = assign.filter(F.col("vec_id") % mod == 0).count()
-    if n_elig_total <= FILTERED_BRUTE_MAX:
-        return _all_eligible_pairs(assign, mod)
-    elig = (
-        assign.filter(F.col("vec_id") % mod == 0)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n_elig"))
-    )
-    probes = _ivf_probes_adaptive(d2, elig)
-    return (
-        assign.filter(F.col("vec_id") % mod == 0)
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-    )
+        assign, _ = _ivf_stages(comp)
+        n_elig_total = spark.sql(
+            f"SELECT COUNT(*) FROM {assign} WHERE vec_id % {mod} = 0"
+        ).first()[0]
+    return spark.sql(_filtered_cand_sql(mod, n_elig_total, comp))
 
 
 def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3014,99 +2889,14 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     a deployment on such a corpus must revert to counting the assign
     frame. The equality is pinned across all four selectivity rungs in
     tests/test_round14_ops.py::TestFilteredTierCountShortcut."""
-    comp = _components(spark, sf_dir)
     n_elig = (
         load_table(spark, sf_dir, "embeddings")
         .filter((F.col("vec_id") % FILTER_MOD == 0) & (F.size("embedding") > 0))
         .count()
     )
-    if n_elig <= FILTERED_BRUTE_MAX:
-        # exact tier: the policy's rare small-shard branch — keep the
-        # helper chain (the Python branch runs only the winning tier,
-        # see _ivf_candidates_filtered)
-        return _rank_candidates(
-            comp, _ivf_candidates_filtered(comp, FILTER_MOD, n_elig_total=n_elig), k=3
-        )
-    # Round 15 (guide §7.3, the _ivf_pq_ranked pattern): the ANN tier —
-    # the branch every non-degenerate shard takes — builds as ONE
-    # spark.sql statement mirroring _ivf_candidates_filtered +
-    # _rank_candidates expression-for-expression (same broadcast hints
-    # at the F.broadcast sites: cent, elig, probes, q, qn; same window
-    # frames and tie-breaks), so plan and values are unchanged
-    # (plan counts identical: 21 Exchange / 18 BHJ / 5 Window / 20
-    # scans before and after; exceptAll 0 both ways; oracle green at
-    # sf0.001/sf0.01/sf0.1). ABAB (6 rounds): construct 0.749 → 0.330 s
-    # under a loaded session — the exec plan is unchanged, so the
-    # construct delta is the whole effect.
-    return spark.sql(
-        f"""
-WITH cent AS (SELECT vec_id AS cid, idx, val AS cval FROM {{comp}} WHERE vec_id < {N_CENTROIDS}),
-d2 AS (
-  SELECT /*+ BROADCAST(cent) */ vec_id, cid,
-         CAST(SUM((val - cval) * (val - cval)) AS DECIMAL(38,18)) AS d2
-  FROM {{comp}} JOIN cent USING (idx) GROUP BY vec_id, cid
-),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cid AS cell,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-    FROM d2) WHERE rn = 1
-),
-elig AS (
-  SELECT cell, COUNT(*) AS n_elig FROM assign
-  WHERE vec_id % {FILTER_MOD} = 0 GROUP BY cell
-),
-rankedp AS (
-  SELECT vec_id AS qid, cid AS cell, rn FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-    FROM d2 WHERE vec_id < {N_QUERIES})
-),
-probes AS (
-  SELECT qid, cell FROM (
-    SELECT /*+ BROADCAST(e) */ r.qid, r.cell, r.rn,
-           COALESCE(SUM(COALESCE(e.n_elig, 0)) OVER (
-             PARTITION BY r.qid ORDER BY r.rn
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_prev
-    FROM rankedp r LEFT JOIN elig e ON e.cell = r.cell
-  ) WHERE rn <= {N_PROBE} OR cum_prev < {FILTERED_MIN_ELIGIBLE}
-),
-cand AS (
-  SELECT /*+ BROADCAST(p) */ p.qid, a.vec_id
-  FROM assign a JOIN probes p ON p.cell = a.cell
-  WHERE a.vec_id % {FILTER_MOD} = 0 AND a.vec_id != p.qid
-),
-norms AS (
-  SELECT vec_id, CAST(SUM(val * val) AS DECIMAL(38,18)) AS n2
-  FROM {{comp}} GROUP BY vec_id
-),
-q AS (SELECT vec_id AS qid, idx, val AS qval FROM {{comp}} WHERE vec_id < {N_QUERIES}),
-dots AS (
-  SELECT /*+ BROADCAST(q) */ c.qid, c.vec_id,
-         CAST(SUM(comp.val * q.qval) AS DECIMAL(38,18)) AS dot
-  FROM {{comp}} comp JOIN cand c ON c.vec_id = comp.vec_id
-  JOIN q ON q.qid = c.qid AND q.idx = comp.idx
-  GROUP BY c.qid, c.vec_id
-),
-ranked AS (
-  SELECT /*+ BROADCAST(qn) */ dots.qid, dots.vec_id AS neighbor_id,
-         CAST(CAST(dot AS DOUBLE)
-              / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE)))
-              AS DECIMAL(10,8)) AS cosine
-  FROM dots
-  JOIN (SELECT vec_id AS qid, n2 FROM norms) qn ON qn.qid = dots.qid
-  JOIN norms nn ON nn.vec_id = dots.vec_id
-)
-SELECT qid, rank, neighbor_id, cosine FROM (
-  SELECT qid, neighbor_id, cosine,
-         CAST(ROW_NUMBER() OVER (PARTITION BY qid
-                                 ORDER BY cosine DESC, neighbor_id)
-              AS BIGINT) AS rank
-  FROM ranked
-) WHERE rank <= 3
-""",
-        comp=comp,
-    )
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    cand = _sub(_filtered_cand_sql(FILTER_MOD, n_elig, comp))
+    return spark.sql(_cosine_sql(comp, cand, 3))
 
 
 SIM_FILTERED_ANN_ORACLE = _COMP_CTES + f""",
@@ -3238,6 +3028,7 @@ def sim_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m in FILTERED_RECALL_MODS
         if tier[f"t{m}"] <= FILTERED_BRUTE_MAX
     ]
+    n_exact = len(cand_frames)
     if adaptive:
         elig_mat = assign.groupBy("cell").agg(
             *[
@@ -3245,11 +3036,7 @@ def sim_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for m in adaptive
             ]
         )
-        ranked = (
-            d2.filter(F.col("vec_id") < N_QUERIES)
-            .withColumn("rn", F.row_number().over(_w_assign()))
-            .select(F.col("vec_id").alias("qid"), F.col("cid").alias("cell"), "rn")
-        )
+        ranked = spark.sql(_ivf_cells_sql(temp_view_for(d2, "ivf_d2")))
         w_prev = (
             Window.partitionBy("qid")
             .orderBy("rn")
@@ -3278,8 +3065,11 @@ def sim_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("vec_id") != F.col("qid"))
                 .select("qid", "vec_id")
             )
+    # adaptive frames first: with an exact-tier frame leading the union,
+    # Spark 4.1.2 drops the union's vec_id hash partitioning and the
+    # distinct shuffles the candidates once more (measured at sf0.01)
     union_cand = None
-    for cf in cand_frames:
+    for cf in cand_frames[n_exact:] + cand_frames[:n_exact]:
         union_cand = cf if union_cand is None else union_cand.unionByName(cf)
     union_cand = union_cand.distinct()
     nb_cell = assign.select(F.col("vec_id").alias("neighbor_id"), "cell")
@@ -3788,8 +3578,10 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row_number window made, with the window's per-round SORT removed
     # (4 sorts per execution: 3 rounds + final best). ABAB (7 rounds,
     # one JVM): med 2.708 → 2.591 s; rows identical both ways. Kept
-    # LOCAL to this 4-pass query: the single-pass IVF consumers keep
-    # _ivf_assign's window so their SQL-built twins stay mirrors.
+    # LOCAL to this 4-pass query: in the single-pass IVF consumers
+    # (_ivf_assign_sql) the same argmin plans as SortAggregate + Sort;
+    # on 5 IVF keys the exchange and sort counts stayed the same and
+    # only 1-2 Window nodes went away — not a clear win there.
     for _ in range(KMEANS_ITERS):
         d2 = _ivf_cell_d2(comp, cents)
         assign = (
@@ -3850,15 +3642,10 @@ def _kmeans_probes(spark: SparkSession, sf_dir: str) -> "dict[str, DataFrame]":
     cents = comp.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cid"), "idx", F.col("val").alias("cval")
     )
-    d2 = _ivf_cell_d2(comp, cents)
-    assign = (
-        d2.withColumn("rn", F.row_number().over(_w_assign()))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
+    assign = _ivf_assign(_ivf_cell_d2(comp, cents))
     means = (
         assign.join(comp, "vec_id")
-        .groupBy("cid", "idx")
+        .groupBy("cell", "idx")
         .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
     )
     return {"kmeans_round_update": means}

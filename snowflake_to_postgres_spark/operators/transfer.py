@@ -733,10 +733,10 @@ def delete_keys_partitioned(
     try:
         survivors.repartition(partition_col).write.mode("overwrite").parquet(staging)
         staged = spark.read.parquet(staging)
-        n = staged.count()
-        kept_parts = {
-            r[0] for r in staged.select(partition_col).distinct().collect()
-        }
+        # one job gives both the survivor count and the surviving partitions
+        part_counts = staged.groupBy(partition_col).count().collect()
+        n = sum(r["count"] for r in part_counts)
+        kept_parts = {r[0] for r in part_counts}
         # partitions where every row died: dynamic overwrite writes no
         # data for them — drop their directories explicitly
         for v in parts:

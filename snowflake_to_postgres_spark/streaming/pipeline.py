@@ -190,17 +190,6 @@ def run_windowed_counts_available_now(
     q.awaitTermination()
 
 
-def incremental_transfer(
-    spark: SparkSession, src_dir: str, checkpoint_dir: str, out_dir: str
-) -> None:
-    """Incremental file-to-file transfer (the reference's `transfer` verb
-    in streaming form): new files landing in src_dir flow to out_dir on
-    each trigger; the checkpoint replaces checkpoint.py's row offsets."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = spark.readStream.schema(schema).format("parquet").load(src_dir)
-    run_available_now(stream, checkpoint_dir, out_dir)
-
-
 def session_window_agg(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -703,15 +692,13 @@ def run_quarantine_split_available_now(
 
     def handle(batch: DataFrame, bid: int) -> None:
         batch.persist()
-        spark_b = batch.sparkSession
-        prior = spark_b.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         try:
-            spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             (
                 batch.filter(F.col("_route") == "good")
                 .drop("_route")
                 .withColumn("_batch", F.lit(bid))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch")
                 .parquet(good_dir)
             )
@@ -724,11 +711,11 @@ def run_quarantine_split_available_now(
                 )
                 .withColumn("_batch", F.lit(bid))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch")
                 .parquet(dlq_dir)
             )
         finally:
-            spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
             batch.unpersist()
 
     (

@@ -9,25 +9,27 @@ same frame) recomputes from source. Measured in Spark 4.1.2:
 
 * substitution of the cached frame itself  → plan has 0 InMemoryTableScan
   AND subsequent DataFrame-API plans lose theirs too (entry dropped);
+* substitution of an UNCACHED frame whose plan equals a cached one
+  drops that other frame's entry the same way (the match is by plan,
+  not by object);
 * a TEMP VIEW over the cached frame, referenced by name in the same SQL
-  string → InMemoryTableScan present, entry intact;
-* substitution of UNCACHED frames in the same statement is harmless.
+  string → InMemoryTableScan present, entry intact.
 
-So the rule the engine follows everywhere (pinned by
-tests/test_sql_cache_audit.py): frames that are cached/persisted — or
-that must READ a cached frame inside the SQL — enter SQL builds through
-:func:`temp_view_for`; only cache-free subtrees are passed as
+So the rule the engine follows (pinned by tests/test_sql_cache_audit.py):
+frames that are cached/persisted, that must READ a cached frame inside
+the SQL, or whose plan a cached frame may share enter SQL builds through
+:func:`temp_view_for`; only frames no cache can match are passed as
 ``spark.sql`` parameters.
 
 Views are registered under a per-call unique name (a process-global
 counter) so concurrent builders can never replace each other's view
-between registration and analysis. ``spark.sql`` analyzes eagerly, and
-cache substitution happens per-execution against the CacheManager (not
-at name-resolution time), so the view could in principle be dropped
-right after the build — but the bounded number of registrations per
-session (a few per query construction) is not worth the extra py4j
-round trip; names are left registered and are replaced wholesale only
-if the counter ever wrapped (it cannot: Python ints are unbounded).
+between registration and analysis. They are never dropped: dropping a
+view uncaches every cache entry whose plan equals the view's, so
+``spark.catalog.dropTempView`` on a view over a cached frame takes the
+InMemoryTableScan out of every later plan of that frame, the DataFrame-
+API ones included (measured on Spark 4.1.2; parameter substitution drops
+its internal view and poisons caches this way). The cost is a few view
+names per query construction.
 """
 
 from __future__ import annotations

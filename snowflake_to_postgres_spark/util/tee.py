@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import io
 import re
-import sys
 
 _ANSI = re.compile(r"\x1b\[[0-9;]*[a-zA-Z]")
 
@@ -26,10 +25,3 @@ class TeeWriter(io.TextIOBase):
 
     def close(self) -> None:
         self.log.close()
-
-
-def tee_stdout(logfile_path: str) -> TeeWriter:
-    """Install and return a stdout tee; caller restores ``sys.stdout``."""
-    w = TeeWriter(sys.stdout, logfile_path)
-    sys.stdout = w
-    return w

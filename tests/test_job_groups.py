@@ -1,7 +1,7 @@
 """Spark job accounting per operator call: every job a call submits,
 including those from its worker threads, lands in the caller's job
-group, and the job counts of the merge and the row-sample check stay
-pinned."""
+group, and the job counts of the merge, the keyed delete and the
+row-sample check stay pinned."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 
 from snowflake_to_postgres_spark.operators.transfer import (
     TransferEngine,
+    delete_keys_partitioned,
     merge_upsert_partitioned,
     transfer_partitioned,
 )
@@ -75,6 +76,32 @@ def test_merge_job_count_pinned(spark, sf_dir, tmp_path):
         lambda: merge_upsert_partitioned(spark, out, updates, ["o_orderkey"]),
     )
     assert len(jobs) == 10
+
+
+def test_delete_keys_job_count_pinned(spark, sf_dir, tmp_path):
+    """The survivor count and the surviving partitions come from one
+    per-partition count over the staged copy: 19 jobs. A separate
+    count() plus a distinct-partition collect took 21."""
+    out = str(tmp_path / "orders_pt")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
+    doomed_keys = [
+        r[0]
+        for r in spark.read.parquet(out)
+        .filter(F.col("_pt").isin("1997-03", "1997-04"))
+        .select("o_orderkey")
+        .orderBy("o_orderkey")
+        .limit(5)
+        .collect()
+    ]
+    doomed = spark.createDataFrame([(k,) for k in doomed_keys], "o_orderkey bigint")
+    stats = []
+    jobs = _group_jobs(
+        spark,
+        "delete_keys_job_count",
+        lambda: stats.append(delete_keys_partitioned(spark, out, doomed, ["o_orderkey"])),
+    )
+    assert stats[0].rows > 0
+    assert len(jobs) == 19
 
 
 def test_row_sample_job_count_pinned(spark, sf_dir):

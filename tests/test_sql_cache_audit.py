@@ -26,8 +26,18 @@ from pyspark.sql import functions as F
 
 from snowflake_to_postgres_spark.operators.dedup import dedup_simhash_pairs
 from snowflake_to_postgres_spark.operators.similarity import (
+    _all_eligible_pairs,
+    _components,
+    _ivf_assign,
+    _ivf_cell_d2,
+    _ivf_centroids,
+    _rank_candidates,
+    sim_filtered_ann,
     sim_ivf_pq_topk,
+    sim_ivf_topk,
     sim_mmr_ann,
+    sim_mmr_rerank,
+    sim_rp_lsh_topk,
 )
 from snowflake_to_postgres_spark.operators.text import (
     tx_bigram_lm_score,
@@ -37,6 +47,7 @@ from snowflake_to_postgres_spark.operators.text import (
 from snowflake_to_postgres_spark.operators.validation import (
     val_referential_integrity,
 )
+from snowflake_to_postgres_spark.util.sqlview import temp_view_for
 
 
 def _plan(df) -> str:
@@ -62,6 +73,17 @@ SQL_BUILT = [
     (sim_ivf_pq_topk, 0),
     (sim_mmr_ann, 0),
     (dedup_simhash_pairs, 0),
+    (sim_rp_lsh_topk, 0),
+    (sim_filtered_ann, 0),
+    (sim_mmr_rerank, 0),
+    (sim_ivf_topk, 0),
+]
+
+#: Similarity builds whose components frame must not unregister a
+#: plan-equal persisted components frame (emb_matryoshka_recall
+#: persists one for the lifetime of its result).
+COMPONENT_BUILDS = [
+    sim_rp_lsh_topk, sim_filtered_ann, sim_mmr_rerank, sim_ivf_topk, sim_ivf_pq_topk,
 ]
 
 
@@ -93,6 +115,62 @@ class TestSqlBuildsPreserveCaches:
             "cached frame is still passed as a spark.sql parameter"
         )
         sentinel.unpersist()
+
+    def test_rank_candidates_reads_persisted_candidates_from_cache(self, spark, sf_dir):
+        """Candidates derived from a persisted frame (sim_filtered_recall
+        builds them from its persisted IVF assignment) enter the rescore
+        through a temp view: the rescore plan reads the cache, and the
+        assignment and a foreign sentinel keep their entries."""
+        sentinel = spark.range(100).select((F.col("id") % 3).alias("k")).distinct().cache()
+        comp = _components(spark, sf_dir)
+        assign = _ivf_assign(_ivf_cell_d2(comp, _ivf_centroids(comp))).persist()
+        try:
+            assert _imts(sentinel.filter("k >= 0")) == 1
+            ranked = _rank_candidates(comp, _all_eligible_pairs(assign, 2), k=3)
+            assert _imts(ranked) >= 1
+            assert _imts(assign.filter("cell >= 0")) >= 1
+            assert _imts(sentinel.filter("k >= 0")) == 1
+        finally:
+            assign.unpersist()
+            sentinel.unpersist()
+
+    def test_plan_equal_components_cache_survives_similarity_builds(self, spark, sf_dir):
+        """Substitution poisons by plan, not by object: a build that
+        passed its own (uncached) components frame as a spark.sql
+        parameter would unregister any persisted components frame of the
+        same corpus. The similarity builds pass it through a temp view."""
+        persisted = _components(spark, sf_dir).persist()
+        try:
+            assert _imts(persisted.groupBy("vec_id").count()) >= 1
+            for fn in COMPONENT_BUILDS:
+                _plan(fn(spark, sf_dir))
+                assert _imts(persisted.groupBy("vec_id").count()) >= 1, fn.__name__
+        finally:
+            persisted.unpersist()
+
+    def test_dropping_a_view_uncaches_its_frame(self, spark):
+        """Why temp_view_for never drops its views: on Spark 4.1.2
+        dropping a view over a cached frame unregisters the frame's
+        cache entry, so re-planned builds and later DataFrame-API
+        lookups of the frame recompute it. If a Spark upgrade changes
+        this, this test fails and the views may be dropped after
+        analysis."""
+        agg = (
+            spark.range(1000)
+            .select((F.col("id") % 5).alias("k"))
+            .groupBy("k")
+            .agg(F.count("*").alias("c"))
+            .cache()
+        )
+        try:
+            view = temp_view_for(agg, "drop_probe")
+            q = spark.sql(f"SELECT * FROM {view} WHERE c > 0")
+            assert _imts(q) == 1
+            spark.catalog.dropTempView(view)
+            assert _imts(q.select("*")) == 0
+            assert _imts(agg.filter("c > 0")) == 0
+        finally:
+            agg.unpersist()
 
     def test_substitution_poisoning_is_real(self, spark):
         """Pin the Spark behavior the audit exists for: substituting a

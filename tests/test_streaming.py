@@ -564,9 +564,13 @@ def test_quarantine_split_routes_and_replays(spark, sf_dir, tmp_path):
     _sh.move(_glob.glob(stage + "/part-*.parquet")[0], str(src / "events.parquet"))
 
     good_dir, dlq_dir = str(tmp_path / "good"), str(tmp_path / "dlq")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
     run_quarantine_split_available_now(
         spark, str(src), str(tmp_path / "ckpt"), good_dir, dlq_dir
     )
+    # the sinks ask for dynamic overwrite per write; the session keeps its mode
+    assert spark.conf.get(mode_key) == mode_before
 
     good = spark.read.parquet(good_dir)
     dlq = spark.read.parquet(dlq_dir)
