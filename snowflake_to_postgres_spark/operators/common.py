@@ -18,7 +18,7 @@ every expression must produce *bit-identical* results in Spark and DuckDB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -37,3 +37,15 @@ def md5_bucket(col: str | Column, prefix: str) -> Column:
     md5(key) starts with ``prefix`` (1 hex char ≈ 1/16 of rows)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(c.cast("string")).startswith(prefix)
+
+
+def partition_exchange(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """Hash exchange on ``cols`` into one partition per core, for the
+    write right before ``partitionBy(*cols)``: each partition value
+    still lands in exactly one task, so one file per value.
+
+    The count is fixed on purpose. A bare ``repartition(col)`` is
+    coalescible, and AQE folds any input under its minimum partition
+    size (1 MB) into one task, which then writes every partition
+    directory alone while the other cores idle."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)

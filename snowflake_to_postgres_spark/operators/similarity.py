@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from snowflake_to_postgres_spark.operators.common import partition_exchange
 from snowflake_to_postgres_spark.registry import QuerySpec
 from snowflake_to_postgres_spark.sources import load_table
 from snowflake_to_postgres_spark.util.sqlview import temp_view_for
@@ -1784,8 +1785,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
         F.col("vec_id").alias("cid"), "block", "idx", F.col("val").alias("cval")
     )
     (
-        codes.join(assign, "vec_id")
-        .repartition("cell")
+        partition_exchange(codes.join(assign, "vec_id"), "cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(f"{index_dir}/codes")

@@ -36,6 +36,9 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from snowflake_to_postgres_spark.operators.common import partition_exchange
+from snowflake_to_postgres_spark.operators.validation import detect_date_column
+
 
 @dataclass
 class TransferStats:
@@ -237,25 +240,20 @@ def transfer_partitioned(
     At 100 TB this is the difference between reading one month and
     reading the table; the derived column stays low-cardinality (months,
     not days) so the file count remains sane."""
-    import time as _time
-
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     df = spark.read.parquet(source_path)
-    date_col = None
-    from snowflake_to_postgres_spark.operators.validation import detect_date_column
-
     date_col = partition_col or detect_date_column(df.schema)
-    bucket = F.date_format(F.col(date_col).cast("date"), 
+    bucket = F.date_format(F.col(date_col).cast("date"),
                            "yyyy-MM" if granularity == "month" else "yyyy-MM-dd")
     obs = Observation()
     out = df.withColumn("_pt", bucket).observe(obs, F.count(F.lit(1)).alias("rows"))
     (
-        out.repartition("_pt")  # one shuffle → one file per partition value
+        partition_exchange(out, "_pt")  # one file per partition value
         .write.mode("overwrite")
         .partitionBy("_pt")
         .parquet(target_path)
     )
-    return TransferStats("partitioned", obs.get["rows"], _time.perf_counter() - t0)
+    return TransferStats("partitioned", obs.get["rows"], time.perf_counter() - t0)
 
 
 def _staging_path(target_path: str) -> str:
@@ -365,11 +363,9 @@ def merge_upsert_partitioned(
 
     Updates must already carry ``partition_col`` (use the same bucket
     expression as :func:`transfer_partitioned`)."""
-    import time as _time
-
     from pyspark.sql.window import Window
 
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
     # duplicate keys on the build side of a semi/anti join change nothing
     keys = updates.select(*key_cols)
@@ -404,9 +400,9 @@ def merge_upsert_partitioned(
             .drop("_rn", "_is_update")
         )
     n = _overwrite_partitions(
-        spark, merged.repartition(partition_col), target_path, partition_col
+        spark, partition_exchange(merged, partition_col), target_path, partition_col
     )
-    return TransferStats("merge_upsert", n, _time.perf_counter() - t0)
+    return TransferStats("merge_upsert", n, time.perf_counter() - t0)
 
 
 def list_partition_files(
@@ -462,20 +458,23 @@ def compact_partitions(
       Untouched partitions are never read, never written (file mtimes
       pinned in tests).
     * **Output file count is computed, not guessed**: each compacted
-      partition gets ``ceil(bytes / target_file_bytes)`` files via a
-      per-partition salt — ``pmod(hash(whole row), n_files)`` — so one
-      shuffle task materializes one output file. A plain
-      ``repartition(partition_col)`` would force ONE file per partition
-      regardless of size — wrong for a partition bigger than a sane
-      file target.
+      partition gets at most ``ceil(bytes / target_file_bytes)`` files
+      via a per-partition salt — ``pmod(hash(whole row), n_files)`` —
+      and a hash exchange on (partition, salt) into as many tasks as
+      there are files in total, so one task writes one file per
+      (partition, salt) it holds. Fewer files land where two salts of
+      a partition hash to the same task. The task count is fixed:
+      AQE would coalesce a bare ``repartition(partition_col, "_salt")``
+      of a small input into one task, which writes ONE file per
+      partition regardless of size — wrong for a partition bigger than
+      a sane file target.
     * **Same single write as the merge**: the compacted partitions are
       written straight into the target under dynamic partition
       overwrite, which swaps only them in at job commit.
     """
     import math
-    import time as _time
 
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     stats = list_partition_files(spark, target_path, partition_col)
     offenders = {
         p: max(1, math.ceil(size / target_file_bytes))
@@ -483,7 +482,7 @@ def compact_partitions(
         if n > max_files_per_partition
     }
     if not offenders:
-        return TransferStats("compact", 0, _time.perf_counter() - t0)
+        return TransferStats("compact", 0, time.perf_counter() - t0)
 
     desired = spark.createDataFrame(
         [(p, n) for p, n in sorted(offenders.items())],
@@ -499,15 +498,13 @@ def compact_partitions(
                         F.col("_n_files")).cast("int")
     ).drop("_n_files")
 
-    # one shuffle task per (partition, salt) materializes one output file,
-    # landing exactly the computed file counts
     n = _overwrite_partitions(
         spark,
-        salted.repartition(partition_col, "_salt").drop("_salt"),
+        salted.repartition(sum(offenders.values()), partition_col, "_salt").drop("_salt"),
         target_path,
         partition_col,
     )
-    return TransferStats("compact", n, _time.perf_counter() - t0)
+    return TransferStats("compact", n, time.perf_counter() - t0)
 
 
 def scd2_apply(
@@ -619,9 +616,7 @@ def repair_partitions(
 
     Returns {"checked": n, "stale": [...], "deleted_partitions": [...],
     "rewritten_rows": n}."""
-    import time as _time
-
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     src = spark.read.parquet(source_path)
     tgt = spark.read.parquet(target_path)
 
@@ -673,14 +668,14 @@ def repair_partitions(
     if to_rewrite:
         slice_ = src.filter(_in_parts(partition_col, to_rewrite))
         rewritten = _overwrite_partitions(
-            spark, slice_.repartition(partition_col), target_path, partition_col
+            spark, partition_exchange(slice_, partition_col), target_path, partition_col
         )
     return {
         "checked": checked,
         "stale": sorted(map(str, stale)),
         "deleted_partitions": sorted(map(str, extra)),
         "rewritten_rows": rewritten,
-        "seconds": round(_time.perf_counter() - t0, 3),
+        "seconds": round(time.perf_counter() - t0, 3),
     }
 
 
@@ -713,9 +708,7 @@ def delete_keys_partitioned(
     ``keys`` may be any frame carrying ``key_cols`` (a parquet list of
     user ids, a subquery); it is reduced to distinct keys and broadcast
     when small."""
-    import time as _time
-
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     k = keys.select(*key_cols).distinct()
     idx = (
         spark.read.parquet(target_path)
@@ -724,14 +717,14 @@ def delete_keys_partitioned(
     )
     parts = [r[0] for r in idx.select(partition_col).distinct().collect()]
     if not parts:
-        return TransferStats("delete_keys", 0, _time.perf_counter() - t0)
+        return TransferStats("delete_keys", 0, time.perf_counter() - t0)
 
     tgt = spark.read.parquet(target_path).filter(_in_parts(partition_col, parts))
     survivors = tgt.join(k, key_cols, "left_anti")
 
     staging = _staging_path(target_path)
     try:
-        survivors.repartition(partition_col).write.mode("overwrite").parquet(staging)
+        partition_exchange(survivors, partition_col).write.mode("overwrite").parquet(staging)
         staged = spark.read.parquet(staging)
         # one job gives both the survivor count and the surviving partitions
         part_counts = staged.groupBy(partition_col).count().collect()
@@ -747,8 +740,8 @@ def delete_keys_partitioned(
                 )
         if n > 0:
             _overwrite_partitions(
-                spark, staged.repartition(partition_col), target_path, partition_col
+                spark, partition_exchange(staged, partition_col), target_path, partition_col
             )
     finally:
         _hadoop_delete(spark, staging)
-    return TransferStats("delete_keys", n, _time.perf_counter() - t0)
+    return TransferStats("delete_keys", n, time.perf_counter() - t0)

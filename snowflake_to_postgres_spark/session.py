@@ -7,6 +7,11 @@ Centralizes the session configuration the whole engine assumes:
   UTC so ``TimestampType`` equality is instant-based and deterministic.
 * AQE on — runtime re-planning (skew joins, partition coalescing) is the
   scale story for 100 TB runs; harmless locally.
+* Listing fan-out capped at the shuffle-partition count — a directory
+  with more than 32 children (a hive-partitioned target's partition
+  dirs) is listed by a Spark job, and Spark's default cap of 10000
+  gives every child its own short task; one task per shuffle
+  partition lists them faster.
 * Arrow on — vectorized pandas interchange for the few Pandas-UDF
   operators (the reference disabled Arrow to dodge connector bugs,
   connections.py:56-60; that workaround is obsolete here).
@@ -41,15 +46,17 @@ def get_spark(
     if master:
         builder = builder.master(master)
 
+    parallelism = str(
+        shuffle_partitions
+        or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+    )
     conf = {
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions
-            or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        ),
+        "spark.sql.shuffle.partitions": parallelism,
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism": parallelism,
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # The events fixture stores TIMESTAMP(NANOS) which Spark's parquet
         # reader rejects; read as long and convert in sources.tables.

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from snowflake_to_postgres_spark.operators.common import partition_exchange
 from snowflake_to_postgres_spark.sources import (
     load_table,
     normalize_external_types,
@@ -461,8 +462,7 @@ def _state_rows(events: DataFrame) -> DataFrame:
 def bootstrap_latest_state(events: DataFrame, target_path: str) -> None:
     """Materialize the initial state table (hash-bucket partitioned)."""
     (
-        _state_rows(events)
-        .repartition("_pt")
+        partition_exchange(_state_rows(events), "_pt")
         .write.mode("overwrite")
         .partitionBy("_pt")
         .parquet(target_path)

@@ -1,7 +1,8 @@
 """Spark job accounting per operator call: every job a call submits,
 including those from its worker threads, lands in the caller's job
 group, and the job counts of the merge, the keyed delete and the
-row-sample check stay pinned."""
+row-sample check stay pinned. Hive-partitioned writes and listings
+use one task per core."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pyspark.sql.functions as F
 from snowflake_to_postgres_spark.operators.transfer import (
     TransferEngine,
     delete_keys_partitioned,
+    list_partition_files,
     merge_upsert_partitioned,
     transfer_partitioned,
 )
@@ -30,6 +32,16 @@ def _group_jobs(spark, group: str, fn) -> set[int]:
     # the status tracker is fed by the asynchronous listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _stage_tasks(spark, jobs: set[int]) -> dict[int, int]:
+    """{stage id: task count} over every stage of ``jobs``."""
+    tracker = spark.sparkContext.statusTracker()
+    return {
+        s: tracker.getStageInfo(s).numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    }
 
 
 def _untagged_jobs(spark) -> set[int]:
@@ -55,11 +67,47 @@ def test_transfer_schema_jobs_inherit_the_callers_group(spark, sf_dir, tmp_path)
     assert _untagged_jobs(spark) == untagged
 
 
+def test_partitioned_write_runs_one_task_per_core(spark, sf_dir, tmp_path):
+    """The write stage of transfer_partitioned runs one task per core
+    and still leaves one file per partition directory. A coalescible
+    repartition("_pt") let AQE fold the small input into one task."""
+    out = str(tmp_path / "orders_pt")
+    jobs = _group_jobs(
+        spark,
+        "partitioned_write",
+        lambda: transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate"),
+    )
+    tasks = _stage_tasks(spark, jobs)
+    assert tasks[max(tasks)] == spark.sparkContext.defaultParallelism
+    files = list_partition_files(spark, out)
+    assert len(files) > spark.sparkContext.defaultParallelism
+    assert {n for n, _ in files.values()} == {1}
+
+
+def test_partitioned_listing_runs_at_most_one_task_per_shuffle_partition(
+    spark, sf_dir, tmp_path
+):
+    """Reading a target with more partition directories than shuffle
+    partitions runs no stage wider than the shuffle-partition count:
+    the listing job is capped there instead of one task per directory.
+    (The cap is read from the session, because the CLI tests re-run
+    get_spark in-process and leave the shared session at its default
+    of 32.)"""
+    out = str(tmp_path / "orders_pt")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
+    n_parts = len(list_partition_files(spark, out))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_parts > max(cap, 32)  # 32: the size at which Spark lists by job
+    jobs = _group_jobs(spark, "partitioned_read", lambda: spark.read.parquet(out).count())
+    assert max(_stage_tasks(spark, jobs).values()) <= cap
+
+
 def test_merge_job_count_pinned(spark, sf_dir, tmp_path):
     """One listing of the target, no distinct shuffles on the update
     keys and one dynamic-overwrite write: 10 jobs. Staging the slice
     through a sibling path, listing the target twice and de-duplicating
-    the keys took the same merge to 19."""
+    the keys took the same merge to 19. Each rewritten partition keeps
+    one file."""
     out = str(tmp_path / "orders_pt")
     transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
     upd_path = str(tmp_path / "updates")
@@ -76,6 +124,7 @@ def test_merge_job_count_pinned(spark, sf_dir, tmp_path):
         lambda: merge_upsert_partitioned(spark, out, updates, ["o_orderkey"]),
     )
     assert len(jobs) == 10
+    assert {n for n, _ in list_partition_files(spark, out).values()} == {1}
 
 
 def test_delete_keys_job_count_pinned(spark, sf_dir, tmp_path):

@@ -456,6 +456,33 @@ def test_compact_splits_large_partitions(spark, sf_dir, tmp_path):
     ).count()
 
 
+def test_compact_split_survives_adaptive_coalescing(spark, sf_dir, tmp_path):
+    """With a file target far below every partition's size, compaction
+    really splits: no partition exceeds its computed file count, and
+    the target ends with more files than partitions. The (partition,
+    salt) exchange was coalescible, so AQE folded the small input into
+    one task that wrote one file per partition."""
+    import math
+
+    from snowflake_to_postgres_spark.operators.transfer import (
+        compact_partitions,
+        list_partition_files,
+        transfer_partitioned,
+    )
+
+    out = str(tmp_path / "orders_split")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
+    sizes = list_partition_files(spark, out)
+    target = min(size for _, size in sizes.values()) // 2
+    compact_partitions(spark, out, max_files_per_partition=0, target_file_bytes=target)
+    after = list_partition_files(spark, out)
+    assert after.keys() == sizes.keys()
+    for p, (n, _) in after.items():
+        assert 1 <= n <= math.ceil(sizes[p][1] / target), (p, n)
+    assert sum(n for n, _ in after.values()) > len(after)
+    assert spark.read.parquet(out).count() == load_table(spark, sf_dir, "orders").count()
+
+
 def test_scd2_apply_semantics_and_replay(spark):
     """SCD2: changed keys close out and version; unchanged keys pass
     untouched; new keys insert; replaying the same batch is a no-op."""
