@@ -90,9 +90,8 @@ def test_partitioned_listing_runs_at_most_one_task_per_shuffle_partition(
     """Reading a target with more partition directories than shuffle
     partitions runs no stage wider than the shuffle-partition count:
     the listing job is capped there instead of one task per directory.
-    (The cap is read from the session, because the CLI tests re-run
-    get_spark in-process and leave the shared session at its default
-    of 32.)"""
+    get_spark sets both confs from the same value, so the cap is read
+    back from the session."""
     out = str(tmp_path / "orders_pt")
     transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
     n_parts = len(list_partition_files(spark, out))
