@@ -171,12 +171,11 @@ JOIN {norms} nn ON nn.vec_id = d.vec_id"""
 ) WHERE rank <= {k}"""
 
 
-def _ivf_cent_sql(comp: str) -> str:
-    """SELECT of (cid, idx, cval): the first N_CENTROIDS corpus vectors,
-    a deterministic stand-in for trained centroids."""
-    return (
-        f"SELECT vec_id AS cid, idx, val AS cval FROM {comp} WHERE vec_id < {N_CENTROIDS}"
-    )
+def _ivf_cent_sql(comp: str, n_cent: int) -> str:
+    """SELECT of (cid, idx, cval): the first ``n_cent`` corpus vectors, a
+    deterministic stand-in for trained centroids — N_CENTROIDS for the
+    IVF search paths, a corpus-sized count for semantic dedup."""
+    return f"SELECT vec_id AS cid, idx, val AS cval FROM {comp} WHERE vec_id < {n_cent}"
 
 
 def _ivf_d2_sql(comp: str, cent: str) -> str:
@@ -216,7 +215,7 @@ def _ivf_probes_sql(cells: str) -> str:
 def _ivf_stages(comp: str) -> tuple[str, str]:
     """The assign and cells stages of IVF over ``comp`` (centroids from
     the corpus itself) as subqueries."""
-    d2 = _sub(_ivf_d2_sql(comp, _sub(_ivf_cent_sql(comp))))
+    d2 = _sub(_ivf_d2_sql(comp, _sub(_ivf_cent_sql(comp, N_CENTROIDS))))
     return _sub(_ivf_assign_sql(d2)), _sub(_ivf_cells_sql(d2))
 
 
@@ -286,7 +285,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_centroids(comp: DataFrame) -> DataFrame:
     """(cid, idx, cval) — the deterministic centroid set."""
-    return comp.sparkSession.sql(_ivf_cent_sql(temp_view_for(comp, "comp")))
+    return comp.sparkSession.sql(_ivf_cent_sql(temp_view_for(comp, "comp"), N_CENTROIDS))
 
 
 def _ivf_cell_d2(vectors: DataFrame, cent: DataFrame) -> DataFrame:
@@ -296,27 +295,17 @@ def _ivf_cell_d2(vectors: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _w_assign():
-    # built lazily: a module-level Window spec would need an active session
-    return Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cid"))
-
-
 def _ivf_assign(d2: DataFrame) -> DataFrame:
     """(vec_id, cell) — nearest-centroid cell per vector."""
     return d2.sparkSession.sql(_ivf_assign_sql(temp_view_for(d2, "ivf_d2")))
 
 
-def _ivf_probes(d2: DataFrame) -> DataFrame:
-    """(qid, cell) — the N_PROBE nearest cells per query vector."""
-    cells = _sub(_ivf_cells_sql(temp_view_for(d2, "ivf_d2")))
-    return d2.sparkSession.sql(_ivf_probes_sql(cells))
-
-
 def _ivf_candidates(comp: DataFrame) -> DataFrame:
     """(qid, vec_id) — IVF cell pruning: every vector assigned to its
     nearest centroid cell, candidates = vectors in the N_PROBE cells
-    nearest each query. Shared by sim_ivf_topk (exact in-cell scoring)
-    and sim_ivf_pq_topk (ADC in-cell scoring)."""
+    nearest each query: :func:`_ivf_cand_sql`, the candidates that
+    sim_ivf_topk (exact in-cell scoring) and sim_ivf_pq_topk (ADC
+    in-cell scoring) nest, as a frame."""
     return comp.sparkSession.sql(_ivf_cand_sql(temp_view_for(comp, "comp")))
 
 
@@ -771,39 +760,6 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# Composed from the three existing oracle queries as subqueries (DuckDB
-# allows CTEs inside parenthesized subqueries), so the eval's ground
-# truth and approx sides are the EXACT oracles the individual entries
-# already match.
-SIM_ANN_RECALL_ORACLE = f"""
-WITH bf AS (
-  SELECT qid, neighbor_id FROM ({SIM_TOPK_ORACLE}) WHERE rank <= {ANN_EVAL_K}
-),
-ivf AS (SELECT qid, neighbor_id FROM ({SIM_IVF_ORACLE})),
-rp AS (SELECT qid, neighbor_id FROM ({SIM_RP_LSH_ORACLE})),
-qids AS (SELECT DISTINCT qid FROM bf),
-ivf_hits AS (
-  SELECT bf.qid, COUNT(*) AS hits FROM bf
-  WHERE EXISTS (SELECT 1 FROM ivf WHERE ivf.qid = bf.qid AND ivf.neighbor_id = bf.neighbor_id)
-  GROUP BY bf.qid
-),
-rp_hits AS (
-  SELECT bf.qid, COUNT(*) AS hits FROM bf
-  WHERE EXISTS (SELECT 1 FROM rp WHERE rp.qid = bf.qid AND rp.neighbor_id = bf.neighbor_id)
-  GROUP BY bf.qid
-)
-SELECT 'ivf' AS method, qids.qid,
-       CAST(COALESCE(ivf_hits.hits, 0) AS BIGINT) AS hits,
-       CAST(COALESCE(ivf_hits.hits, 0) AS DOUBLE) / {ANN_EVAL_K} AS recall_at_3
-FROM qids LEFT JOIN ivf_hits ON ivf_hits.qid = qids.qid
-UNION ALL
-SELECT 'rp_lsh' AS method, qids.qid,
-       CAST(COALESCE(rp_hits.hits, 0) AS BIGINT) AS hits,
-       CAST(COALESCE(rp_hits.hits, 0) AS DOUBLE) / {ANN_EVAL_K} AS recall_at_3
-FROM qids LEFT JOIN rp_hits ON rp_hits.qid = qids.qid
-"""
-
-
 SEM_CELLS = 32       # semantic-dedup cell FLOOR (see SEM_TARGET_OCC)
 SEM_TARGET_OCC = 64  # target vectors per cell: cells = max(SEM_CELLS, N/OCC)
 SEMDEDUP_COS = 0.35  # semantic near-dup threshold (fixture within-cell p99 ~ 0.32)
@@ -835,28 +791,12 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = _components(spark, sf_dir)
     n_vecs = load_table(spark, sf_dir, "embeddings").count()
     k_cells = max(SEM_CELLS, n_vecs // SEM_TARGET_OCC)
-    cent = comp.filter(F.col("vec_id") < k_cells).select(
-        F.col("vec_id").alias("cid"), "idx", F.col("val").alias("cval")
-    )
-    d2 = (
-        comp.join(F.broadcast(cent), "idx")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum((F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval")))
-            .cast("decimal(38,18)")
-            .alias("d2")
-        )
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cid"))
+    comp_v = temp_view_for(comp, "comp")
+    d2 = _sub(_ivf_d2_sql(comp_v, _sub(_ivf_cent_sql(comp_v, k_cells))))
     # cached: (vec_id, cell) is two narrow columns — O(N) rows, and it
     # feeds BOTH sides of the within-cell self-join below; uncached the
     # whole assignment subtree (broadcast join + agg + window) runs twice
-    assign = (
-        d2.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cid").alias("cell"))
-        .cache()
-    )
+    assign = spark.sql(_ivf_assign_sql(d2)).cache()
     norms = _norms(comp)
     mem = comp.join(assign, "vec_id")
     # Round 15 (guide §2.4, the simhash in-block pattern): the pairwise
@@ -944,6 +884,99 @@ PQ_BLOCKS = 8        # product quantization: subspaces per vector
 PQ_CODEBOOK = 4      # centroids per subspace (codes 0..3 -> 2 bits/block)
 
 
+# The PQ-ADC kernel, one text per stage in the style of the IVF builders
+# above: codebook (cid, block, idx, cval) → codes (vec_id, block, code)
+# and lookup table (qid, block, cid, t) → ADC scores. Spark's exploded
+# idx is 0-based, so a block is idx / subdim.
+_PQ_BLOCK = f"CAST(idx / {64 // PQ_BLOCKS} AS INT)"
+
+
+def _pq_cb_sql(comp: str) -> str:
+    """SELECT of (cid, block, idx, cval): the subvectors of the first
+    PQ_CODEBOOK corpus vectors, the per-block codebook."""
+    return (
+        f"SELECT vec_id AS cid, {_PQ_BLOCK} AS block, idx, val AS cval "
+        f"FROM {comp} WHERE vec_id < {PQ_CODEBOOK}"
+    )
+
+
+def _pq_codes_sql(comp: str, cb: str) -> str:
+    """SELECT of (vec_id, block, code): every ``comp`` subvector's nearest
+    codebook entry of ``cb`` by exact squared L2, ties on cid."""
+    d2 = f"""SELECT /*+ BROADCAST(cb) */ c.vec_id, c.block, cb.cid,
+       CAST(SUM((c.val - cb.cval) * (c.val - cb.cval)) AS DECIMAL(38,18)) AS d2
+FROM (SELECT vec_id, {_PQ_BLOCK} AS block, idx, val FROM {comp}) c
+JOIN {cb} cb ON cb.block = c.block AND cb.idx = c.idx
+GROUP BY c.vec_id, c.block, cb.cid"""
+    return f"""SELECT vec_id, block, cid AS code FROM (
+  SELECT vec_id, block, cid,
+         ROW_NUMBER() OVER (PARTITION BY vec_id, block ORDER BY d2 ASC, cid ASC) AS rn
+  FROM {_sub(d2)}
+) WHERE rn = 1"""
+
+
+def _pq_lut_sql(comp: str, cb: str) -> str:
+    """SELECT of (qid, block, cid, t): the per-query lookup table, each
+    query subvector's exact dot with every codebook entry of its block.
+    The join keeps ``block`` in its key: an idx-only join plans one more
+    exchange."""
+    q = (
+        f"(SELECT vec_id AS qid, {_PQ_BLOCK} AS block, idx, val AS qval "
+        f"FROM {comp} WHERE vec_id < {N_QUERIES})"
+    )
+    return f"""SELECT q.qid, cb.block, cb.cid, CAST(SUM(qval * cval) AS DECIMAL(38,18)) AS t
+FROM {q} q JOIN {cb} cb ON cb.block = q.block AND cb.idx = q.idx
+GROUP BY q.qid, cb.block, cb.cid"""
+
+
+def _pq_stages(comp: str) -> tuple[str, str]:
+    """The codes and lookup-table stages of PQ over ``comp`` (codebook
+    from the corpus itself) as subqueries."""
+    cb = _sub(_pq_cb_sql(comp))
+    return _sub(_pq_codes_sql(comp, cb)), _sub(_pq_lut_sql(comp, cb))
+
+
+def _pq_adc_sql(
+    codes: str, lut: str, cand: str | None = None, n: int | None = None
+) -> str:
+    """SELECT of (qid, neighbor_id, adot): the ADC score of a corpus
+    vector for a query, the SUM of the lookup-table entries its codes
+    select. Without ``cand`` every vector of ``codes`` is scored against
+    every query (flat ADC); with ``cand`` only the pairs it selects: a
+    (qid, vec_id) candidate relation, or a (qid, cell) probe list over
+    cell-partitioned codes — ``cand`` joins ``codes`` on the columns they
+    share. With ``n``, (qid, rank, neighbor_id, adot) of the n best per
+    query, ties on neighbor_id (the ADC shortlist)."""
+    if cand is None:
+        qid, pairs, on_qid = "lut.qid", f"{codes} c", ""
+    else:
+        qid, pairs = "s.qid", f"{cand} s NATURAL JOIN {codes} c"
+        on_qid = "lut.qid = s.qid AND "
+    scored = f"""SELECT qid, vec_id AS neighbor_id, CAST(SUM(t) AS DECIMAL(38,18)) AS adot
+FROM (
+  SELECT /*+ BROADCAST(lut) */ {qid}, c.vec_id, lut.t
+  FROM {pairs}
+  JOIN {lut} lut ON {on_qid}lut.block = c.block AND lut.cid = c.code
+  WHERE c.vec_id != {qid}
+)
+GROUP BY qid, vec_id"""
+    if n is None:
+        return scored
+    return f"""SELECT qid, rank, neighbor_id, adot FROM (
+  SELECT qid, neighbor_id, adot,
+         CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adot DESC, neighbor_id)
+              AS BIGINT) AS rank
+  FROM {_sub(scored)}
+) WHERE rank <= {n}"""
+
+
+def _pq_shortlist_sql(codes: str, lut: str, cand: str | None = None) -> str:
+    """SELECT of (qid, vec_id): the ADC_SHORTLIST best ADC candidates per
+    query, the candidate relation of the exact rescore."""
+    adc = _sub(_pq_adc_sql(codes, lut, cand, ADC_SHORTLIST))
+    return f"SELECT qid, neighbor_id AS vec_id FROM {adc}"
+
+
 def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (Jegou et al. 2011): split each embedding
     into PQ_BLOCKS contiguous subvectors and encode each as the id of
@@ -963,35 +996,8 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation keyed (vec_id, block, cid) + an argmin window over
     PQ_CODEBOOK rows per key. The corpus shuffles only its exploded
     components once; emitted codes are 3 small ints per block."""
-    comp = _components(spark, sf_dir)
-    return _pq_codes(comp)
-
-
-def _pq_comp(comp: DataFrame) -> DataFrame:
-    return comp.withColumn("block", (F.col("idx") / (64 // PQ_BLOCKS)).cast("int"))
-
-
-def _pq_codes(comp: DataFrame) -> DataFrame:
-    """(vec_id, block, code) — shared by the code emitter and ADC search."""
-    pc = _pq_comp(comp)
-    cb = pc.filter(F.col("vec_id") < PQ_CODEBOOK).select(
-        F.col("vec_id").alias("cid"), "block", "idx", F.col("val").alias("cval")
-    )
-    d2 = (
-        pc.join(F.broadcast(cb), ["block", "idx"])
-        .groupBy("vec_id", "block", "cid")
-        .agg(
-            F.sum((F.col("val") - F.col("cval")) * (F.col("val") - F.col("cval")))
-            .cast("decimal(38,18)")
-            .alias("d2")
-        )
-    )
-    w = Window.partitionBy("vec_id", "block").orderBy(F.col("d2").asc(), F.col("cid"))
-    return (
-        d2.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "block", F.col("cid").alias("code"))
-    )
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    return spark.sql(_pq_codes_sql(comp, _sub(_pq_cb_sql(comp))))
 
 
 # DuckDB's comp CTE is 1-based (generate_series(1, len)); Spark's
@@ -1020,41 +1026,13 @@ SELECT vec_id, block, cid AS code FROM (
 
 def _pq_adc_scores(comp: DataFrame, candidates: DataFrame | None = None) -> DataFrame:
     """(qid, neighbor_id, adot DECIMAL(38,18)) — ADC scores via per-query
-    lookup tables. Without ``candidates``, every corpus vector is scored
-    against every query (flat ADC); with a (qid, vec_id) candidate frame
-    (e.g. IVF cell pruning), only those pairs are scored — the scan
-    touches codes of in-cell vectors only."""
-    codes = _pq_codes(comp)
-    pc = _pq_comp(comp)
-    cb = pc.filter(F.col("vec_id") < PQ_CODEBOOK).select(
-        F.col("vec_id").alias("cid"), "block", "idx", F.col("val").alias("cval")
-    )
-    q = pc.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), "block", "idx", F.col("val").alias("qval")
-    )
-    table = (
-        q.join(cb, ["block", "idx"])
-        .groupBy("qid", "block", "cid")
-        .agg(F.sum(F.col("qval") * F.col("cval")).cast("decimal(38,18)").alias("t"))
-    )
-    if candidates is not None:
-        pairs = candidates.join(codes, "vec_id")
-        partials = pairs.join(
-            F.broadcast(table),
-            (pairs.qid == table.qid)
-            & (pairs.block == table.block)
-            & (pairs.code == table.cid),
-        ).drop(table.qid)
-    else:
-        partials = codes.join(
-            F.broadcast(table),
-            (codes.block == table.block) & (codes.code == table.cid),
-        ).filter(F.col("vec_id") != F.col("qid"))
-    return (
-        partials.groupBy("qid", "vec_id")
-        .agg(F.sum("t").cast("decimal(38,18)").alias("adot"))
-        .select("qid", F.col("vec_id").alias("neighbor_id"), "adot")
-    )
+    lookup tables (:func:`_pq_adc_sql`). Without ``candidates``, every
+    corpus vector is scored against every query (flat ADC); with a
+    (qid, vec_id) candidate frame (e.g. IVF cell pruning), only those
+    pairs are scored — the scan touches codes of in-cell vectors only."""
+    comp_v = temp_view_for(comp, "comp")
+    cand = None if candidates is None else temp_view_for(candidates, "cand")
+    return comp.sparkSession.sql(_pq_adc_sql(*_pq_stages(comp_v), cand))
 
 
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1076,16 +1054,10 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut can land exactly on a .5 tie that Spark (HALF_UP) and DuckDB
     resolve differently — observed at sf0.01 — while the exact value
     needs no rounding at all."""
-    comp = _components(spark, sf_dir)
-    approx = _pq_adc_scores(comp)
-    w = Window.partitionBy("qid").orderBy(F.col("adot").desc(), F.col("neighbor_id"))
-    return (
-        approx.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "qid", "rank", "neighbor_id",
-            F.col("adot").cast("string").alias("approx_dot"),
-        )
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    top = _sub(_pq_adc_sql(*_pq_stages(comp), n=TOP_K))
+    return spark.sql(
+        f"SELECT qid, rank, neighbor_id, CAST(adot AS STRING) AS approx_dot FROM {top}"
     )
 
 
@@ -1144,21 +1116,15 @@ def sim_pq_adc_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented remedy for the raw ADC path's measured recall (0.20
     at sf0.1 with 2-bit codebooks): the compressed scan produces an
     ADC_SHORTLIST-deep candidate list per query, then ONLY those
-    candidates are scored at exact decimal cosine (the same shared
-    ``_rank_candidates`` tail as IVF and RP-LSH).
+    candidates are scored at exact decimal cosine (the same
+    ``_cosine_sql`` rescore as IVF and RP-LSH).
 
     100-TB shape: the expensive exact pass touches
     N_QUERIES x ADC_SHORTLIST vectors no matter how large the corpus —
     the corpus itself is only ever read as codes."""
-    comp = _components(spark, sf_dir)
-    approx = _pq_adc_scores(comp)
-    w = Window.partitionBy("qid").orderBy(F.col("adot").desc(), F.col("neighbor_id"))
-    shortlist = (
-        approx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ADC_SHORTLIST)
-        .select("qid", F.col("neighbor_id").alias("vec_id"))
-    )
-    return _rank_candidates(comp, shortlist, k=ANN_EVAL_K)
+    comp = temp_view_for(_components(spark, sf_dir), "comp")
+    shortlist = _sub(_pq_shortlist_sql(*_pq_stages(comp)))
+    return spark.sql(_cosine_sql(comp, shortlist, ANN_EVAL_K))
 
 
 SIM_PQ_ADC_RESCORE_ORACLE = _COMP_CTES + f""",
@@ -1222,60 +1188,15 @@ SELECT qid, rank, neighbor_id, cosine FROM (
 
 
 def _ivf_pq_ranked(spark: SparkSession, comp: DataFrame, k: int) -> DataFrame:
-    """The composed IVF → PQ-ADC → exact-rescore chain (the
-    sim_ivf_pq_topk pipeline) as ONE ``spark.sql`` string: the IVF and
-    rescore fragments around the PQ-ADC CTEs, which score each IVF
-    candidate from its codes and keep the ADC_SHORTLIST best per query
-    for the exact rescore. One parse + one analysis pass instead of the
-    py4j-bound helper walk (_ivf_candidates → _pq_adc_scores →
-    _rank_candidates: ~0.6 s of round trips per call vs ~0.1 s)."""
+    """(qid, rank, neighbor_id, cosine): the k best per query of the
+    composed IVF → PQ-ADC → exact-rescore chain (the sim_ivf_pq_topk
+    pipeline) as ONE ``spark.sql`` over the shared builders — the IVF
+    candidates (:func:`_ivf_cand_sql`) are ADC-scored from their codes,
+    the ADC_SHORTLIST best per query (:func:`_pq_shortlist_sql`) are
+    rescored at exact cosine (:func:`_cosine_sql`)."""
     comp = temp_view_for(comp, "comp")
-    return spark.sql(
-        f"""
-WITH ivf_cand AS {_sub(_ivf_cand_sql(comp))},
-comp2 AS (
-  SELECT vec_id, idx, val, CAST(idx / {64 // PQ_BLOCKS} AS INT) AS block FROM {comp}
-),
-cb AS (
-  SELECT vec_id AS cid, block, idx, val AS cval FROM comp2 WHERE vec_id < {PQ_CODEBOOK}
-),
-pqd2 AS (
-  SELECT /*+ BROADCAST(cb) */ c.vec_id, c.block, cb.cid,
-         CAST(SUM((c.val - cb.cval) * (c.val - cb.cval)) AS DECIMAL(38,18)) AS d2
-  FROM comp2 c JOIN cb ON cb.block = c.block AND cb.idx = c.idx
-  GROUP BY c.vec_id, c.block, cb.cid
-),
-codes AS (
-  SELECT vec_id, block, cid AS code FROM (
-    SELECT vec_id, block, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, block ORDER BY d2 ASC, cid ASC) AS rn
-    FROM pqd2) WHERE rn = 1
-),
-qq AS (SELECT vec_id AS qid, block, idx, val AS qval FROM comp2 WHERE vec_id < {N_QUERIES}),
-tbl AS (
-  SELECT qq.qid, cb.block, cb.cid, CAST(SUM(qval * cval) AS DECIMAL(38,18)) AS t
-  FROM qq JOIN cb ON cb.block = qq.block AND cb.idx = qq.idx
-  GROUP BY qq.qid, cb.block, cb.cid
-),
-partials AS (
-  SELECT /*+ BROADCAST(tbl) */ ca.qid, ca.vec_id, tbl.t
-  FROM ivf_cand ca
-  JOIN codes ON codes.vec_id = ca.vec_id
-  JOIN tbl ON tbl.qid = ca.qid AND tbl.block = codes.block AND tbl.cid = codes.code
-),
-adc AS (
-  SELECT qid, vec_id, CAST(SUM(t) AS DECIMAL(38,18)) AS adot
-  FROM partials GROUP BY qid, vec_id
-),
-shortlist AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adot DESC, vec_id ASC) AS rn
-    FROM adc) WHERE rn <= {ADC_SHORTLIST}
-)
-{_cosine_sql(comp, "shortlist", k)}
-"""
-    )
+    shortlist = _pq_shortlist_sql(*_pq_stages(comp), _sub(_ivf_cand_sql(comp)))
+    return spark.sql(_cosine_sql(comp, _sub(shortlist), k))
 
 
 def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1290,17 +1211,14 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     code-column rows + ADC_SHORTLIST full vectors — both independent of
     corpus size; the corpus is read once to build codes and cell
     assignments, both of which persist as bucketed artifacts in a real
-    deployment. Each stage reuses the already-oracle-checked building
-    block (_ivf_candidates, _pq_adc_scores, _rank_candidates).
+    deployment. The chain is :func:`_ivf_pq_ranked`: one ``spark.sql``
+    over the IVF, PQ-ADC and exact-cosine builders that every other
+    IVF, ADC and rescore path nests too.
 
     Measured mean recall@3 at sf0.01 (sim_ann_recall): ivf_pq 0.867 —
     vs 0.267 for the flat un-rescored ADC scan (the exact rescore is
     what recovers quality) and 0.933 for exact-scored IVF (the 2-bit
-    PQ compression costs ~0.07 recall for a code-only corpus scan).
-
-    Since round 14 the chain is built by :func:`_ivf_pq_ranked` (one
-    spark.sql parse instead of the py4j-bound helper walk — same plan,
-    same rows; see its docstring)."""
+    PQ compression costs ~0.07 recall for a code-only corpus scan)."""
     return _ivf_pq_ranked(spark, _components(spark, sf_dir), ANN_EVAL_K)
 
 
@@ -1384,10 +1302,11 @@ SELECT qid, rank, neighbor_id, cosine FROM (
 """
 
 
-# Recall gate, final form: covers all FOUR approximate paths (IVF,
-# RP-LSH, flat PQ-ADC, and the composed IVF+PQ+rescore). Redefined here
-# — below the oracles it composes — and SPECS at the bottom of the
-# module picks up this value.
+# Recall gate oracle: all FOUR approximate paths (IVF, RP-LSH, flat
+# PQ-ADC, and the composed IVF+PQ+rescore), composed from their oracles
+# as subqueries (DuckDB allows CTEs inside parenthesized subqueries), so
+# the ground truth and approx sides are the EXACT oracles the individual
+# entries already match. Defined below the oracles it composes.
 SIM_ANN_RECALL_ORACLE = f"""
 WITH bf AS (
   SELECT qid, neighbor_id FROM ({SIM_TOPK_ORACLE}) WHERE rank <= {ANN_EVAL_K}
@@ -1780,10 +1699,9 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     comp = _components(spark, sf_dir)
     cent = _ivf_centroids(comp)
     assign = _ivf_assign(_ivf_cell_d2(comp, cent))
-    codes = _pq_codes(comp)
-    cb = _pq_comp(comp).filter(F.col("vec_id") < PQ_CODEBOOK).select(
-        F.col("vec_id").alias("cid"), "block", "idx", F.col("val").alias("cval")
-    )
+    comp_v = temp_view_for(comp, "comp")
+    cb = spark.sql(_pq_cb_sql(comp_v))
+    codes = spark.sql(_pq_codes_sql(comp_v, _sub(_pq_cb_sql(comp_v))))
     (
         partition_exchange(codes.join(assign, "vec_id"), "cell")
         .write.mode("overwrite")
@@ -1820,47 +1738,18 @@ def sim_ivf_pq_search(spark: SparkSession, index_dir: str) -> DataFrame:
         "pq_codes",
     )
     probes = temp_view_for(
-        spark.createDataFrame(probe_rows, "qid BIGINT, cell BIGINT"), "ivf_probes"
+        F.broadcast(spark.createDataFrame(probe_rows, "qid BIGINT, cell BIGINT")),
+        "ivf_probes",
     )
     cb = temp_view_for(spark.read.parquet(f"{index_dir}/codebook"), "pq_codebook")
     comp = temp_view_for(comp, "comp")
     # The probe collect and the STATIC cell partition filter above are
-    # what the plan audit asserts prunes unprobed cells; the ADC scan +
-    # rescore tail is pinned equal to sim_ivf_pq_topk in test_sim_dense.py.
-    return spark.sql(
-        f"""
-WITH qb AS (
-  SELECT vec_id AS qid, CAST(idx / {64 // PQ_BLOCKS} AS INT) AS block, idx, val AS qval
-  FROM {comp} WHERE vec_id < {N_QUERIES}
-),
-tbl AS (
-  SELECT qb.qid, cb.block, cb.cid, CAST(SUM(qval * cval) AS DECIMAL(38,18)) AS t
-  FROM qb JOIN {cb} cb ON cb.block = qb.block AND cb.idx = qb.idx
-  GROUP BY qb.qid, cb.block, cb.cid
-),
-in_cell AS (
-  SELECT /*+ BROADCAST(p) */ p.qid, c.vec_id, c.block, c.code
-  FROM {codes} c JOIN {probes} p USING (cell)
-  WHERE c.vec_id != p.qid
-),
-partials AS (
-  SELECT /*+ BROADCAST(tbl) */ ic.qid, ic.vec_id, tbl.t
-  FROM in_cell ic
-  JOIN tbl ON tbl.qid = ic.qid AND tbl.block = ic.block AND tbl.cid = ic.code
-),
-adc AS (
-  SELECT qid, vec_id, CAST(SUM(t) AS DECIMAL(38,18)) AS adot
-  FROM partials GROUP BY qid, vec_id
-),
-shortlist AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adot DESC, vec_id ASC) AS rn
-    FROM adc) WHERE rn <= {ADC_SHORTLIST}
-)
-{_cosine_sql(comp, "shortlist", ANN_EVAL_K)}
-"""
-    )
+    # what the plan audit asserts prunes unprobed cells; the probe list
+    # selects the in-cell codes through the ADC builder's candidate join
+    # (shared column: cell). Pinned equal to sim_ivf_pq_topk in
+    # test_sim_dense.py.
+    shortlist = _pq_shortlist_sql(codes, _sub(_pq_lut_sql(comp, cb)), probes)
+    return spark.sql(_cosine_sql(comp, _sub(shortlist), ANN_EVAL_K))
 
 
 #: materialized index fixtures written this session — the write-once
@@ -2223,9 +2112,8 @@ def _mmr_ann_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept to MMR_SHORTLIST and joined back to raw embeddings. Per query
     the candidate work is (probed cells × cell size) code rows, never a
     corpus scan; this is the shortlist provider that survives 100 TB.
-    Since round 14 the chain is built by :func:`_ivf_pq_ranked` (one
-    spark.sql parse instead of the py4j-bound helper walk — same plan,
-    same rows)."""
+    The chain is :func:`_ivf_pq_ranked`, one ``spark.sql`` over the
+    shared IVF, PQ-ADC and exact-cosine builders."""
     ranked = _ivf_pq_ranked(spark, _components(spark, sf_dir), MMR_SHORTLIST)
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
@@ -2472,8 +2360,8 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard dense-retrieval protocol, e.g. RocketQA's denoised hard
     negatives).
 
-    Composition-only: the candidate generation and exact rescore are
-    the already-oracle-checked IVF+PQ building blocks; this adds one
+    Composition-only: the candidates are sim_ivf_pq_topk's chain
+    (:func:`_ivf_pq_ranked`) kept ADC_SHORTLIST deep; this adds one
     per-query top-1 broadcast join and a re-rank of the bounded
     shortlist. Per-query cost remains (probed cells x cell size) codes
     + ADC_SHORTLIST exact scores, corpus-size-independent.
@@ -2482,16 +2370,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     test compares doubles derived from identical decimals in both
     engines, so the excluded band is identical — no boundary-flip
     surface."""
-    comp = _components(spark, sf_dir)
-    candidates = _ivf_candidates(comp)
-    adc = _pq_adc_scores(comp, candidates=candidates)
-    w = Window.partitionBy("qid").orderBy(F.col("adot").desc(), F.col("neighbor_id"))
-    shortlist = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ADC_SHORTLIST)
-        .select("qid", F.col("neighbor_id").alias("vec_id"))
-    )
-    deep = _rank_candidates(comp, shortlist, k=ADC_SHORTLIST)
+    deep = _ivf_pq_ranked(spark, _components(spark, sf_dir), ADC_SHORTLIST)
     top1 = deep.filter(F.col("rank") == 1).select(
         "qid", F.col("cosine").cast("double").alias("_top1")
     )

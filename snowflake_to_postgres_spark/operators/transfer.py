@@ -289,6 +289,16 @@ def _hadoop_delete(spark: SparkSession, path: str) -> None:
     fs.delete(jpath, True)
 
 
+def _drop_partitions(
+    spark: SparkSession, target_path: str, partition_col: str, values: list
+) -> None:
+    """Delete the hive partition directories of ``values`` under
+    ``target_path``; a None value is the __HIVE_DEFAULT_PARTITION__."""
+    for v in values:
+        dirname = "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
+        _hadoop_delete(spark, f"{target_path.rstrip('/')}/{partition_col}={dirname}")
+
+
 def _overwrite_partitions(
     spark: SparkSession, df: DataFrame, target_path: str, partition_col: str
 ) -> int:
@@ -657,11 +667,7 @@ def repair_partitions(
     # converges. Drop their directories through the Hadoop FS API (same
     # filesystem resolution as the write path).
     extra = [r[partition_col] for r in stale_rows if r["s_n"] is None]
-    for v in extra:
-        dirname = "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-        _hadoop_delete(
-            spark, f"{target_path.rstrip('/')}/{partition_col}={dirname}"
-        )
+    _drop_partitions(spark, target_path, partition_col, extra)
     rewritten = 0
     extra_set = set(extra)
     to_rewrite = [v for v in stale if v not in extra_set]
@@ -732,12 +738,9 @@ def delete_keys_partitioned(
         kept_parts = {r[0] for r in part_counts}
         # partitions where every row died: dynamic overwrite writes no
         # data for them — drop their directories explicitly
-        for v in parts:
-            if v not in kept_parts:
-                dirname = "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-                _hadoop_delete(
-                    spark, f"{target_path.rstrip('/')}/{partition_col}={dirname}"
-                )
+        _drop_partitions(
+            spark, target_path, partition_col, [v for v in parts if v not in kept_parts]
+        )
         if n > 0:
             _overwrite_partitions(
                 spark, partition_exchange(staged, partition_col), target_path, partition_col

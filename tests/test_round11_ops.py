@@ -519,7 +519,6 @@ def test_emb_kmeans_partition_and_improvement(spark, sf_dir):
         KMEANS_K,
         _components,
         _ivf_cell_d2,
-        _w_assign,
         emb_kmeans,
     )
 
@@ -533,11 +532,7 @@ def test_emb_kmeans_partition_and_improvement(spark, sf_dir):
     seeds = comp.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cid"), "idx", F.col("val").alias("cval")
     )
-    seed_best = (
-        _ivf_cell_d2(comp, seeds)
-        .withColumn("rn", F.row_number().over(_w_assign()))
-        .filter(F.col("rn") == 1)
-    )
+    seed_best = _ivf_cell_d2(comp, seeds).groupBy("vec_id").agg(F.min("d2").alias("d2"))
     seed_inertia = float(seed_best.agg(F.sum(F.col("d2").cast("double"))).collect()[0][0])
     assert sum(r["inertia"] for r in rows) <= seed_inertia + 1e-6
 

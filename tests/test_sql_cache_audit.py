@@ -32,11 +32,16 @@ from snowflake_to_postgres_spark.operators.similarity import (
     _ivf_cell_d2,
     _ivf_centroids,
     _rank_candidates,
+    dedup_semantic_clusters,
+    emb_pq_codes,
     sim_filtered_ann,
+    sim_hard_negatives,
     sim_ivf_pq_topk,
     sim_ivf_topk,
     sim_mmr_ann,
     sim_mmr_rerank,
+    sim_pq_adc_rescore_topk,
+    sim_pq_adc_topk,
     sim_rp_lsh_topk,
 )
 from snowflake_to_postgres_spark.operators.text import (
@@ -63,7 +68,8 @@ def _imts(df) -> int:
 
 #: (builder, minimum InMemoryTableScan count). The three text queries
 #: cache the bigram model / BM25 inverted index and reference it 4-6
-#: times per plan; the others cache nothing themselves (min 0) but must
+#: times per plan; dedup_semantic_clusters caches its SQL-built IVF
+#: assignment; the others cache nothing themselves (min 0) but must
 #: still pass the sentinel guard below.
 SQL_BUILT = [
     (tx_bigram_lm_score, 4),
@@ -77,6 +83,11 @@ SQL_BUILT = [
     (sim_filtered_ann, 0),
     (sim_mmr_rerank, 0),
     (sim_ivf_topk, 0),
+    (emb_pq_codes, 0),
+    (sim_pq_adc_topk, 0),
+    (sim_pq_adc_rescore_topk, 0),
+    (sim_hard_negatives, 0),
+    (dedup_semantic_clusters, 1),
 ]
 
 #: Similarity builds whose components frame must not unregister a
@@ -84,6 +95,8 @@ SQL_BUILT = [
 #: persists one for the lifetime of its result).
 COMPONENT_BUILDS = [
     sim_rp_lsh_topk, sim_filtered_ann, sim_mmr_rerank, sim_ivf_topk, sim_ivf_pq_topk,
+    emb_pq_codes, sim_pq_adc_topk, sim_pq_adc_rescore_topk, sim_hard_negatives,
+    dedup_semantic_clusters,
 ]
 
 
