@@ -4,9 +4,10 @@ core, validator.py) as DataFrame ops.
 Reference shape: per table, dozens-to-hundreds of SQL round-trips against
 two backends (monthly chunk loops, 50-column NULL chunks, 25-pair MIN/MAX
 chunks, one point query per sampled row — validator.py:515-570, :633-718,
-:432-433). Spark shape: each layer is ONE job over each side; the chunk
-loops disappear because a single groupBy shuffles all partitions at once,
-and the per-row PK lookups collapse into one broadcast join (SURVEY J3).
+:432-433). Spark shape: L1-L4 derive from ONE profile aggregate per side,
+both collected together, and L5 is one broadcast join; the chunk loops
+disappear because a single groupBy shuffles all partitions at once, and
+the per-row PK lookups collapse into that join (SURVEY J3).
 
 Layers (validator.py:47-57):
   L1 row count            (:193-215)
@@ -24,6 +25,7 @@ name-hint heuristic, numeric-type classification from StructType.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,9 +117,7 @@ def _norm_col(f: T.StructField) -> Column:
     N2 timestamps are instants under the UTC session (equality correct);
     N3 strings trimmed."""
     c = F.col(f.name)
-    if isinstance(f.dataType, (T.DoubleType, T.FloatType)):
-        return c.cast("decimal(38,6)")
-    if isinstance(f.dataType, T.DecimalType):
+    if isinstance(f.dataType, (T.DoubleType, T.FloatType, T.DecimalType)):
         return c.cast("decimal(38,6)")
     if isinstance(f.dataType, T.StringType):
         return F.trim(c)
@@ -134,7 +134,8 @@ class DataValidator:
     The two frames can come from any source/sink pair the engine reads
     (parquet, JDBC, …) — the validation plan is source-agnostic, unlike
     the reference's twin SQL-string generators per backend dialect
-    (validator.py:572-621 vs :735-784)."""
+    (validator.py:572-621 vs :735-784). L1-L4 share one memoized
+    profile: one validator reads one snapshot of its frames."""
 
     def __init__(
         self,
@@ -150,90 +151,86 @@ class DataValidator:
         self.pk_columns = pk_columns
         self.sample_bucket = sample_bucket
 
+    # --- L1-L4: one profile per side --------------------------------------
+    @cached_property
+    def _profile(self) -> list[tuple[list[str], dict]]:
+        """(stat columns, {date: row}) of source and target. Per side, one
+        aggregate grouped by date (one NULL group without a date column):
+        row count, NULL count per column, min/max per numeric and the sums
+        of the first MAX_FINGERPRINT_COLS numerics. The two small
+        aggregates are unioned and collected once, never the raw rows (a
+        JDBC target widens types): 2 × the distinct dates at most."""
+        key = (F.col(self.date_column) if self.date_column else F.lit(None)).cast("date")
+        aggs = []
+        for df in (self.source, self.target):
+            nums = numeric_columns(df.schema)
+            cols = [F.count("*").alias("cnt")]
+            cols += [(F.count("*") - F.count(f.name)).alias(f"null__{f.name}") for f in df.schema.fields]
+            for c in nums:
+                cols += [F.min(dec(c, 38, 6)).alias(f"min__{c}"), F.max(dec(c, 38, 6)).alias(f"max__{c}")]
+            cols += [
+                F.sum(dec(c, 38, 6)).cast("decimal(38,6)").alias(f"s__{c}")
+                for c in nums[:MAX_FINGERPRINT_COLS]
+            ]
+            aggs.append(df.groupBy(key.alias("d")).agg(*cols))
+        s, t = (a.withColumn("side", F.lit(i)) for i, a in enumerate(aggs))
+        groups: tuple[dict, dict] = ({}, {})
+        for r in s.unionByName(t, allowMissingColumns=True).collect():
+            groups[r["side"]][r["d"]] = r.asDict()
+        return [(a.columns[1:], g) for a, g in zip(aggs, groups)]
+
+    def _date_diff(self, cols: list[str], missing) -> list:
+        """(date, source values, target values) of ``cols`` wherever the
+        sides differ, a date absent from one side reading ``missing``;
+        dates sorted NULL first, as Spark sorts them."""
+        (_, s), (_, t) = self._profile
+        out = []
+        for d in sorted(s.keys() | t.keys(), key=lambda d: (d is not None, d)):
+            a, b = ([g[d][c] if d in g else missing for c in cols] for g in (s, t))
+            if a != b:
+                out.append((d, a, b))
+        return out[:MAX_DETAIL]
+
     # --- L1 ---------------------------------------------------------------
     def check_row_count(self) -> CheckResult:
-        s = self.source.count()
-        t = self.target.count()
+        s, t = (sum(r["cnt"] for r in g.values()) for _, g in self._profile)
         return CheckResult("row_count", s == t, s, t)
 
     # --- L2 ---------------------------------------------------------------
-    def _by_date_counts(self, df: DataFrame) -> DataFrame:
-        return df.groupBy(F.col(self.date_column).cast("date").alias("d")).agg(
-            F.count("*").alias("cnt")
-        )
-
     def check_partition_counts(self) -> CheckResult:
         if not self.date_column:
             return CheckResult("partition_counts", True, details=["no date column"])
-        s = self._by_date_counts(self.source)
-        t = self._by_date_counts(self.target).withColumnRenamed("cnt", "t_cnt")
-        diff = (
-            s.join(t, "d", "full_outer")
-            .select(
-                "d",
-                F.coalesce("cnt", F.lit(0)).alias("cnt"),
-                F.coalesce("t_cnt", F.lit(0)).alias("t_cnt"),
-            )
-            .filter(F.col("cnt") != F.col("t_cnt"))
-            .orderBy("d")
-            .limit(MAX_DETAIL)
-            .collect()
-        )
-        details = [f"{r['d']}: source={r['cnt']} target={r['t_cnt']}" for r in diff]
+        details = [f"{d}: source={a[0]} target={b[0]}" for d, a, b in self._date_diff(["cnt"], 0)]
         return CheckResult("partition_counts", not details, details=details)
 
     # --- L3 ---------------------------------------------------------------
-    def _col_stats(self, df: DataFrame) -> dict:
-        aggs = [F.count("*").alias("__n")]
-        for f in df.schema.fields:
-            aggs.append((F.count("*") - F.count(f.name)).alias(f"null__{f.name}"))
-        for c in numeric_columns(df.schema):
-            aggs.append(F.min(dec(c, 38, 6)).alias(f"min__{c}"))
-            aggs.append(F.max(dec(c, 38, 6)).alias(f"max__{c}"))
+    def _totals(self, cols: list[str], groups: dict) -> dict:
+        """Whole-side stats from the date groups: NULL counts add and
+        min/max combine; the date's min/max are the non-NULL keys'."""
+        fold = {"null": sum, "min": lambda v: min(v, default=None), "max": lambda v: max(v, default=None)}
+        out = {
+            k: fold[k.split("__")[0]]([r[k] for r in groups.values() if r[k] is not None])
+            for k in cols
+            if k.split("__")[0] in fold
+        }
         if self.date_column:
-            aggs.append(F.min(F.col(self.date_column).cast("date")).alias(f"min__{self.date_column}"))
-            aggs.append(F.max(F.col(self.date_column).cast("date")).alias(f"max__{self.date_column}"))
-        return df.agg(*aggs).collect()[0].asDict()
+            days = [d for d in groups if d is not None]
+            out[f"min__{self.date_column}"] = fold["min"](days)
+            out[f"max__{self.date_column}"] = fold["max"](days)
+        return out
 
     def check_column_stats(self) -> CheckResult:
-        s = self._col_stats(self.source)
-        t = self._col_stats(self.target)
-        details = [
-            f"{k}: source={s[k]} target={t.get(k)}"
-            for k in s
-            if k != "__n" and s[k] != t.get(k)
-        ][:MAX_DETAIL]
-        return CheckResult("column_stats", not details, details=details)
+        s, t = (self._totals(*p) for p in self._profile)
+        details = [f"{k}: source={s[k]} target={t.get(k)}" for k in s if s[k] != t.get(k)]
+        return CheckResult("column_stats", not details, details=details[:MAX_DETAIL])
 
     # --- L4 ---------------------------------------------------------------
-    def _fingerprints(self, df: DataFrame) -> DataFrame:
-        cols = numeric_columns(df.schema)[:MAX_FINGERPRINT_COLS]
-        aggs = [F.count("*").alias("cnt")] + [
-            F.sum(dec(c, 38, 6)).cast("decimal(38,6)").alias(f"s__{c}") for c in cols
-        ]
-        return df.groupBy(F.col(self.date_column).cast("date").alias("d")).agg(*aggs)
-
     def check_aggregate_fingerprints(self) -> CheckResult:
         if not self.date_column:
             return CheckResult("aggregate_fingerprints", True, details=["no date column"])
-        s = self._fingerprints(self.source)
-        t = self._fingerprints(self.target)
-        val_cols = [c for c in s.columns if c != "d"]
-        t_renamed = t.select("d", *[F.col(c).alias(f"t_{c}") for c in val_cols])
-        neq = None
-        for c in val_cols:
-            cond = ~(
-                F.col(c).eqNullSafe(F.col(f"t_{c}"))
-            )
-            neq = cond if neq is None else (neq | cond)
-        diff = (
-            s.join(t_renamed, "d", "full_outer")
-            .filter(neq)
-            .orderBy("d")
-            .limit(MAX_DETAIL)
-            .collect()
-        )
-        details = [f"{r['d']}: fingerprint mismatch" for r in diff]
+        (s_cols, _), _ = self._profile
+        cols = [c for c in s_cols if c == "cnt" or c.startswith("s__")]
+        details = [f"{d}: fingerprint mismatch" for d, _, _ in self._date_diff(cols, None)]
         return CheckResult("aggregate_fingerprints", not details, details=details)
 
     # --- L5 ---------------------------------------------------------------

@@ -116,10 +116,10 @@ COLLECT_LEDGER: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/transfer.py", "delete_keys_partitioned"): (2, "PARTITION-META"),
     ("operators/transfer.py", "merge_upsert_partitioned"): (2, "PARTITION-META"),
     ("operators/transfer.py", "repair_partitions"): (1, "PARTITION-META"),
-    ("operators/validation.py", "_col_stats"): (1, "SCALAR-1ROW"),
     ("operators/validation.py", "chi2_drift"): (1, "SCHEMA/CONST"),
-    ("operators/validation.py", "check_aggregate_fingerprints"): (1, "PARTITION-META"),
-    ("operators/validation.py", "check_partition_counts"): (1, "PARTITION-META"),
+    # the L1-L4 profile of both sides: 2 x the distinct dates, or 2 rows
+    # without a date column
+    ("operators/validation.py", "_profile"): (1, "PARTITION-META"),
     ("operators/validation.py", "check_row_sample"): (1, "SCHEMA/CONST"),
     ("operators/validation.py", "check_sentinel_dates"): (1, "SCALAR-1ROW"),
     ("plans/catalog.py", "describe_table"): (3, "SCHEMA/CONST"),

@@ -1,8 +1,8 @@
 """Spark job accounting per operator call: every job a call submits,
 including those from its worker threads, lands in the caller's job
-group, and the job counts of the merge, the keyed delete and the
-row-sample check stay pinned. Hive-partitioned writes and listings
-use one task per core."""
+group, and the job counts of the merge, the keyed delete, the
+row-sample check and the validator profile stay pinned. Hive-partitioned
+writes and listings use one task per core."""
 
 from __future__ import annotations
 
@@ -162,3 +162,23 @@ def test_row_sample_job_count_pinned(spark, sf_dir):
     jobs = _group_jobs(spark, "row_sample_job_count", lambda: res.append(v.check_row_sample()))
     assert res[0].passed
     assert len(jobs) == 7
+
+
+def test_profile_checks_job_count_pinned(spark, sf_dir):
+    """L1-L4 read one memoized profile: one aggregate per side and one
+    collect for all four checks (2 jobs; four aggregates per side and a
+    join per layer took 12), and none on a second call."""
+    orders = load_table(spark, sf_dir, "orders")
+    v = DataValidator(orders, orders, pk_columns=["o_orderkey"])
+    checks = [
+        v.check_row_count,
+        v.check_partition_counts,
+        v.check_column_stats,
+        v.check_aggregate_fingerprints,
+    ]
+    res = []
+    jobs = _group_jobs(spark, "profile_job_count", lambda: res.extend(c() for c in checks))
+    assert all(r.passed for r in res)
+    assert len(jobs) == 2
+    for c in checks:
+        assert not _group_jobs(spark, f"profile_again_{c.__name__}", c)

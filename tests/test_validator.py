@@ -58,6 +58,8 @@ def test_drop_day_caught_by_partition_counts(li):
     tgt = li.filter(F.col("l_shipdate").cast("date") != F.lit(one_day))
     checks = _by_check(_v(li, tgt).validate())
     assert not checks["partition_counts"].passed
+    n = li.filter(F.col("l_shipdate").cast("date") == F.lit(one_day)).count()
+    assert checks["partition_counts"].details == [f"{one_day}: source={n} target=0"]
 
 
 def test_null_column_caught_by_column_stats(li):
@@ -66,6 +68,8 @@ def test_null_column_caught_by_column_stats(li):
     )
     checks = _by_check(_v(li, tgt).validate())
     assert not checks["column_stats"].passed
+    k = tgt.filter(F.col("l_tax").isNull()).count()
+    assert checks["column_stats"].details == [f"null__l_tax: source=0 target={k}"]
 
 
 def test_clipped_max_caught_by_column_stats(li):
@@ -93,8 +97,46 @@ def test_perturbed_value_caught_by_fingerprints(li):
     )
     checks = _by_check(_v(li, tgt).validate())
     assert not checks["aggregate_fingerprints"].passed
+    # (orderkey, linenumber) is not unique: every date of a perturbed row
+    days = sorted(
+        r["d"]
+        for r in li.filter(
+            (F.col("l_orderkey") == k["l_orderkey"])
+            & (F.col("l_linenumber") == k["l_linenumber"])
+        ).select(F.col("l_shipdate").cast("date").alias("d")).distinct().collect()
+    )
+    assert checks["aggregate_fingerprints"].details == [
+        f"{d}: fingerprint mismatch" for d in days
+    ]
     assert checks["row_count"].passed
     assert checks["partition_counts"].passed
+
+
+def _null_dates(orders):
+    """orders with every 7th o_orderdate NULL."""
+    return orders.withColumn(
+        "o_orderdate",
+        F.when(F.col("o_orderkey") % 7 == 0, None).otherwise(F.col("o_orderdate")),
+    )
+
+
+def test_null_dates_match_themselves(spark, sf_dir):
+    # the NULL date is one group on each side, and NULL matches NULL
+    o2 = _null_dates(load_table(spark, sf_dir, "orders"))
+    res = DataValidator(o2, o2).validate("orders")
+    assert all(c.passed for c in res.checks), [
+        (c.name, c.details) for c in res.checks if not c.passed
+    ]
+
+
+def test_null_date_count_difference_reported_once(spark, sf_dir):
+    o2 = _null_dates(load_table(spark, sf_dir, "orders"))
+    tgt = o2.filter(~(F.col("o_orderdate").isNull() & (F.col("o_orderkey") % 14 == 0)))
+    a = o2.filter(F.col("o_orderdate").isNull()).count()
+    b = tgt.filter(F.col("o_orderdate").isNull()).count()
+    assert a > b > 0
+    checks = _by_check(DataValidator(o2, tgt).validate())
+    assert checks["partition_counts"].details == [f"None: source={a} target={b}"]
 
 
 def test_swapped_fields_caught_by_row_sample(spark, sf_dir):
