@@ -252,8 +252,10 @@ def _bench_keys(spark, qs, sf_dir: str, keys: list[str]) -> dict:
     # steady-state plan execution rather than JVM startup, and the
     # cold/warm delta per key IS the session-cache spread (a key whose
     # warm median sits far below its cold time holds a cache).
+    sc = spark.sparkContext
     query_cold: dict[str, float] = {}
     for name in keys:
+        sc.setJobDescription(f"bench cold {name}")
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         query_cold[name] = round(time.perf_counter() - t0, 3)
@@ -290,6 +292,7 @@ def _bench_keys(spark, qs, sf_dir: str, keys: list[str]) -> dict:
                 # 0.273s against a true ~12.9s end-to-end. Construction +
                 # execution is the honest per-key cost. (One-time step
                 # change vs BENCH_r06 noted in PERFORMANCE.md.)
+                sc.setJobDescription(f"bench warm {name}")
                 t0 = time.perf_counter()
                 df = qs[name](spark, sf_dir)
                 t1 = time.perf_counter()
@@ -323,6 +326,7 @@ def _bench_keys(spark, qs, sf_dir: str, keys: list[str]) -> dict:
         )
         run_pass(RUNS)
         attempts += 1
+    sc.setJobDescription(None)
 
     per_query = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     query_spread = {

@@ -25,6 +25,7 @@ environment has no database to hit.
 from __future__ import annotations
 
 import json
+import math
 import os
 import tempfile
 import threading
@@ -35,6 +36,7 @@ from dataclasses import dataclass, field
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from snowflake_to_postgres_spark.operators.common import partition_exchange
 from snowflake_to_postgres_spark.operators.validation import detect_date_column
@@ -256,20 +258,6 @@ def transfer_partitioned(
     return TransferStats("partitioned", obs.get["rows"], time.perf_counter() - t0)
 
 
-def _staging_path(target_path: str) -> str:
-    """Staging directory for a merge: a SIBLING of the target under the
-    SAME filesystem/scheme (``{target}__staging_{uuid}``). Never a
-    driver-local tempdir — on a multi-node cluster executors write task
-    output to the filesystem named by the path, and a ``/tmp`` path
-    names a *different* disk on every node: the subsequent read would
-    see a partial or empty dataset. A sibling path inherits the
-    target's scheme (file://, hdfs://, s3a://…) so every executor and
-    the driver resolve it to the same store."""
-    import uuid
-
-    return f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex}"
-
-
 def _in_parts(partition_col: str, parts: list):
     """NULL-safe partition membership: ``isin`` evaluates NULL for NULL
     rows, so a list containing None would silently exclude (and, in the
@@ -281,39 +269,53 @@ def _in_parts(partition_col: str, parts: list):
     return cond
 
 
-def _hadoop_delete(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API — resolves the
-    path's own filesystem, so it works for any scheme the write did."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-
-
 def _drop_partitions(
     spark: SparkSession, target_path: str, partition_col: str, values: list
 ) -> None:
     """Delete the hive partition directories of ``values`` under
-    ``target_path``; a None value is the __HIVE_DEFAULT_PARTITION__."""
+    ``target_path`` (a None value is the __HIVE_DEFAULT_PARTITION__)
+    through the Hadoop FileSystem API, which resolves the path's own
+    filesystem, so it works for any scheme the write did."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     for v in values:
-        dirname = "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-        _hadoop_delete(spark, f"{target_path.rstrip('/')}/{partition_col}={dirname}")
+        name = utils.getPartitionPathString(partition_col, None if v is None else str(v))
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{target_path.rstrip('/')}/{name}")
+        jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
 
 
-def _overwrite_partitions(
-    spark: SparkSession, df: DataFrame, target_path: str, partition_col: str
+def _rewrite_partitions(
+    spark: SparkSession, df: DataFrame, target_path: str, partition_col: str, affected: list
 ) -> int:
-    """Write ``df`` hive-partitioned into ``target_path`` under dynamic
-    partition overwrite — only the partitions present in ``df`` are
-    replaced — and return its row count, observed during the write."""
+    """Write ``df`` into ``target_path``, drop the ``affected``
+    partitions it emptied and return its row count. ``df`` is written
+    hive-partitioned under dynamic partition overwrite, which replaces
+    only the partitions it has rows for; the row count and the partition
+    values written are observed during that write. A partition with no
+    rows left is invisible to that write, so once it commits every
+    ``affected`` value it did not produce is dropped. A write that fails
+    drops nothing.
+
+    ``affected`` holds partition values typed as ``df``'s column, and
+    only those a caller may empty: a value that compares unequal to the
+    one written would drop a partition that was just rewritten."""
     obs = Observation()
     (
-        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            # array(): a bare collect_set skips NULL, and the NULL
+            # partition would then read as emptied
+            F.collect_set(F.array(partition_col)).alias("parts"),
+        )
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(target_path)
     )
-    return obs.get["rows"]
+    m = obs.get
+    written = {v for (v,) in m["parts"]}
+    _drop_partitions(spark, target_path, partition_col, [v for v in affected if v not in written])
+    return m["rows"]
 
 
 def merge_upsert_partitioned(
@@ -373,8 +375,6 @@ def merge_upsert_partitioned(
 
     Updates must already carry ``partition_col`` (use the same bucket
     expression as :func:`transfer_partitioned`)."""
-    from pyspark.sql.window import Window
-
     t0 = time.perf_counter()
     parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
     # duplicate keys on the build side of a semi/anti join change nothing
@@ -409,8 +409,9 @@ def merge_upsert_partitioned(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_is_update")
         )
-    n = _overwrite_partitions(
-        spark, partition_exchange(merged, partition_col), target_path, partition_col
+    # every partition in ``parts`` keeps the update rows: none is emptied
+    n = _rewrite_partitions(
+        spark, partition_exchange(merged, partition_col), target_path, partition_col, []
     )
     return TransferStats("merge_upsert", n, time.perf_counter() - t0)
 
@@ -480,39 +481,41 @@ def compact_partitions(
       a sane file target.
     * **Same single write as the merge**: the compacted partitions are
       written straight into the target under dynamic partition
-      overwrite, which swaps only them in at job commit.
+      overwrite, which swaps only them in at job commit. Directory
+      names are unescaped to the values the read sees, so the NULL
+      partition and escaped names (``a%3Ab``) are compacted too.
     """
-    import math
-
     t0 = time.perf_counter()
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     stats = list_partition_files(spark, target_path, partition_col)
+    # directory name -> partition value, as the read sees it
     offenders = {
-        p: max(1, math.ceil(size / target_file_bytes))
+        None if p == utils.DEFAULT_PARTITION_NAME() else utils.unescapePathName(p):
+            max(1, math.ceil(size / target_file_bytes))
         for p, (n, size) in stats.items()
         if n > max_files_per_partition
     }
     if not offenders:
         return TransferStats("compact", 0, time.perf_counter() - t0)
 
-    desired = spark.createDataFrame(
-        [(p, n) for p, n in sorted(offenders.items())],
-        f"{partition_col} string, _n_files int",
-    )
+    desired = spark.createDataFrame(list(offenders.items()), "_d_pt string, _n_files int")
     df = (
         spark.read.parquet(target_path)
-        .filter(F.col(partition_col).isin(list(offenders)))
-        .join(F.broadcast(desired), partition_col)
+        .filter(_in_parts(partition_col, list(offenders)))
+        .join(F.broadcast(desired), F.col(partition_col).eqNullSafe(F.col("_d_pt")))
+        .drop("_d_pt")
     )
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(*[c for c in df.columns if c != "_n_files"]),
                         F.col("_n_files")).cast("int")
     ).drop("_n_files")
 
-    n = _overwrite_partitions(
+    n = _rewrite_partitions(
         spark,
         salted.repartition(sum(offenders.values()), partition_col, "_salt").drop("_salt"),
         target_path,
         partition_col,
+        [],  # every row of an offending partition is rewritten: none is emptied
     )
     return TransferStats("compact", n, time.perf_counter() - t0)
 
@@ -543,8 +546,6 @@ def scd2_apply(
     that join — no window over the dimension, no full rewrite. Pair
     with ``merge_upsert_partitioned`` to write the result back
     partition-scoped."""
-    from pyspark.sql.window import Window
-
     cur = dim.filter(F.col(current_flag))
     hist = dim.filter(~F.col(current_flag))
     out_cols = key_cols + attr_cols + [valid_from, valid_to, current_flag]
@@ -607,14 +608,14 @@ def repair_partitions(
     """Anti-entropy repair: the ACTION that follows validation. Compare
     source and target per partition by (row count, order-insensitive
     content hash = SUM of xxhash64 over all non-partition columns) and
-    rewrite ONLY the stale or missing partitions from the source via
-    dynamic partition overwrite — matching partitions are never read
-    beyond their hash pass and never written (asserted by file mtimes
-    in tests). Partitions present ONLY in the target are deleted
-    through the Hadoop FS API (dynamic overwrite alone cannot remove
-    them: it rewrites only partitions present in the written data, so
-    a target-only partition would be re-flagged on every run and the
-    repair would never converge).
+    rewrite ONLY the stale or missing partitions from the source —
+    matching partitions are never read beyond their hash pass and never
+    written (asserted by file mtimes in tests). The source slice of
+    every stale value is written, then the stale partitions the write
+    emptied are dropped: those present ONLY in the target, which the
+    slice has no rows for (dynamic overwrite alone cannot remove them,
+    so a target-only partition would be re-flagged on every run and the
+    repair would never converge). A failed write drops nothing.
 
     100-TB shape: the fingerprint pass is one map-side-combined
     aggregation per side keyed on the partition value (driver-sized
@@ -652,32 +653,22 @@ def repair_partitions(
         F.coalesce(fs["_s_pt"], ft["_t_pt"]).alias(partition_col),
         "s_n", "s_h", "t_n", "t_h",
     )
-    stale_rows = diff.filter(
-        ~(
-            F.col("s_n").eqNullSafe(F.col("t_n"))
-            & F.col("s_h").eqNullSafe(F.col("t_h"))
-        )
-    ).collect()
+    rows = diff.collect()  # one row per partition
+    stale_rows = [r for r in rows if (r["s_n"], r["s_h"]) != (r["t_n"], r["t_h"])]
     stale = [r[partition_col] for r in stale_rows]
-    checked = diff.count()  # before any delete mutates the scanned files
-    # Partitions that exist ONLY in the target (s_n IS NULL): dynamic
-    # partition overwrite rewrites only partitions PRESENT in the written
-    # data, and the source slice has no rows for these — without an
-    # explicit delete they survive every repair and --fail-on-drift never
-    # converges. Drop their directories through the Hadoop FS API (same
-    # filesystem resolution as the write path).
+    # target-only partitions (s_n IS NULL): the slice writes no rows for
+    # them, so the rewrite drops them. Only these are passed as affected:
+    # every other stale value has source rows, and the diff's coalesced
+    # type may differ from the source column's
     extra = [r[partition_col] for r in stale_rows if r["s_n"] is None]
-    _drop_partitions(spark, target_path, partition_col, extra)
     rewritten = 0
-    extra_set = set(extra)
-    to_rewrite = [v for v in stale if v not in extra_set]
-    if to_rewrite:
-        slice_ = src.filter(_in_parts(partition_col, to_rewrite))
-        rewritten = _overwrite_partitions(
-            spark, partition_exchange(slice_, partition_col), target_path, partition_col
+    if stale:
+        slice_ = src.filter(_in_parts(partition_col, stale))
+        rewritten = _rewrite_partitions(
+            spark, partition_exchange(slice_, partition_col), target_path, partition_col, extra
         )
     return {
-        "checked": checked,
+        "checked": len(rows),
         "stale": sorted(map(str, stale)),
         "deleted_partitions": sorted(map(str, extra)),
         "rewritten_rows": rewritten,
@@ -702,49 +693,26 @@ def delete_keys_partitioned(
       partitions are read, anti-joined, and rewritten via dynamic
       partition overwrite. A 100 TB table with 1k doomed users rewrites
       the partitions those users touch, nothing else.
-    * **Whole-partition drops.** A partition whose every row dies would
-      write ZERO rows — invisible to dynamic overwrite (the
-      repair_partitions lesson), so those partitions are deleted
-      through the Hadoop FS API instead.
-    * **Staging.** Unlike the merge, the survivors stage to a sibling
-      path (:func:`_staging_path`) before the dynamic overwrite: the
-      staged output tells which partitions lost every row without a
-      second pass over the target slice.
+    * **Whole-partition drops.** A partition whose every row dies
+      writes ZERO rows — invisible to dynamic overwrite (the
+      repair_partitions lesson). The write observes which partitions
+      it produced; after it commits, the affected partitions it did not
+      produce are deleted through the Hadoop FS API. A failed write
+      drops nothing.
 
     ``keys`` may be any frame carrying ``key_cols`` (a parquet list of
     user ids, a subquery); it is reduced to distinct keys and broadcast
     when small."""
     t0 = time.perf_counter()
     k = keys.select(*key_cols).distinct()
-    idx = (
-        spark.read.parquet(target_path)
-        .select(*key_cols, partition_col)
-        .join(k, key_cols, "left_semi")
-    )
+    target = spark.read.parquet(target_path)  # one listing for both uses
+    idx = target.select(*key_cols, partition_col).join(k, key_cols, "left_semi")
     parts = [r[0] for r in idx.select(partition_col).distinct().collect()]
     if not parts:
         return TransferStats("delete_keys", 0, time.perf_counter() - t0)
 
-    tgt = spark.read.parquet(target_path).filter(_in_parts(partition_col, parts))
-    survivors = tgt.join(k, key_cols, "left_anti")
-
-    staging = _staging_path(target_path)
-    try:
-        partition_exchange(survivors, partition_col).write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        # one job gives both the survivor count and the surviving partitions
-        part_counts = staged.groupBy(partition_col).count().collect()
-        n = sum(r["count"] for r in part_counts)
-        kept_parts = {r[0] for r in part_counts}
-        # partitions where every row died: dynamic overwrite writes no
-        # data for them — drop their directories explicitly
-        _drop_partitions(
-            spark, target_path, partition_col, [v for v in parts if v not in kept_parts]
-        )
-        if n > 0:
-            _overwrite_partitions(
-                spark, partition_exchange(staged, partition_col), target_path, partition_col
-            )
-    finally:
-        _hadoop_delete(spark, staging)
+    survivors = target.filter(_in_parts(partition_col, parts)).join(k, key_cols, "left_anti")
+    n = _rewrite_partitions(
+        spark, partition_exchange(survivors, partition_col), target_path, partition_col, parts
+    )
     return TransferStats("delete_keys", n, time.perf_counter() - t0)

@@ -113,7 +113,7 @@ COLLECT_LEDGER: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/text.py", "train_quality_logreg"): (1, "SCALAR-1ROW"),
     ("operators/tpch_flavors.py", "x_q11_important_stock"): (1, "SCALAR-1ROW"),
     ("operators/tpch_flavors.py", "x_q15_top_supplier"): (1, "SCALAR-1ROW"),
-    ("operators/transfer.py", "delete_keys_partitioned"): (2, "PARTITION-META"),
+    ("operators/transfer.py", "delete_keys_partitioned"): (1, "PARTITION-META"),
     ("operators/transfer.py", "merge_upsert_partitioned"): (2, "PARTITION-META"),
     ("operators/transfer.py", "repair_partitions"): (1, "PARTITION-META"),
     ("operators/validation.py", "chi2_drift"): (1, "SCHEMA/CONST"),

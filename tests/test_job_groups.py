@@ -1,7 +1,7 @@
 """Spark job accounting per operator call: every job a call submits,
 including those from its worker threads, lands in the caller's job
-group, and the job counts of the merge, the keyed delete, the
-row-sample check and the validator profile stay pinned. Hive-partitioned
+group, and the job counts of the merge, the keyed delete, the repair,
+the row-sample check and the validator profile stay pinned. Hive-partitioned
 writes and listings use one task per core."""
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from snowflake_to_postgres_spark.operators.transfer import (
     delete_keys_partitioned,
     list_partition_files,
     merge_upsert_partitioned,
+    repair_partitions,
     transfer_partitioned,
 )
 from snowflake_to_postgres_spark.operators.validation import DataValidator
@@ -64,7 +65,9 @@ def test_transfer_schema_jobs_inherit_the_callers_group(spark, sf_dir, tmp_path)
     )
     assert all(s.error is None and s.rows > 0 for s in stats)
     assert len(jobs) >= len(tables)
-    assert _untagged_jobs(spark) == untagged
+    # no new untagged job; the status store may evict old ones meanwhile
+    # (it keeps spark.ui.retainedJobs and drops the oldest in batches)
+    assert not _untagged_jobs(spark) - untagged
 
 
 def test_partitioned_write_runs_one_task_per_core(spark, sf_dir, tmp_path):
@@ -127,9 +130,10 @@ def test_merge_job_count_pinned(spark, sf_dir, tmp_path):
 
 
 def test_delete_keys_job_count_pinned(spark, sf_dir, tmp_path):
-    """The survivor count and the surviving partitions come from one
-    per-partition count over the staged copy: 19 jobs. A separate
-    count() plus a distinct-partition collect took 21."""
+    """One listing of the target and one write straight into it, which
+    observes the survivor count and the partitions it wrote: 12 jobs.
+    Staging the survivors through a sibling copy, re-reading it and
+    counting it per partition took 19."""
     out = str(tmp_path / "orders_pt")
     transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
     doomed_keys = [
@@ -149,7 +153,45 @@ def test_delete_keys_job_count_pinned(spark, sf_dir, tmp_path):
         lambda: stats.append(delete_keys_partitioned(spark, out, doomed, ["o_orderkey"])),
     )
     assert stats[0].rows > 0
-    assert len(jobs) == 19
+    assert len(jobs) == 12
+
+
+def test_repair_job_count_pinned(spark, sf_dir, tmp_path):
+    """The per-partition diff is collected once, and one write of the
+    stale source slice also removes the target-only partition: 11
+    jobs. Counting the diff again and deleting the target-only
+    partition before the write took 17."""
+    src = str(tmp_path / "src")
+    tgt = str(tmp_path / "tgt")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), src, "o_orderdate")
+    transfer_partitioned(spark, table_path(sf_dir, "orders"), tgt, "o_orderdate")
+    half = (
+        spark.read.parquet(tgt)
+        .filter((F.col("_pt") == "1997-03") & (F.col("o_orderkey") % 2 == 0))
+        .collect()
+    )
+    (
+        spark.createDataFrame(half, spark.read.parquet(tgt).schema)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_pt")
+        .parquet(tgt)
+    )
+    (
+        spark.read.parquet(tgt)
+        .limit(10)
+        .withColumn("_pt", F.lit("2099-12"))
+        .write.mode("append")
+        .partitionBy("_pt")
+        .parquet(tgt)
+    )
+    res = []
+    jobs = _group_jobs(
+        spark, "repair_job_count", lambda: res.append(repair_partitions(spark, src, tgt))
+    )
+    assert res[0]["stale"] == ["1997-03", "2099-12"]
+    assert res[0]["deleted_partitions"] == ["2099-12"]
+    assert len(jobs) == 11
 
 
 def test_row_sample_job_count_pinned(spark, sf_dir):

@@ -166,26 +166,23 @@ def test_merge_upsert_partition_scoped(spark, sf_dir, tmp_path):
 
 
 def test_merge_staging_rooted_in_target_fs(spark, sf_dir, tmp_path):
-    """The merge staging dir must be a SIBLING of the target under the
-    target's own filesystem/scheme — never a driver-local tempdir, which
-    on a multi-node cluster names a different disk on every executor.
-    Also: after a merge, no staging leftovers next to the target."""
+    """The merge and the keyed delete stage nothing outside the target:
+    their only staging is Spark's own ``.spark-staging-*`` directory
+    under it, on the target's filesystem. After either, no sibling
+    ``*__staging_*`` directory and no ``.spark-staging-*`` is left."""
     import glob
     import os
 
     from snowflake_to_postgres_spark.operators.transfer import (
-        _staging_path,
+        delete_keys_partitioned,
         merge_upsert_partitioned,
         transfer_partitioned,
     )
 
-    # scheme/root preservation, including remote URIs
-    sp = _staging_path("hdfs://nn:9000/warehouse/orders/")
-    assert sp.startswith("hdfs://nn:9000/warehouse/orders__staging_")
-    sp = _staging_path("s3a://bucket/tables/t")
-    assert sp.startswith("s3a://bucket/tables/t__staging_")
-    local = _staging_path(str(tmp_path / "orders_pt"))
-    assert os.path.dirname(local) == str(tmp_path)
+    def no_leftovers() -> bool:
+        return glob.glob(str(tmp_path / "*__staging_*")) == [] and not any(
+            ".spark-staging" in d for d, _, _ in os.walk(out)
+        )
 
     out = str(tmp_path / "orders_pt")
     transfer_partitioned(spark, table_path(sf_dir, "orders"), out, "o_orderdate")
@@ -196,7 +193,16 @@ def test_merge_staging_rooted_in_target_fs(spark, sf_dir, tmp_path):
         .withColumn("o_totalprice", F.lit(1.0))
     )
     merge_upsert_partitioned(spark, out, upd, ["o_orderkey"])
-    assert glob.glob(str(tmp_path / "*__staging_*")) == []
+    assert no_leftovers()
+    doomed = spark.createDataFrame(
+        spark.read.parquet(out)
+        .filter(F.col("_pt") == "1997-03")
+        .select("o_orderkey")
+        .limit(3)
+        .collect()
+    )
+    assert delete_keys_partitioned(spark, out, doomed, ["o_orderkey"]).rows > 0
+    assert no_leftovers()
 
 
 def test_merge_moved_key_guard(spark, sf_dir, tmp_path):
@@ -483,6 +489,62 @@ def test_compact_split_survives_adaptive_coalescing(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == load_table(spark, sf_dir, "orders").count()
 
 
+def test_compact_reads_null_and_escaped_partitions(spark, tmp_path):
+    """The NULL partition (__HIVE_DEFAULT_PARTITION__) and one whose
+    directory name is escaped (``a:b`` lives in ``_pt=a%3Ab``) compact
+    like any other: every row of them is read and rewritten into one
+    file, so the rewrite, which drops the compacted partitions it did
+    not write, keeps them."""
+    from snowflake_to_postgres_spark.operators.transfer import (
+        compact_partitions,
+        list_partition_files,
+    )
+
+    rows = [(i, [None, "2020-01", "a:b"][i % 3]) for i in range(60)]
+    df = spark.createDataFrame(rows, "k bigint, _pt string")
+    out = str(tmp_path / "t")
+    df.repartition(3).write.partitionBy("_pt").parquet(out)
+    df.repartition(3).write.mode("append").partitionBy("_pt").parquet(out)
+    before = list_partition_files(spark, out)
+    assert set(before) == {"__HIVE_DEFAULT_PARTITION__", "2020-01", "a%3Ab"}
+    assert all(n > 1 for n, _ in before.values())
+
+    assert compact_partitions(spark, out).rows == 120
+    assert {p: n for p, (n, _) in list_partition_files(spark, out).items()} == dict.fromkeys(
+        before, 1
+    )
+    counts = {r[0]: r[1] for r in spark.read.parquet(out).groupBy("_pt").count().collect()}
+    assert counts == {None: 40, "2020-01": 40, "a:b": 40}
+
+
+def test_compact_keeps_exponent_form_partitions(spark, tmp_path):
+    """Spark names a double partition in Java's exponent form
+    (``_pt=1.23456785E7``, ``_pt=2.5E-4``), which no Python ``str`` of
+    the value matches. Compaction rewrites such partitions into one file
+    each and loses no row."""
+    from snowflake_to_postgres_spark.operators.transfer import (
+        compact_partitions,
+        list_partition_files,
+    )
+
+    rows = [(i, [12345678.5, 2.5e-4][i % 2]) for i in range(40)]
+    df = spark.createDataFrame(rows, "k bigint, _pt double")
+    out = str(tmp_path / "t")
+    df.repartition(2).write.partitionBy("_pt").parquet(out)
+    df.repartition(2).write.mode("append").partitionBy("_pt").parquet(out)
+    before = list_partition_files(spark, out)
+    assert set(before) == {"1.23456785E7", "2.5E-4"}
+    assert all(n > 1 for n, _ in before.values())
+
+    assert compact_partitions(spark, out).rows == 80
+    assert {p: n for p, (n, _) in list_partition_files(spark, out).items()} == {
+        "1.23456785E7": 1,
+        "2.5E-4": 1,
+    }
+    got = sorted((r.k, r._pt) for r in spark.read.parquet(out).collect())
+    assert got == sorted(rows + rows)
+
+
 def test_scd2_apply_semantics_and_replay(spark):
     """SCD2: changed keys close out and version; unchanged keys pass
     untouched; new keys insert; replaying the same batch is a no-op."""
@@ -701,8 +763,10 @@ def test_delete_keys_partition_scoped(spark, sf_dir, tmp_path):
 def test_delete_and_repair_handle_null_partition(spark, tmp_path):
     """NULL partition values (__HIVE_DEFAULT_PARTITION__): a delete
     touching the NULL partition must keep its survivors (isin() would
-    silently exclude — then destroy — them), and repair must converge on
-    a drifted NULL partition."""
+    silently exclude — then destroy — them), repair must converge on a
+    drifted NULL partition, and a delete that kills every row of the
+    NULL partition removes its directory and leaves the others as they
+    were."""
     import os
 
     import pyspark.sql.functions as F
@@ -735,3 +799,61 @@ def test_delete_and_repair_handle_null_partition(spark, tmp_path):
     b = sorted(tuple(str(x) for x in r) for r in spark.read.parquet(tgt).collect())
     assert a == b
     assert repair_partitions(spark, src, tgt, "_pt")["stale"] == []
+
+    kept = os.path.join(tgt, "_pt=2020-01")
+    mtimes = {f: os.path.getmtime(os.path.join(kept, f)) for f in os.listdir(kept)}
+    every_null = spark.createDataFrame([(i,) for i in range(50)], "k bigint")
+    assert delete_keys_partitioned(spark, tgt, every_null, ["k"]).rows == 0
+    assert not os.path.exists(os.path.join(tgt, "_pt=__HIVE_DEFAULT_PARTITION__"))
+    assert {f: os.path.getmtime(os.path.join(kept, f)) for f in os.listdir(kept)} == mtimes
+    assert spark.read.parquet(tgt).count() == 50
+
+
+def test_failed_rewrite_drops_no_partition(spark, tmp_path, monkeypatch):
+    """Repair and delete drop partitions only after their write commits.
+    When the write raises, every target file keeps its bytes and mtime:
+    repair keeps its target-only partition and delete keeps the
+    partition whose every row it was about to remove."""
+    import pytest
+
+    from snowflake_to_postgres_spark.operators import transfer
+
+    rows = [(i, "x", "2020-01" if i < 50 else "2020-02") for i in range(100)]
+    df = spark.createDataFrame(rows, "k bigint, v string, _pt string")
+    src = str(tmp_path / "src")
+    tgt = str(tmp_path / "tgt")
+    df.write.partitionBy("_pt").parquet(src)
+    # the target lost half of 2020-01 and holds a partition the source lacks
+    planted = spark.createDataFrame([(i, "y", "2099-12") for i in range(200, 205)], df.schema)
+    df.filter((F.col("k") % 2 == 0) | (F.col("_pt") == "2020-02")).unionByName(
+        planted
+    ).write.partitionBy("_pt").parquet(tgt)
+
+    def snapshot() -> dict[str, tuple[int, float]]:
+        return {
+            os.path.relpath(os.path.join(d, f), tgt): (
+                os.path.getsize(os.path.join(d, f)),
+                os.path.getmtime(os.path.join(d, f)),
+            )
+            for d, _, files in os.walk(tgt)
+            for f in files
+        }
+
+    exchange = transfer.partition_exchange
+
+    def poisoned(frame, *cols):
+        return exchange(frame, *cols).withColumn(
+            "v", F.raise_error(F.lit("poisoned write")).cast("string")
+        )
+
+    before = snapshot()
+    assert "_pt=2099-12" in {os.path.dirname(p) for p in before}
+    monkeypatch.setattr(transfer, "partition_exchange", poisoned)
+    with pytest.raises(Exception, match="poisoned write"):
+        transfer.repair_partitions(spark, src, tgt, "_pt")
+    assert snapshot() == before
+    doomed = spark.createDataFrame([(i,) for i in [60, *range(200, 205)]], "k bigint")
+    with pytest.raises(Exception, match="poisoned write"):
+        transfer.delete_keys_partitioned(spark, tgt, doomed, ["k"])
+    assert snapshot() == before
+    assert not any(".spark-staging" in d for d, _, _ in os.walk(tgt))

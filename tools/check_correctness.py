@@ -3,7 +3,10 @@ SparkSession (no get_spark — mirrors the driver's harness) against its DuckDB
 oracle at sf0.01, comparing row count, column names, and order-insensitive
 canonical values (tests/oracle_compare.compare_frames).
 
-Usage: python tools/check_correctness.py [sf_dir] [first_n|all] [name_filter] [json_out]
+Usage: python tools/check_correctness.py [sf_dir] [first_n|all] [prefix,...] [json_out]
+
+The third argument is a comma-separated list of name PREFIXES: a query
+runs if its name starts with any of them (``val_`` runs the ``val_*`` keys only).
 
 With ``json_out``, also writes a per-query JSON artifact in the driver's
 CORRECTNESS shape (rows/schema/hash matches per query) — used to publish
@@ -67,9 +70,9 @@ def main() -> int:
     if first_n != "all":
         specs = specs[: int(first_n)]
     if name_filter:
-        # comma-separated substrings: a spec matches if ANY matches
-        parts = [p for p in name_filter.split(",") if p]
-        specs = [s for s in specs if any(p in s.name for p in parts)]
+        # comma-separated prefixes: a spec matches if its name starts with ANY
+        parts = tuple(p for p in name_filter.split(",") if p)
+        specs = [s for s in specs if s.name.startswith(parts)]
 
     n_pass = n_fail = n_err = 0
     results: dict[str, dict] = {}

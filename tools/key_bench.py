@@ -1,10 +1,11 @@
 """Per-key micro-bench for optimization A/Bs (round 14).
 
-Times individual registry keys under the SAME protocol as bench.py
-(construct + noop-sink execution, cold pass then N interleaved warm
-rounds) without paying for the whole headline suite. Used for
-before/after evidence in OPTIMIZATION_r14.md; the committed
-BENCH_DETAIL.json stays the cross-round baseline.
+Times individual registry keys with bench.py's own timing loop
+(``bench._bench_keys``: construct + noop-sink execution, a cold pass,
+then N rotated warm rounds with its load guard) without paying for the
+whole headline suite. ``--runs`` sets ``SPARK_GRAFT_BENCH_RUNS`` for
+that loop. Used for before/after evidence in OPTIMIZATION_r14.md; the
+committed BENCH_DETAIL.json stays the cross-round baseline.
 
 Usage: python tools/key_bench.py key1 [key2 ...] [--runs N] [--sf DIR]
        python tools/key_bench.py --explain key1 ...   (print formatted plans)
@@ -13,9 +14,7 @@ Usage: python tools/key_bench.py key1 [key2 ...] [--runs N] [--sf DIR]
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -26,8 +25,7 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    runs = 3
+    args = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     explain = False
     keys: list[str] = []
@@ -35,7 +33,7 @@ def main() -> int:
     while i < len(args):
         a = args[i]
         if a == "--runs":
-            runs = int(args[i + 1]); i += 2
+            os.environ["SPARK_GRAFT_BENCH_RUNS"] = args[i + 1]; i += 2
         elif a == "--sf":
             sf_dir = args[i + 1]; i += 2
         elif a == "--explain":
@@ -43,6 +41,7 @@ def main() -> int:
         else:
             keys.append(a); i += 1
 
+    from bench import _bench_keys  # reads SPARK_GRAFT_BENCH_RUNS at import
     from snowflake_to_postgres_spark.registry import queries
     from snowflake_to_postgres_spark.session import get_spark
 
@@ -65,32 +64,13 @@ def main() -> int:
         spark.stop()
         return 0
 
-    cold: dict[str, float] = {}
-    for k in keys:
-        spark.sparkContext.setJobDescription(f"key_bench cold {k}")
-        t0 = time.perf_counter()
-        qs[k](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        cold[k] = time.perf_counter() - t0
-
-    samples: dict[str, list[float]] = {k: [] for k in keys}
-    construct: dict[str, list[float]] = {k: [] for k in keys}
-    for r in range(runs):
-        rot = keys[r % len(keys):] + keys[: r % len(keys)]
-        for k in rot:
-            spark.sparkContext.setJobDescription(f"key_bench warm {k}")
-            t0 = time.perf_counter()
-            df = qs[k](spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            samples[k].append(time.perf_counter() - t0)
-            construct[k].append(t1 - t0)
-
+    r = _bench_keys(spark, qs, sf_dir, keys)
     print(f"{'key':34s} {'med':>7s} {'min':>7s} {'max':>7s} {'constr':>7s} {'cold':>7s}")
     for k in keys:
-        ts = samples[k]
+        lo, med, hi = r["query_spread"][k]
         print(
-            f"{k:34s} {statistics.median(ts):7.3f} {min(ts):7.3f} "
-            f"{max(ts):7.3f} {statistics.median(construct[k]):7.3f} {cold[k]:7.3f}"
+            f"{k:34s} {med:7.3f} {lo:7.3f} {hi:7.3f} "
+            f"{r['query_construct'][k]:7.3f} {r['query_cold'][k]:7.3f}"
         )
     spark.stop()
     return 0
