@@ -105,15 +105,11 @@ class TransferEngine:
         spark: SparkSession,
         checkpoint: CheckpointManager | None = None,
         target_format: str = "parquet",
-        csv_null_marker: str = r"\N",
-        repartition_to: int | None = None,
         target_jdbc=None,
     ) -> None:
         self.spark = spark
         self.checkpoint = checkpoint
         self.target_format = target_format
-        self.csv_null_marker = csv_null_marker
-        self.repartition_to = repartition_to
         #: JdbcConfig → targets are DATABASE TABLES, not paths: the
         #: reference's actual Snowflake→Postgres shape. The "path"
         #: argument is interpreted as the target table name.
@@ -156,8 +152,6 @@ class TransferEngine:
         # Observe row count during the write itself — no second scan.
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        if self.repartition_to:
-            df = df.repartition(self.repartition_to)
         if self.target_jdbc is not None:
             from snowflake_to_postgres_spark.sources.jdbc import write_jdbc
 
@@ -169,9 +163,7 @@ class TransferEngine:
             # legacy-compatible sink: the reference's COPY CSV protocol
             # (NULL '\N', data_transfer.py:288-292); Spark needs no
             # null-byte scrub because it never round-trips through text
-            writer = writer.option("nullValue", self.csv_null_marker).option(
-                "header", "true"
-            )
+            writer = writer.option("nullValue", r"\N").option("header", "true")
         writer.format(self.target_format).save(target_path)
         return obs.get["rows"]
 
@@ -270,21 +262,24 @@ def _in_parts(partition_col: str, parts: list):
 
 
 def _drop_partitions(
-    spark: SparkSession, target_path: str, partition_col: str, values: list
+    spark: SparkSession, target_path: str, partition_col: str, names: list
 ) -> None:
-    """Delete the hive partition directories of ``values`` under
-    ``target_path`` (a None value is the __HIVE_DEFAULT_PARTITION__)
-    through the Hadoop FileSystem API, which resolves the path's own
-    filesystem, so it works for any scheme the write did."""
+    """Delete the hive partition directories of ``names`` under
+    ``target_path`` through the Hadoop FileSystem API, which resolves
+    the path's own filesystem, so it works for any scheme the write did.
+    A name is the partition value as Spark's writer renders it,
+    ``CAST(value AS STRING)`` (None is the __HIVE_DEFAULT_PARTITION__):
+    Python's ``str`` differs for doubles (``12345678.5`` against the
+    writer's ``1.23456785E7``) and would name no directory."""
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    for v in values:
-        name = utils.getPartitionPathString(partition_col, None if v is None else str(v))
+    for value in names:
+        name = utils.getPartitionPathString(partition_col, value)
         jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{target_path.rstrip('/')}/{name}")
         jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
 
 
 def _rewrite_partitions(
-    spark: SparkSession, df: DataFrame, target_path: str, partition_col: str, affected: list
+    spark: SparkSession, df: DataFrame, target_path: str, partition_col: str, affected: dict
 ) -> int:
     """Write ``df`` into ``target_path``, drop the ``affected``
     partitions it emptied and return its row count. ``df`` is written
@@ -295,9 +290,10 @@ def _rewrite_partitions(
     ``affected`` value it did not produce is dropped. A write that fails
     drops nothing.
 
-    ``affected`` holds partition values typed as ``df``'s column, and
-    only those a caller may empty: a value that compares unequal to the
-    one written would drop a partition that was just rewritten."""
+    ``affected`` maps each partition value a caller may empty, typed as
+    ``df``'s column, to its directory value, ``CAST(value AS STRING)``
+    taken in the caller's collect of it. A value that compares unequal
+    to the one written would drop a partition that was just rewritten."""
     obs = Observation()
     (
         df.observe(
@@ -314,7 +310,9 @@ def _rewrite_partitions(
     )
     m = obs.get
     written = {v for (v,) in m["parts"]}
-    _drop_partitions(spark, target_path, partition_col, [v for v in affected if v not in written])
+    _drop_partitions(
+        spark, target_path, partition_col, [n for v, n in affected.items() if v not in written]
+    )
     return m["rows"]
 
 
@@ -411,7 +409,7 @@ def merge_upsert_partitioned(
         )
     # every partition in ``parts`` keeps the update rows: none is emptied
     n = _rewrite_partitions(
-        spark, partition_exchange(merged, partition_col), target_path, partition_col, []
+        spark, partition_exchange(merged, partition_col), target_path, partition_col, {}
     )
     return TransferStats("merge_upsert", n, time.perf_counter() - t0)
 
@@ -515,7 +513,7 @@ def compact_partitions(
         salted.repartition(sum(offenders.values()), partition_col, "_salt").drop("_salt"),
         target_path,
         partition_col,
-        [],  # every row of an offending partition is rewritten: none is emptied
+        {},  # every row of an offending partition is rewritten: none is emptied
     )
     return TransferStats("compact", n, time.perf_counter() - t0)
 
@@ -647,10 +645,12 @@ def repair_partitions(
     # would cancel it out of the repair entirely.
     fs = fp(src, "s").withColumnRenamed(partition_col, "_s_pt")
     ft = fp(tgt, "t").withColumnRenamed(partition_col, "_t_pt")
+    pt = F.coalesce(fs["_s_pt"], ft["_t_pt"])
     diff = fs.join(
         ft, fs["_s_pt"].eqNullSafe(ft["_t_pt"]), "full_outer"
     ).select(
-        F.coalesce(fs["_s_pt"], ft["_t_pt"]).alias(partition_col),
+        pt.alias(partition_col),
+        pt.cast("string").alias("_pt_name"),
         "s_n", "s_h", "t_n", "t_h",
     )
     rows = diff.collect()  # one row per partition
@@ -660,7 +660,7 @@ def repair_partitions(
     # them, so the rewrite drops them. Only these are passed as affected:
     # every other stale value has source rows, and the diff's coalesced
     # type may differ from the source column's
-    extra = [r[partition_col] for r in stale_rows if r["s_n"] is None]
+    extra = {r[partition_col]: r["_pt_name"] for r in stale_rows if r["s_n"] is None}
     rewritten = 0
     if stale:
         slice_ = src.filter(_in_parts(partition_col, stale))
@@ -707,7 +707,9 @@ def delete_keys_partitioned(
     k = keys.select(*key_cols).distinct()
     target = spark.read.parquet(target_path)  # one listing for both uses
     idx = target.select(*key_cols, partition_col).join(k, key_cols, "left_semi")
-    parts = [r[0] for r in idx.select(partition_col).distinct().collect()]
+    pcol = F.col(partition_col)
+    # partition value -> its directory value, as Spark's writer names it
+    parts = dict(idx.select(pcol, pcol.cast("string")).distinct().collect())
     if not parts:
         return TransferStats("delete_keys", 0, time.perf_counter() - t0)
 

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from snowflake_to_postgres_spark.operators.common import partition_exchange
 from snowflake_to_postgres_spark.sources import (
@@ -158,11 +159,14 @@ def ingest_dedup_against_corpus(events: DataFrame, ingested: DataFrame) -> DataF
     return dedup_events_within_watermark(fresh)
 
 
-def run_available_now(stream_df: DataFrame, checkpoint_dir: str, out_dir: str) -> None:
+def run_available_now(
+    stream_df: DataFrame, checkpoint_dir: str, out_dir: str
+) -> StreamingQuery:
     """Drain everything currently available and stop — the Structured
     Streaming replacement for the reference's checkpoint-resume batch
     loop (O3/O4): re-running after a crash resumes from the checkpoint,
-    per-file granularity, deterministic."""
+    per-file granularity, deterministic. Returns the terminated query
+    (its ``recentProgress`` is the run's per-batch telemetry)."""
     q = (
         stream_df.writeStream.format("parquet")
         .option("path", out_dir)
@@ -172,6 +176,28 @@ def run_available_now(stream_df: DataFrame, checkpoint_dir: str, out_dir: str) -
         .start()
     )
     q.awaitTermination()
+    return q
+
+
+def _drain(stream: DataFrame, checkpoint_dir: str, handle) -> None:
+    """THE foreachBatch sink: drain everything currently available
+    (``Trigger.AvailableNow``) under ``checkpoint_dir`` and call
+    ``handle(batch, batch_id)`` on every non-empty micro-batch. An empty
+    batch has no rows to write, so skipping it changes no output — and
+    stateful handlers then never write state for it (``_prune_state``
+    keeps the two newest EXISTING partitions for exactly that reason)."""
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            handle(batch, batch_id)
+
+    (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def run_windowed_counts_available_now(
@@ -179,16 +205,9 @@ def run_windowed_counts_available_now(
 ) -> None:
     """End-to-end incremental pipeline: parquet stream → watermarked
     window agg → parquet sink, exactly-once via checkpoint."""
-    agg = windowed_event_counts(read_events_stream(spark, sf_dir))
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        windowed_event_counts(read_events_stream(spark, sf_dir)), checkpoint_dir, out_dir
     )
-    q.awaitTermination()
 
 
 def session_window_agg(
@@ -494,8 +513,6 @@ def upsert_latest_stream(
         events = events.filter(F.col("ts") >= F.lit(since))
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         merge_upsert_partitioned(
             batch.sparkSession,
             target_path,
@@ -507,13 +524,7 @@ def upsert_latest_stream(
             check_moved_keys=False,
         )
 
-    (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(events, checkpoint_dir, handle)
 
 
 ATTRIB_OUTPUT_DDL = (
@@ -718,13 +729,7 @@ def run_quarantine_split_available_now(
         finally:
             batch.unpersist()
 
-    (
-        tagged.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(tagged, checkpoint_dir, handle)
 
 
 def drain_with_progress(
@@ -755,15 +760,7 @@ def drain_with_progress(
     prior = spark.conf.get(conf_key, "100")
     spark.conf.set(conf_key, str(max(int(prior), 100_000)))
     try:
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        q = run_available_now(stream_df, checkpoint_dir, out_dir)
     finally:
         spark.conf.set(conf_key, prior)
     # recentProgress holds the engine's full per-batch history for the
@@ -886,8 +883,6 @@ def scd2_stream(
         events = events.filter(F.col("ts") >= F.lit(since))
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         sp = batch.sparkSession
         if batch_log is not None:
             batch.write.mode("overwrite").parquet(
@@ -899,13 +894,7 @@ def scd2_stream(
         new_hist = scd2_apply_events(hist, batch).localCheckpoint(eager=True)
         new_hist.write.mode("overwrite").parquet(target_path)
 
-    (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(events, checkpoint_dir, handle)
 
 
 def drift_stream(
@@ -932,10 +921,10 @@ def drift_stream(
     snapshot.
 
     Idempotence under at-least-once delivery: each batch's monitor rows
-    land at ``batch=<id>`` with mode=overwrite, so a replayed batch
-    rewrites identical content (the scoring is deterministic in the
-    batch's rows) and a restart on the same checkpoint appends
-    nothing."""
+    land at ``batch=<id>`` with mode=overwrite (the _run_batch_monitor
+    contract), so a replayed batch rewrites identical content (the
+    scoring is deterministic in the batch's rows) and a restart on the
+    same checkpoint appends nothing."""
     from snowflake_to_postgres_spark.operators.validation import (
         psi_reference_artifacts,
         psi_score_vs_reference,
@@ -967,15 +956,8 @@ def drift_stream(
             "drop the columns explicitly"
         )
 
-    if events is None:  # tests inject a chunked multi-batch source
-        events = read_events_stream(spark, sf_dir)
-    if since is not None:
-        events = events.filter(F.col("ts") >= F.lit(since))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        report = psi_score_vs_reference(
+    def report(batch: DataFrame, batch_id: int) -> DataFrame:
+        return psi_score_vs_reference(
             bounds,
             ref_counts,
             ref_meta,
@@ -983,16 +965,10 @@ def drift_stream(
             score_cols,
             "batch_id",
         )
-        report.write.mode("overwrite").parquet(
-            os.path.join(monitor_path, f"batch={batch_id}")
-        )
 
-    (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_batch_monitor(
+        spark, sf_dir, monitor_path, checkpoint_dir, report,
+        since=since, events=events,
     )
 
 
@@ -1006,31 +982,24 @@ def _run_batch_monitor(
     events: DataFrame | None = None,
 ) -> None:
     """The ONE copy of the foreachBatch monitor discipline shared by
-    the orphan / heavy-hitters / cardinality monitors: AvailableNow
-    drain, optional since-filter, empty-batch skip, and the
-    idempotence contract — each batch's report lands at ``batch=<id>``
-    with mode=overwrite, so a replayed batch rewrites identical content
-    and a restart on the same checkpoint appends nothing. ``report_fn``
-    maps (batch_frame, batch_id) → the bounded report DataFrame."""
+    the drift / orphan / heavy-hitters / cardinality / mixture monitors:
+    an AvailableNow :func:`_drain` (which skips empty batches), the
+    optional since-filter, and the idempotence contract — each batch's
+    report lands at ``batch=<id>`` with mode=overwrite, so a replayed
+    batch rewrites identical content and a restart on the same
+    checkpoint appends nothing. ``report_fn`` maps (batch_frame,
+    batch_id) → the bounded report DataFrame."""
     if events is None:  # tests inject a chunked multi-batch source
         events = read_events_stream(spark, sf_dir)
     if since is not None:
         events = events.filter(F.col("ts") >= F.lit(since))
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         report_fn(batch, batch_id).write.mode("overwrite").parquet(
             os.path.join(monitor_path, f"batch={batch_id}")
         )
 
-    (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(events, checkpoint_dir, handle)
 
 
 def orphan_audit_stream(
@@ -1056,7 +1025,7 @@ def orphan_audit_stream(
     Idempotence under at-least-once delivery: each batch's monitor row
     lands at ``batch=<id>`` with mode=overwrite, so a replayed batch
     rewrites identical content and a restart on the same checkpoint
-    appends nothing (the drift_stream discipline)."""
+    appends nothing (the _run_batch_monitor contract)."""
     from snowflake_to_postgres_spark.operators.validation import fk_orphan_counts
 
     if parent_keys is None:
@@ -1101,7 +1070,7 @@ def heavy_hitters_stream(
     Idempotence under at-least-once delivery: each batch's rows land at
     ``batch=<id>`` with mode=overwrite, so a replayed batch rewrites
     identical content and a restart on the same checkpoint appends
-    nothing (the drift_stream / orphan_audit_stream discipline)."""
+    nothing (the _run_batch_monitor contract)."""
     from snowflake_to_postgres_spark.operators.analytics_ext import (
         HH_TOP,
         cms_heavy_hitters_by_group,
@@ -1140,15 +1109,15 @@ def mixture_stream(
     source whose dev_ppm spikes is flooding the corpus NOW, batches
     before the built corpus would show it.
 
-    Targets are reduced ONCE at setup to a literal frame (the
-    drift_stream discipline — a monitor ships its frozen reference, not
-    a per-batch recomputation; bounded by the catalog-sized source
-    domain). A source absent from the frozen targets surfaces with NULL
-    target/dev rather than being dropped.
+    Targets are reduced ONCE at setup to a literal frame, as
+    drift_stream freezes its reference: a monitor ships its frozen
+    reference, not a per-batch recomputation (bounded by the
+    catalog-sized source domain). A source absent from the frozen
+    targets surfaces with NULL target/dev rather than being dropped.
 
     Idempotence under at-least-once delivery: each batch's rows land at
-    ``batch=<id>`` with mode=overwrite — the drift/orphan/heavy-hitters
-    discipline (via the shared _run_batch_monitor)."""
+    ``batch=<id>`` with mode=overwrite — the _run_batch_monitor
+    contract."""
     from snowflake_to_postgres_spark.operators.pipeline_ext import (
         mixture_share_by_group,
         mixture_targets,
@@ -1194,15 +1163,30 @@ def _state_batch_ids(spark: SparkSession, state_path: str) -> "list[int]":
     return sorted(ids)
 
 
-def _latest_state_below(
-    spark: SparkSession, state_path: str, batch_id: int
-) -> "str | None":
-    """Path of the newest state partition with id < batch_id (None on
-    the first batch). Never reads more than ONE partition's footers."""
+def _prior_state(
+    spark: SparkSession, state_path: str, batch_id: int, schema: str
+) -> DataFrame:
+    """The state batch ``batch_id`` starts from: the newest state
+    partition with id < batch_id, projected to ``schema``'s columns, or
+    an empty frame of ``schema`` on the first batch. Never reads more
+    than ONE partition's footers."""
+    empty = spark.createDataFrame([], schema)
     prior = [b for b in _state_batch_ids(spark, state_path) if b < batch_id]
     if not prior:
-        return None
-    return os.path.join(state_path, f"batch={prior[-1]}")
+        return empty
+    return spark.read.parquet(
+        os.path.join(state_path, f"batch={prior[-1]}")
+    ).select(*empty.columns)
+
+
+def _commit_state(state: DataFrame, state_path: str, batch_id: int) -> None:
+    """Write batch ``batch_id``'s state at ``state/batch=<id>``
+    (overwrite: a replayed batch rewrites it), then prune — only once
+    that write has committed."""
+    state.write.mode("overwrite").parquet(
+        os.path.join(state_path, f"batch={batch_id}")
+    )
+    _prune_state(state.sparkSession, state_path, batch_id)
 
 
 def _prune_state(spark: SparkSession, state_path: str, batch_id: int) -> None:
@@ -1262,7 +1246,7 @@ def quota_sample_stream(
     scan are O(1), not O(#batches). Keeping N-1 alongside N is exactly
     what at-least-once replay needs: the only batch Structured
     Streaming can re-deliver after a crash is the last uncommitted one,
-    and its prior state is N-1. prior_counts never reads more than ONE
+    and its prior state is N-1. _prior_state never reads more than ONE
     partition (the latest below the current batch id), found by listing
     directory names — no parquet footers are touched for superseded
     batches even before they are pruned."""
@@ -1276,16 +1260,10 @@ def quota_sample_stream(
     if docs is None:
         docs = read_documents_stream(spark, sf_dir)
 
-    def prior_counts(batch_id: int) -> DataFrame:
-        latest = _latest_state_below(spark, state_path, batch_id)
-        if latest is None:  # first batch: no state yet
-            return spark.createDataFrame([], "source string, admitted bigint")
-        return spark.read.parquet(latest).select("source", "admitted")
-
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prior = prior_counts(batch_id)
+        prior = _prior_state(
+            spark, state_path, batch_id, "source string, admitted bigint"
+        )
         w = Window.partitionBy("source").orderBy(
             F.col("n_chars").desc(), "doc_id"
         )
@@ -1320,18 +1298,9 @@ def quota_sample_stream(
         state = new_counts.unionByName(carried).withColumn(
             "bid", F.lit(batch_id).cast("bigint")
         )
-        state.write.mode("overwrite").parquet(
-            os.path.join(state_path, f"batch={batch_id}")
-        )
-        _prune_state(spark, state_path, batch_id)
+        _commit_state(state, state_path, batch_id)
 
-    (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(docs, checkpoint_dir, handle)
 
 
 def cardinality_stream(
@@ -1352,7 +1321,7 @@ def cardinality_stream(
     algebra) without touching the raw stream again.
 
     Idempotence: batch=<id> partitions, mode=overwrite — the
-    drift/orphan/heavy-hitters discipline."""
+    _run_batch_monitor contract."""
     from snowflake_to_postgres_spark.operators.analytics_ext import (
         hll_estimate_cols,
         hll_fold_by_group,
@@ -1424,8 +1393,6 @@ def quality_gate_stream(
     half = QL_SCALE // 2
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         # n_in counts the BATCH, not the scored frame: token-less docs
         # drop out of quality_features_from's join (never admitted) and
         # must still be accounted as rejected input (session-2
@@ -1449,13 +1416,7 @@ def quality_gate_stream(
         )
         scored.unpersist()
 
-    (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(docs, checkpoint_dir, handle)
 
 
 CUSUM_STREAM_K_DIV = 10  # allowance = 10% of each batch's expectation
@@ -1522,18 +1483,9 @@ def cusum_stream(
     )
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         total = batch.count()
         counts = batch.groupBy("event_type").agg(F.count("*").alias("cnt"))
-        latest = _latest_state_below(spark, state_path, batch_id)
-        prior = (
-            spark.read.parquet(latest).select(
-                "event_type", "s_hi", "s_lo", "cum_exp", "n_batches"
-            )
-            if latest is not None
-            else spark.createDataFrame([], state_schema)
-        )
+        prior = _prior_state(spark, state_path, batch_id, state_schema)
         # every frozen type gets a row each batch (cnt 0 when absent);
         # unknown types join with target 0 via the outer side
         # full_outer on prior too: a type seen before (even an unknown
@@ -1587,21 +1539,14 @@ def cusum_stream(
         report.write.mode("overwrite").parquet(
             os.path.join(monitor_path, f"batch={batch_id}")
         )
-        stepped.select(
-            "event_type", "s_hi", "s_lo", "cum_exp", "n_batches"
-        ).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_path, f"batch={batch_id}"))
+        _commit_state(
+            stepped.select("event_type", "s_hi", "s_lo", "cum_exp", "n_batches"),
+            state_path,
+            batch_id,
+        )
         stepped.unpersist()
-        _prune_state(spark, state_path, batch_id)
 
-    (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(events, checkpoint_dir, handle)
 
 
 TOPK_STREAM_K = 10
@@ -1639,17 +1584,7 @@ def topk_stream(
     )
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        latest = _latest_state_below(spark, state_path, batch_id)
-        prior = (
-            spark.read.parquet(latest).select(
-                "event_type", "event_id", "value"
-            )
-            if latest is not None
-            else spark.createDataFrame([], state_schema)
-        )
-        merged = prior.unionByName(
+        merged = _prior_state(spark, state_path, batch_id, state_schema).unionByName(
             batch.select("event_type", "event_id", "value")
         )
         new_state = (
@@ -1657,15 +1592,6 @@ def topk_stream(
             .filter(F.col("rnk") <= TOPK_STREAM_K)
             .drop("rnk")
         )
-        new_state.write.mode("overwrite").parquet(
-            os.path.join(state_path, f"batch={batch_id}")
-        )
-        _prune_state(spark, state_path, batch_id)
+        _commit_state(new_state, state_path, batch_id)
 
-    (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(events, checkpoint_dir, handle)

@@ -19,6 +19,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from snowflake_to_postgres_spark.streaming.pipeline import _drain
+
 
 ROLLUP_KEYS = ["bucket_start", "event_type"]
 
@@ -78,10 +80,4 @@ def run_continuous_rollup(
     def fold(batch: DataFrame, batch_id: int) -> None:
         merge_rollup(spark, _partials(batch, granularity), rollup_dir)
 
-    q = (
-        events_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events_stream, checkpoint_dir, fold)

@@ -805,6 +805,43 @@ def test_orphan_audit_stream_parity_planted_and_idempotent(spark, sf_dir, tmp_pa
     assert again == rows
 
 
+def test_orphan_audit_stream_since_past_every_event_writes_nothing(
+    spark, sf_dir, tmp_path
+):
+    """A ``since`` later than every event empties each micro-batch after
+    the filter: both batches run and commit, and no ``batch=`` report
+    partition is written for either."""
+    import os
+
+    from snowflake_to_postgres_spark.sources import load_table
+    from snowflake_to_postgres_spark.streaming.pipeline import orphan_audit_stream
+
+    events = load_table(spark, sf_dir, "events")
+    n = events.count()
+    src = str(tmp_path / "src")
+    events.limit(n // 2).coalesce(1).write.parquet(f"{src}/chunk0.parquet")
+    events.subtract(events.limit(n // 2)).coalesce(1).write.parquet(
+        f"{src}/chunk1.parquet"
+    )
+    stream = (
+        spark.readStream.schema(events.schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .load(src)
+    )
+    monitor = str(tmp_path / "monitor")
+    ckpt = str(tmp_path / "ckpt")
+    orphan_audit_stream(
+        spark, sf_dir, monitor, ckpt, since="2999-01-01 00:00:00", events=stream
+    )
+
+    commits = os.listdir(os.path.join(ckpt, "commits"))
+    assert sorted(c for c in commits if not c.startswith(".")) == ["0", "1"]
+    written = os.listdir(monitor) if os.path.isdir(monitor) else []
+    assert not [d for d in written if d.startswith("batch=")]
+
+
 # ---------------------------------------------------------------------------
 # round-11 self-review fixes
 # ---------------------------------------------------------------------------

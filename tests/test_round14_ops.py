@@ -1404,24 +1404,25 @@ class TestPruneStateEmptyBatchSafety:
         import os
 
         from snowflake_to_postgres_spark.streaming.pipeline import (
+            _prior_state,
             _prune_state,
             _state_batch_ids,
         )
 
         state = str(tmp_path / "state")
-        df = spark.createDataFrame([("a", 1)], "k string, v long")
+        schema = "k string, v long"
         # batches 3 and 5 were empty: only 0, 2, 4, 6 wrote state
         for b in (0, 2, 4, 6):
-            df.write.parquet(os.path.join(state, f"batch={b}"))
+            spark.createDataFrame([(f"b{b}", b)], schema).write.parquet(
+                os.path.join(state, f"batch={b}")
+            )
         _prune_state(spark, state, 6)
         assert _state_batch_ids(spark, state) == [4, 6]
-        # replay of batch 6 after a crash still finds its prior (4),
+        # replay of batch 6 after a crash still reads its prior (4),
         # even though 4 < 6-1
-        from snowflake_to_postgres_spark.streaming.pipeline import (
-            _latest_state_below,
-        )
-
-        assert _latest_state_below(spark, state, 6).endswith("batch=4")
+        assert [tuple(r) for r in _prior_state(spark, state, 6, schema).collect()] == [
+            ("b4", 4)
+        ]
 
 
 class TestCusumUnknownTypeCarry:

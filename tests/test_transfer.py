@@ -809,6 +809,38 @@ def test_delete_and_repair_handle_null_partition(spark, tmp_path):
     assert spark.read.parquet(tgt).count() == 50
 
 
+def test_delete_and_repair_drop_exponent_form_partitions(spark, tmp_path):
+    """A partition emptied by a keyed delete, or present only in a
+    repair's target, is dropped under the directory Spark's writer named
+    (``_pt=1.23456785E7``), not one named from Python's ``str`` of the
+    value (``12345678.5``), which does not exist."""
+    from snowflake_to_postgres_spark.operators.transfer import (
+        delete_keys_partitioned,
+        repair_partitions,
+    )
+
+    rows = [(i, [12345678.5, 2.5][i % 2]) for i in range(80)]
+    df = spark.createDataFrame(rows, "k bigint, _pt double")
+    tgt = str(tmp_path / "tgt")
+    df.write.partitionBy("_pt").parquet(tgt)
+    assert os.path.isdir(os.path.join(tgt, "_pt=1.23456785E7"))
+
+    doomed = spark.createDataFrame([(i,) for i in range(0, 80, 2)], "k bigint")
+    assert delete_keys_partitioned(spark, tgt, doomed, ["k"]).rows == 0
+    assert not os.path.exists(os.path.join(tgt, "_pt=1.23456785E7"))
+    after = spark.read.parquet(tgt)
+    assert after.count() == 40
+    assert after.join(doomed, "k", "left_semi").count() == 0
+
+    src = str(tmp_path / "src")
+    df.filter(F.col("_pt") == 2.5).write.partitionBy("_pt").parquet(src)
+    df.write.mode("overwrite").partitionBy("_pt").parquet(tgt)
+    stats = repair_partitions(spark, src, tgt, "_pt")
+    assert stats["deleted_partitions"] == ["12345678.5"]
+    assert not os.path.exists(os.path.join(tgt, "_pt=1.23456785E7"))
+    assert spark.read.parquet(tgt).count() == 40
+
+
 def test_failed_rewrite_drops_no_partition(spark, tmp_path, monkeypatch):
     """Repair and delete drop partitions only after their write commits.
     When the write raises, every target file keeps its bytes and mtime:
