@@ -572,8 +572,6 @@ def cmd_drift(args) -> int:
     per-column profile diff — the monitoring pass a migrated warehouse
     schedules after every load. Composes the generic validation kernels
     (psi_drift / profile_drift) and prints one JSON object."""
-    import json
-
     from pyspark.sql import types as T
 
     from snowflake_to_postgres_spark.operators.validation import (
@@ -866,7 +864,8 @@ def cmd_validate(args) -> int:
 
 
 def cmd_migrate(args) -> int:
-    """O9 (sf_migrate.py:564-585): build → transfer → validate."""
+    """O9 (sf_migrate.py:564-585): transfer → validate. DDL is the
+    separate ``build`` verb."""
     rc = cmd_transfer(args)
     if rc:
         return rc

@@ -18,6 +18,7 @@ from snowflake_to_postgres_spark.operators.common import dec, one
 from snowflake_to_postgres_spark.registry import QuerySpec
 from snowflake_to_postgres_spark.sources import load_table
 from snowflake_to_postgres_spark.util.concurrency import run_actions
+from snowflake_to_postgres_spark.util.sqlview import temp_view_for
 
 SESSION_GAP_SEC = 1800
 
@@ -266,8 +267,8 @@ def x_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB shape: every stage is a map-side-combinable aggregate over
     a 3-value group key (exact+fingerprint one scan; register fold one
     scan over (g, 256) cells; bounds + histogram for the shared-bin
-    percentiles); the only driver work is interpolation over 3 groups
-    × bounded bins/registers — the threshold-literal pattern."""
+    percentiles); the interpolation windows over 3 groups × bounded
+    bins — nothing reaches the driver."""
     # Round 15 (guide §7.3 / §2.6): the four collect jobs (three
     # overlapped in round 14 + the dependent histogram job) and the
     # driver-side interpolation/createDataFrame now build as ONE
@@ -275,13 +276,13 @@ def x_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the four aggregates become independent STAGES of one job (the
     # scheduler overlaps them without a thread pool), the global price
     # bounds enter the binning as uncorrelated scalar subqueries
-    # instead of driver literals, and the percentile interpolation is
-    # the oracle's own window + first-qualifying-bin pick (explode of
-    # the 3 q-values over the bounded histogram — an equi-join plus a
-    # generator, never an ON TRUE join, so no BNLJ). Every float op
-    # keeps the Python tree term for term (D-suffixed literals; the
-    # estimate expression is _hll_est_parts' SQL replay, ln forgiven by
-    # the 1e6 grid as at HLL_EST_GRID). Paired ABAB and exceptAll both
+    # instead of driver literals, and the percentiles are _qb_sql, the
+    # binned-quantile sketch a21/a23 share (window sums plus an explode
+    # of the 3 q-values — a generator, never an ON TRUE join, so no
+    # BNLJ). Every float op keeps the Python tree term for term
+    # (D-suffixed literals; the estimate expression is
+    # _HLL_EST_SPARK_SQL, ln forgiven by the 1e6 grid as at
+    # HLL_EST_GRID). Paired ABAB and exceptAll both
     # ways prove time and values; {li} is uncached so the
     # util/sqlview temp-view rule does not apply.
     #
@@ -292,20 +293,6 @@ def x_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split); the shared projection is NOT persisted (measured slower
     # than three column-pruned re-scans, round-13 note).
     li = load_table(spark, sf_dir, "lineitem")
-    est_sql = (
-        f"CASE WHEN ((0.7213D / (1.0D + 1.079D / {float(HLL_M)!r}D))"
-        f" * {float(HLL_M)!r}D * {float(HLL_M)!r}D"
-        f" * {float(_HLL_SCALE)!r}D / CAST(s_scaled AS DOUBLE))"
-        f" <= {2.5 * HLL_M!r}D AND v_zero > 0"
-        f" THEN floor({HLL_M} * ln({HLL_M} / CAST(v_zero AS DOUBLE))"
-        f" * {HLL_EST_GRID!r}D + 0.5D) / {HLL_EST_GRID!r}D"
-        f" ELSE floor(((0.7213D / (1.0D + 1.079D / {float(HLL_M)!r}D))"
-        f" * {float(HLL_M)!r}D * {float(HLL_M)!r}D"
-        f" * {float(_HLL_SCALE)!r}D / CAST(s_scaled AS DOUBLE))"
-        f" * {HLL_EST_GRID!r}D + 0.5D) / {HLL_EST_GRID!r}D END"
-    )
-    mn_sq = "(SELECT MIN(x) FROM src)"
-    mx_sq = "(SELECT MAX(x) FROM src)"
     return spark.sql(
         f"""
 WITH exact AS (
@@ -343,32 +330,7 @@ scalars AS (
 src AS (
   SELECT l_returnflag AS g, CAST(l_extendedprice AS DOUBLE) AS x FROM {{li}}
 ),
-hist AS (
-  SELECT g,
-         CASE WHEN {mx_sq} = {mn_sq} THEN 0
-              ELSE CAST(LEAST({QB_BINS - 1},
-                floor((x - {mn_sq}) / ({mx_sq} - {mn_sq}) * {QB_BINS}))
-                AS INT) END AS bin,
-         COUNT(*) AS n
-  FROM src GROUP BY 1, 2
-),
-cumq AS (
-  SELECT g, bin, n, cb, q
-  FROM (SELECT g, bin, n,
-               COALESCE(SUM(n) OVER (PARTITION BY g ORDER BY bin
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-        FROM hist)
-  LATERAL VIEW explode(array(0.5D, 0.95D, 0.99D)) t AS q
-),
-tot AS (SELECT g, SUM(n) AS total FROM hist GROUP BY g),
-pick AS (
-  SELECT g, q, estimate FROM (
-    SELECT c.g, c.q,
-           {mn_sq} + (c.bin + (c.q * t.total - c.cb) / c.n)
-                     * (({mx_sq} - {mn_sq}) / {QB_BINS}) AS estimate,
-           ROW_NUMBER() OVER (PARTITION BY c.g, c.q ORDER BY c.bin) AS rn
-    FROM cumq c JOIN tot t ON t.g = c.g AND c.cb + c.n >= c.q * t.total
-  ) WHERE rn = 1
+pick AS ({_qb_sql('src', QB_BINS, (0.5, 0.95, 0.99), True)}
 ),
 pcts AS (
   SELECT g, MAX(CASE WHEN q = 0.5D THEN estimate END) AS p50,
@@ -376,7 +338,7 @@ pcts AS (
          MAX(CASE WHEN q = 0.99D THEN estimate END) AS p99
   FROM pick GROUP BY g
 )
-SELECT base.g AS l_returnflag, exact.exact_orders, {est_sql} AS hll_orders,
+SELECT base.g AS l_returnflag, exact.exact_orders, {_HLL_EST_SPARK_SQL} AS hll_orders,
        base.fp_xor, pcts.p50, pcts.p95, pcts.p99
 FROM base
 JOIN exact ON exact.g = base.g
@@ -2139,9 +2101,9 @@ def _hll_alpha() -> float:
 
 def _hll_est_parts(k_used: int, s_hit: int) -> tuple:
     """(v_zero, s_scaled, grid-snapped estimate) from a register fold —
-    the driver-side copy of the estimator math shared by a18, a22's
-    merge, and the generic hll_estimate kernel (round-9 review finding:
-    it existed in three). Since round 12 a COLUMN-expression twin
+    the driver-side copy of the estimator math, used by the generic
+    hll_estimate kernel; a18 and x_approx_sketches replay it in SQL
+    (_HLL_EST_SPARK_SQL). Since round 12 a COLUMN-expression twin
     exists (:func:`hll_estimate_cols`, for grouped/streaming consumers
     that must not collect); the two are pinned to produce the identical
     double by test_column_estimator_matches_driver_twin — change the
@@ -2154,6 +2116,23 @@ def _hll_est_parts(k_used: int, s_hit: int) -> tuple:
     if est <= 2.5 * HLL_M and v_zero > 0:
         est = HLL_M * math.log(HLL_M / float(v_zero))
     return v_zero, s_scaled, math.floor(est * HLL_EST_GRID + 0.5) / HLL_EST_GRID
+
+
+#: Spark-SQL replay of :func:`_hll_est_parts` over (v_zero, s_scaled)
+#: columns: D-suffixed double literals, term for term the Python tree,
+#: so both produce the same double (ln is forgiven by the 1e6 grid).
+_HLL_EST_SPARK_SQL = (
+    f"CASE WHEN ((0.7213D / (1.0D + 1.079D / {float(HLL_M)!r}D))"
+    f" * {float(HLL_M)!r}D * {float(HLL_M)!r}D"
+    f" * {float(_HLL_SCALE)!r}D / CAST(s_scaled AS DOUBLE))"
+    f" <= {2.5 * HLL_M!r}D AND v_zero > 0"
+    f" THEN floor({HLL_M} * ln({HLL_M} / CAST(v_zero AS DOUBLE))"
+    f" * {HLL_EST_GRID!r}D + 0.5D) / {HLL_EST_GRID!r}D"
+    f" ELSE floor(((0.7213D / (1.0D + 1.079D / {float(HLL_M)!r}D))"
+    f" * {float(HLL_M)!r}D * {float(HLL_M)!r}D"
+    f" * {float(_HLL_SCALE)!r}D / CAST(s_scaled AS DOUBLE))"
+    f" * {HLL_EST_GRID!r}D + 0.5D) / {HLL_EST_GRID!r}D END"
+)
 
 
 def _a18_hll_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -2205,25 +2184,13 @@ def a18_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     two driver round trips. Neither substituted frame is cached, so
     the util/sqlview rule does not apply."""
     frames = _a18_hll_frames(spark, sf_dir)
-    est_sql = (
-        f"CASE WHEN ((0.7213D / (1.0D + 1.079D / {float(HLL_M)!r}D))"
-        f" * {float(HLL_M)!r}D * {float(HLL_M)!r}D"
-        f" * {float(_HLL_SCALE)!r}D / CAST(s_scaled AS DOUBLE))"
-        f" <= {2.5 * HLL_M!r}D AND v_zero > 0"
-        f" THEN floor({HLL_M} * ln({HLL_M} / CAST(v_zero AS DOUBLE))"
-        f" * {HLL_EST_GRID!r}D + 0.5D) / {HLL_EST_GRID!r}D"
-        f" ELSE floor(((0.7213D / (1.0D + 1.079D / {float(HLL_M)!r}D))"
-        f" * {float(HLL_M)!r}D * {float(HLL_M)!r}D"
-        f" * {float(_HLL_SCALE)!r}D / CAST(s_scaled AS DOUBLE))"
-        f" * {HLL_EST_GRID!r}D + 0.5D) / {HLL_EST_GRID!r}D END"
-    )
     return spark.sql(
         f"""
 SELECT CAST({HLL_M} AS INT) AS m, v_zero, s_scaled,
-       {est_sql} AS hll_estimate,
+       {_HLL_EST_SPARK_SQL} AS hll_estimate,
        exact_distinct,
        CASE WHEN exact_distinct = 0 THEN 0.0D
-            ELSE abs(({est_sql}) - CAST(exact_distinct AS DOUBLE))
+            ELSE abs(({_HLL_EST_SPARK_SQL}) - CAST(exact_distinct AS DOUBLE))
                  / CAST(exact_distinct AS DOUBLE)
        END AS rel_error
 FROM (
@@ -2695,48 +2662,56 @@ SPECS.append(
 QB_BINS = 1024
 QB_QUANTILES = (0.5, 0.9, 0.99)
 
-#: Ceiling on |groups| for the grouped-sketch operators that collect one
-#: (or bins-many) row(s) PER GROUP to the driver (a22's per-group
-#: register folds, a23's group×bin histogram). The registered queries
-#: group on single-character / enum keys (≤5 groups); the guard exists
-#: for the generic reuse path, mirroring dedup_ngram_jaccard_pairs'
-#: estimate+raise discipline (round-9 verdict #3).
-SKETCH_MAX_GROUPS = 10_000
+
+def _qb_bounds(src: str) -> str:
+    """The global (mn, mx) of ``src.x`` as one struct scalar subquery;
+    Spark reuses it at every place the same text is referenced."""
+    return f"(SELECT struct(MIN(x) AS mn, MAX(x) AS mx) FROM {src})"
 
 
-def _guard_group_cardinality(
-    df: DataFrame, gcol: str, op_name: str, fallback: str, max_groups: int
-) -> None:
-    """Raise before any per-group driver collect when the group key's
-    cardinality exceeds ``max_groups`` — one cheap exact countDistinct
-    (a single map-side-combinable aggregate), so a high-cardinality key
-    fails fast with a pointer at the distributed alternative instead of
-    silently materializing an unbounded histogram on the driver."""
-    n_groups = df.agg(F.countDistinct(gcol).alias("n")).collect()[0]["n"]
-    if n_groups > max_groups:
-        raise ValueError(
-            f"{op_name}: group key has {n_groups:,} distinct values, above "
-            f"max_groups={max_groups:,}; the per-group driver interpolation "
-            f"is bounded by |groups| — for high-cardinality keys use "
-            f"{fallback}, or raise max_groups explicitly if the driver-side "
-            f"cost is intended"
-        )
+def _qb_hist_sql(src: str, bins: int, grouped: bool) -> str:
+    """(g?, bin, n): the equi-width histogram of the non-NULL ``x`` of
+    relation ``src`` (columns ``(g?, x)``) over ``bins`` bins between
+    its global MIN and MAX — shared bounds keep per-group histograms
+    comparable and mergeable. A constant column sits in bin 0 (the
+    unguarded (x-mn)/(mx-mn) is 0/0)."""
+    g = "g, " if grouped else ""
+    return f"""
+SELECT {g}bin, COUNT(*) AS n FROM (
+  SELECT {g}CASE WHEN bd.mx = bd.mn THEN 0
+              ELSE CAST(LEAST({bins - 1},
+                floor((x - bd.mn) / (bd.mx - bd.mn) * {bins})) AS INT) END AS bin
+  FROM (SELECT {g}x, {_qb_bounds(src)} AS bd FROM {src} WHERE x IS NOT NULL) s
+) b GROUP BY {g}bin"""
 
 
-def _a21_hist_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Construction-phase plans for the audit: the min/max scalar pass
-    and the histogram fold (literal stand-in bounds)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_extendedprice").cast("double").alias("x")
-    )
-    bounds = li.agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-    mn, mx = 0.0, 100000.0  # literal stand-ins; the plan SHAPE is audited
-    b = F.least(
-        F.lit(QB_BINS - 1),
-        F.floor((F.col("x") - mn) / (mx - mn) * QB_BINS),
-    ).cast("int")
-    hist = li.select(b.alias("bin")).groupBy("bin").agg(F.count("*").alias("n"))
-    return {"bounds": bounds, "hist": hist}
+def _qb_sql(src: str, bins: int, qs, grouped: bool) -> str:
+    """(g?, q, estimate, bin, bin_lo, bin_n, err_bound): the binned
+    quantile sketch of relation ``src`` — for each (g, q) the first bin
+    whose cumulative count reaches q·total (the type-1 rank-ceil(q·N)
+    target), linearly interpolated inside that bin. The prior count
+    ``cb`` and ``total`` are window sums over the histogram, so no join
+    is needed; err_bound is one bin width. The float expressions are
+    the DuckDB oracles' term for term."""
+    g = "g, " if grouped else ""
+    by_g = "PARTITION BY g" if grouped else ""
+    width = f"((bd.mx - bd.mn) / {bins})"
+    q_arr = ", ".join(f"{float(q)!r}D" for q in qs)
+    return f"""
+SELECT {g}q, bd.mn + (bin + (q * total - cb) / n) * {width} AS estimate,
+       bin, bd.mn + bin * {width} AS bin_lo, n AS bin_n, {width} AS err_bound
+FROM (
+  SELECT {g}q, bin, n, cb, total, {_qb_bounds(src)} AS bd,
+         ROW_NUMBER() OVER (PARTITION BY {g}q ORDER BY bin) AS rn
+  FROM (
+    SELECT {g}bin, n,
+           COALESCE(SUM(n) OVER ({by_g} ORDER BY bin
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb,
+           SUM(n) OVER ({by_g}) AS total
+    FROM ({_qb_hist_sql(src, bins, grouped)}) h
+  ) c LATERAL VIEW explode(array({q_arr})) t AS q
+  WHERE cb + n >= q * total
+) p WHERE rn = 1"""
 
 
 def a21_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2752,62 +2727,19 @@ def a21_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-to-double casts in both engines — same operands, same
     order, so no boundary flip is possible); each estimate is one float
     interpolation over those integers, mirrored operation-for-operation
-    in the oracle. The histogram collect is bounded (≤ QB_BINS rows —
-    the threshold-literal pattern), never data-sized.
+    in the oracle. Empty input yields no rows; a constant column puts
+    every row in bin 0 with zero width.
 
     100-TB shape: two scans (bounds + fold), both fully partial-
-    aggregatable; the interpolation reads 1024 counters on the driver.
+    aggregatable; the interpolation windows over ≤ QB_BINS counters.
     t-digest/KLL trade determinism for adaptivity — an equi-width
     histogram is the variant whose every intermediate replays in SQL."""
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").cast("double").alias("x")
     )
-    brow = li.agg(
-        F.min("x").alias("mn"), F.max("x").alias("mx"), F.count("x").alias("cnt")
-    ).collect()[0]
-    mn, mx = brow["mn"], brow["mx"]
-    schema = (
-        "q DOUBLE, estimate DOUBLE, bin INT, bin_lo DOUBLE, "
-        "bin_n BIGINT, err_bound DOUBLE"
+    return spark.sql(
+        _qb_sql("{src}", QB_BINS, QB_QUANTILES, False) + "\nORDER BY q", src=li
     )
-    if mn is None:
-        return spark.createDataFrame([], schema)
-    if mx == mn:
-        # Constant column: everything sits in bin 0 with zero width —
-        # the same rows the oracle's guarded bin expression produces
-        # (the unguarded (x-mn)/(mx-mn) is 0/0 in BOTH engines;
-        # round-9 review finding).
-        total = int(brow["cnt"])
-        return spark.createDataFrame(
-            [(float(q), float(mn), 0, float(mn), total, 0.0)
-             for q in QB_QUANTILES],
-            schema,
-        )
-    b = F.least(
-        F.lit(QB_BINS - 1),
-        F.floor((F.col("x") - F.lit(mn)) / (F.lit(mx) - F.lit(mn)) * QB_BINS),
-    ).cast("int")
-    hist = sorted(
-        (r["bin"], r["n"])
-        for r in li.select(b.alias("bin")).groupBy("bin").agg(F.count("*").alias("n")).collect()
-    )
-    total = sum(n for _, n in hist)
-    width = (mx - mn) / QB_BINS
-    out = []
-    for q in QB_QUANTILES:
-        t = q * total  # exact: q is a power-of-ten-scaled literal
-        cum = 0
-        for bin_idx, bin_n in hist:
-            if cum + bin_n >= t:
-                frac = (t - cum) / bin_n
-                est = mn + (bin_idx + frac) * width
-                out.append(
-                    (float(q), float(est), int(bin_idx),
-                     float(mn + bin_idx * width), int(bin_n), float(width))
-                )
-                break
-            cum += bin_n
-    return spark.createDataFrame(out, schema)
 
 
 A21_QB_ORACLE = f"""
@@ -2854,19 +2786,10 @@ ORDER BY q
 """
 
 
-SPECS.append(
-    QuerySpec(
-        "a21_binned_quantiles",
-        a21_binned_quantiles,
-        A21_QB_ORACLE,
-        probes=_a21_hist_frames,
-    )
-)
+SPECS.append(QuerySpec("a21_binned_quantiles", a21_binned_quantiles, A21_QB_ORACLE))
 
 
-def a22_hll_union(
-    spark: SparkSession, sf_dir: str, max_groups: int = SKETCH_MAX_GROUPS
-) -> DataFrame:
+def a22_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL mergeability proof (the property the sketch exists for):
     build one register set per o_orderstatus partition, merge by
     register-wise MAX, and the merged estimate must equal — exactly,
@@ -2883,57 +2806,32 @@ def a22_hll_union(
 
     100-TB shape: identical to a18 plus one 256-row-per-group merge;
     the per-group register build is one map-side-combinable groupBy on
-    (group, register)."""
+    (group, register), and the estimator is :func:`hll_estimate_cols`'
+    column expressions — nothing reaches the driver."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("g"), F.col("o_custkey").alias("v")
     )
-    # the final collect is one row per group — gate |groups| first
-    _guard_group_cardinality(
-        o, "g", "a22_hll_union", "hll_fold per group (keep folds distributed)",
-        max_groups,
-    )
-    h = F.conv(F.substring(F.md5(F.col("v").cast("string")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-    hashed = o.select("g", h.alias("h"))
-    w = F.col("h") % _HLL_WMOD
-    rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-    )
     regs = (
-        hashed.select("g", F.expr(f"h div {_HLL_WMOD}").alias("j"), rho.alias("r"))
+        _hll_rho_frame(o, "v", ["g"])
         .groupBy("g", "j")
         .agg(F.max("r").alias("mj"))
-        .persist()
     )
-    per_group = regs.groupBy("g").agg(
-        F.count("*").alias("k_used"),
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({_HLL_WBITS + 1} - mj AS INT))")
-        ).alias("s_hit"),
-    )
+    fold = [F.count("*").alias("k_used"), F.sum(F.expr(_HLL_SHIFT_EXPR)).alias("s_hit")]
+    per_group = regs.groupBy("g").agg(*fold)
     merged = (
         regs.groupBy("j")
         .agg(F.max("mj").alias("mj"))
-        .agg(
-            F.count("*").alias("k_used"),
-            F.sum(
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), CAST({_HLL_WBITS + 1} - mj AS INT))"
-                )
-            ).alias("s_hit"),
+        .agg(*fold)
+        .select(
+            F.lit("__merged__").alias("g"),
+            "k_used",
+            F.coalesce("s_hit", F.lit(0)).alias("s_hit"),
         )
-        .select(F.lit("__merged__").alias("g"), "k_used", "s_hit")
     )
-    rows = per_group.select("g", "k_used", "s_hit").unionByName(merged).collect()
-    regs.unpersist()
-
-    out = []
-    for r in sorted(rows, key=lambda r: r["g"]):
-        v_zero, s_scaled, est = _hll_est_parts(r["k_used"], r["s_hit"])
-        out.append((r["g"], int(v_zero), int(s_scaled), float(est)))
-    return spark.createDataFrame(
-        out, "g STRING, v_zero BIGINT, s_scaled BIGINT, hll_estimate DOUBLE"
+    return (
+        hll_estimate_cols(per_group.unionByName(merged))
+        .select("g", "v_zero", "s_scaled", "hll_estimate")
+        .orderBy("g")
     )
 
 
@@ -3030,11 +2928,9 @@ ORDER BY 1
 
 
 def _x_approx_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Construction-phase plans for the audit (the a15/a18 pattern —
-    every collect in x_approx_sketches otherwise hides its aggregate
-    plan from the global guard): the exact+fingerprint agg, the
-    per-group register fold, and the shared-bin histogram (literal
-    stand-in bounds)."""
+    """Plan probe: x_approx_sketches' exact COUNT(DISTINCT) and md5
+    fingerprint as one groupBy (the key itself runs them as two
+    aggregates, see its note)."""
     li = load_table(spark, sf_dir, "lineitem")
     base = li.groupBy(F.col("l_returnflag").alias("g")).agg(
         F.countDistinct("l_orderkey").alias("exact_orders"),
@@ -3045,31 +2941,7 @@ def _x_approx_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             " 16, 10) AS BIGINT))"
         ).alias("fp_xor"),
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
-    w = F.col("h") % _HLL_WMOD
-    rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-    )
-    folds = (
-        li.select(F.col("l_returnflag").alias("g"), h.alias("h"))
-        .select("g", F.expr(f"h div {_HLL_WMOD}").alias("j"), rho.alias("r"))
-        .groupBy("g", "j")
-        .agg(F.max("r").alias("mj"))
-        .groupBy("g")
-        .agg(F.count("*").alias("k_used"))
-    )
-    b = F.least(
-        F.lit(QB_BINS - 1),
-        F.floor((F.col("l_extendedprice") - F.lit(0.0)) / F.lit(1000.0) * QB_BINS),
-    ).cast("int")
-    hist = (
-        li.select(F.col("l_returnflag").alias("g"), b.alias("bin"))
-        .groupBy("g", "bin")
-        .agg(F.count("*").alias("n"))
-    )
-    return {"base": base, "register_fold": folds, "histogram": hist}
+    return {"base": base}
 
 
 SPECS.append(
@@ -3118,35 +2990,7 @@ ORDER BY g
 """
 
 
-def _a22_hll_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Plan probes: the grouped register build — the PRODUCTION max-fold
-    expression, not a stand-in aggregate, so a regression in the
-    rho/max path surfaces in the audit (round-9 review finding). The
-    merge is a 256-row fold over this frame."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderstatus").alias("g"), F.col("o_custkey").alias("v")
-    )
-    h = F.conv(F.substring(F.md5(F.col("v").cast("string")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-    hashed = o.select("g", h.alias("h"))
-    w = F.col("h") % _HLL_WMOD
-    rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-    )
-    regs = (
-        hashed.select("g", F.expr(f"h div {_HLL_WMOD}").alias("j"), rho.alias("r"))
-        .groupBy("g", "j")
-        .agg(F.max("r").alias("mj"))
-    )
-    return {"grouped_registers": regs}
-
-
-SPECS.append(
-    QuerySpec(
-        "a22_hll_union", a22_hll_union, A22_HLL_UNION_ORACLE, probes=_a22_hll_frames
-    )
-)
+SPECS.append(QuerySpec("a22_hll_union", a22_hll_union, A22_HLL_UNION_ORACLE))
 
 
 def x_concurrency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3258,17 +3102,13 @@ SPECS.append(
 )
 
 
-def a23_grouped_quantiles(
-    spark: SparkSession, sf_dir: str, max_groups: int = SKETCH_MAX_GROUPS
-) -> DataFrame:
+def a23_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group binned quantiles — the shape the scale path actually
     ships as (p50/p99 latency per service, spend percentiles per
     segment): GLOBAL bounds from one pass (shared bins keep the
     histograms mergeable ACROSS groups — per-group bounds would make
     group sketches incomparable and un-unionable), one (group, bin)
-    fold, per-group interpolation over the collected histogram
-    (bounded: |groups| x occupied bins, the threshold-literal
-    pattern).
+    fold, per-group interpolation by window over the histogram.
 
     Same determinism argument as a21 (exact integers + one mirrored
     float interpolation); same err_bound contract — one bin width
@@ -3276,68 +3116,19 @@ def a23_grouped_quantiles(
 
     100-TB shape: two scans total for EVERY group at once — bounds +
     a single map-side-combinable (group, bin) aggregate; adding a
-    group adds histogram rows, never a pass."""
-    li = load_table(spark, sf_dir, "orders").select(
+    group adds histogram rows, never a pass, and nothing is collected,
+    so the group count is unbounded."""
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.col("o_totalprice").cast("double").alias("x"),
     )
-    # the histogram collect is |groups| × occupied bins — gate |groups|
-    # first (round-9 verdict: handed a high-cardinality key, the
-    # collect was unbounded)
-    _guard_group_cardinality(
-        li, "g", "a23_grouped_quantiles",
-        "per-group approx_percentile (stays distributed)", max_groups,
+    return spark.sql(
+        f"""
+SELECT g, q, estimate, bin, bin_n, err_bound
+FROM ({_qb_sql("{src}", QB_BINS, QB_QUANTILES, True)}) pick
+ORDER BY g, q""",
+        src=o,
     )
-    brow = li.agg(F.min("x").alias("mn"), F.max("x").alias("mx")).collect()[0]
-    mn, mx = brow["mn"], brow["mx"]
-    schema = (
-        "g STRING, q DOUBLE, estimate DOUBLE, bin INT, bin_n BIGINT, "
-        "err_bound DOUBLE"
-    )
-    if mn is None:
-        return spark.createDataFrame([], schema)
-    if mx == mn:
-        # same guarded degenerate contract as a21, per group
-        gcounts = {
-            r["g"]: r["n"]
-            for r in li.groupBy("g").agg(F.count("*").alias("n")).collect()
-        }
-        return spark.createDataFrame(
-            [(g, float(q), float(mn), 0, int(gcounts[g]), 0.0)
-             for g in sorted(gcounts) for q in QB_QUANTILES],
-            schema,
-        )
-    b = F.least(
-        F.lit(QB_BINS - 1),
-        F.floor((F.col("x") - F.lit(mn)) / (F.lit(mx) - F.lit(mn)) * QB_BINS),
-    ).cast("int")
-    hist_rows = (
-        li.select("g", b.alias("bin"))
-        .groupBy("g", "bin")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    by_g: dict = {}
-    for r in hist_rows:
-        by_g.setdefault(r["g"], []).append((r["bin"], r["n"]))
-    width = (mx - mn) / QB_BINS
-    out = []
-    for g in sorted(by_g):
-        hist = sorted(by_g[g])
-        total = sum(n for _, n in hist)
-        for q in QB_QUANTILES:
-            t = q * total
-            cum = 0
-            for bin_idx, bin_n in hist:
-                if cum + bin_n >= t:
-                    est = mn + (bin_idx + (t - cum) / bin_n) * width
-                    out.append(
-                        (g, float(q), float(est), int(bin_idx), int(bin_n),
-                         float(width))
-                    )
-                    break
-                cum += bin_n
-    return spark.createDataFrame(out, schema)
 
 
 A23_GQ_ORACLE = f"""
@@ -3585,32 +3376,6 @@ ORDER BY user_id
 
 
 SPECS.append(QuerySpec("x_activity_streaks", x_activity_streaks, X_STREAKS_ORACLE))
-
-
-def _a23_hist_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Plan probes for a23: the global-bounds pass and the (group, bin)
-    fold (literal stand-in bounds), mirroring _a21_hist_frames."""
-    li = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("g"),
-        F.col("o_totalprice").cast("double").alias("x"),
-    )
-    bounds = li.agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-    mn, mx = 0.0, 600000.0
-    b = F.least(
-        F.lit(QB_BINS - 1),
-        F.floor((F.col("x") - mn) / (mx - mn) * QB_BINS),
-    ).cast("int")
-    hist = li.select("g", b.alias("bin")).groupBy("g", "bin").agg(
-        F.count("*").alias("n")
-    )
-    return {"bounds": bounds, "grouped_hist": hist}
-
-
-# attach probes to the already-registered a23 spec (same QuerySpec slot)
-for _i, _s in enumerate(SPECS):
-    if _s.name == "a23_grouped_quantiles":
-        SPECS[_i] = QuerySpec(_s.name, _s.fn, _s.oracle, probes=_a23_hist_frames)
-        break
 
 
 #: Correlation-matrix columns (a25): the lineitem measures.
@@ -4063,45 +3828,15 @@ def cms_heavy_hitters_by_group(
 
 
 def binned_quantiles(df: DataFrame, col: str, qs=QB_QUANTILES) -> list:
-    """[(q, estimate, err_bound)]: a21's equi-width histogram estimator
-    (type-1 quantile target) over any frame/numeric column."""
-    # NULL rows are excluded up front: min/max already ignore NULLs,
-    # but F.least skips NULL too, so a NULL x would land in the TOP
-    # bin and silently shift every estimate (round-9 ADVICE).
-    src = df.select(F.col(col).cast("double").alias("x")).filter(
-        F.col("x").isNotNull()
-    )
-    brow = src.agg(F.min("x").alias("mn"), F.max("x").alias("mx")).collect()[0]
-    mn, mx = brow["mn"], brow["mx"]
-    if mn is None:
-        return []
-    if mx == mn:
-        return [(float(q), float(mn), 0.0) for q in qs]
-    b = F.least(
-        F.lit(QB_BINS - 1),
-        F.floor((F.col("x") - F.lit(mn)) / (F.lit(mx) - F.lit(mn)) * QB_BINS),
-    ).cast("int")
-    hist = sorted(
-        (r["bin"], r["n"])
-        for r in src.select(b.alias("bin")).groupBy("bin").agg(
-            F.count("*").alias("n")
-        ).collect()
-    )
-    total = sum(n for _, n in hist)
-    width = (mx - mn) / QB_BINS
-    out = []
-    for q in qs:
-        t = q * total
-        cum = 0
-        for bin_idx, bin_n in hist:
-            if cum + bin_n >= t:
-                out.append(
-                    (float(q), float(mn + (bin_idx + (t - cum) / bin_n) * width),
-                     float(width))
-                )
-                break
-            cum += bin_n
-    return out
+    """[(q, estimate, err_bound)] in ``qs`` order: a21's equi-width
+    histogram estimator (type-1 quantile target) over any frame/numeric
+    column; NULL rows are excluded, an all-NULL column gives []."""
+    # a temp view, not a spark.sql parameter: the caller's frame may be
+    # cached, and substitution would unregister it (util/sqlview.py)
+    src = temp_view_for(df.select(F.col(col).cast("double").alias("x")), "qb")
+    rows = df.sparkSession.sql(_qb_sql(src, QB_BINS, qs, False)).collect()
+    picks = {r["q"]: (r["q"], r["estimate"], r["err_bound"]) for r in rows}
+    return [picks[float(q)] for q in qs if float(q) in picks]
 
 
 # ---------------------------------------------------------------------------
@@ -4342,36 +4077,24 @@ def a26_hist_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     the __merged__ rows DIRECTLY from the raw rows (single pass), so
     the value-hash gate itself is the mergeability proof.
 
-    All counts exact integers; the bin expression is the a21 kernel's
-    (shared global bounds keep bins comparable across groups). 100-TB
+    All counts exact integers; the histogram is :func:`_qb_hist_sql`,
+    a21's sketch text (shared global bounds keep bins comparable across
+    groups). 100-TB
     shape: one (group, bin) map-side-combinable aggregate, one
     bin-keyed rollup over |groups|×bins rows — bounded metadata."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("g"),
         F.col("o_totalprice").cast("double").alias("x"),
     )
-    brow = o.agg(F.min("x").alias("mn"), F.max("x").alias("mx")).collect()[0]
-    mn, mx = brow["mn"], brow["mx"]
-    if mn is None or mx == mn:
-        b = F.lit(0)
-    else:
-        b = F.least(
-            F.lit(HIST_UNION_BINS - 1),
-            F.floor(
-                (F.col("x") - F.lit(mn)) / (F.lit(mx) - F.lit(mn))
-                * HIST_UNION_BINS
-            ),
-        ).cast("int")
-    per_group = o.select("g", b.alias("bin")).groupBy("g", "bin").agg(
-        F.count("*").alias("n")
-    )
-    merged = per_group.groupBy("bin").agg(F.sum("n").alias("n")).select(
-        F.lit("__merged__").alias("g"), "bin", "n"
-    )
-    return (
-        per_group.unionByName(merged)
-        .select("g", "bin", F.col("n").cast("bigint").alias("n"))
-        .orderBy("g", "bin")
+    return spark.sql(
+        f"""
+WITH per_group AS ({_qb_hist_sql("{src}", HIST_UNION_BINS, True)})
+SELECT g, bin, CAST(n AS BIGINT) AS n FROM per_group
+UNION ALL
+SELECT '__merged__' AS g, bin, CAST(SUM(n) AS BIGINT) AS n
+FROM per_group GROUP BY bin
+ORDER BY g, bin""",
+        src=o,
     )
 
 

@@ -624,7 +624,9 @@ def repair_partitions(
     validator's fingerprint kernel.
 
     Returns {"checked": n, "stale": [...], "deleted_partitions": [...],
-    "rewritten_rows": n}."""
+    "rewritten_rows": n}; partitions are named by their directory
+    value, as :func:`list_partition_files` keys them (``1.23456785E7``,
+    NULL as ``__HIVE_DEFAULT_PARTITION__``)."""
     t0 = time.perf_counter()
     src = spark.read.parquet(source_path)
     tgt = spark.read.parquet(target_path)
@@ -667,10 +669,11 @@ def repair_partitions(
         rewritten = _rewrite_partitions(
             spark, partition_exchange(slice_, partition_col), target_path, partition_col, extra
         )
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     return {
         "checked": len(rows),
-        "stale": sorted(map(str, stale)),
-        "deleted_partitions": sorted(map(str, extra)),
+        "stale": sorted(utils.getPartitionValueString(r["_pt_name"]) for r in stale_rows),
+        "deleted_partitions": sorted(utils.getPartitionValueString(n) for n in extra.values()),
         "rewritten_rows": rewritten,
         "seconds": round(time.perf_counter() - t0, 3),
     }

@@ -18,8 +18,6 @@ Classes:
   TOPK/LIMIT       explicit top-k / LIMIT before the collect
   SKETCH           register/bin/cell/centroid tables (the sketch's own
                    compactness contract)
-  GROUP-GUARDED    per-group collect behind an estimate+raise guard
-                   (SKETCH_MAX_GROUPS)
   PROBE/QUERY      bounded by the query/probe set, not the corpus
   PARTITION-META   touched-partition / per-file manifest metadata
   REPORT-CLI       CLI verb reports (top-k leaderboards, per-column
@@ -50,22 +48,17 @@ COLLECT_LEDGER: dict[tuple[str, str], tuple[int, str]] = {
     ("cli.py", "cmd_privacy_check"): (1, "REPORT-CLI"),
     ("cli.py", "cmd_quality_filter"): (1, "REPORT-CLI"),
     ("cli.py", "cmd_sketch"): (1, "REPORT-CLI"),
-    ("operators/analytics_ext.py", "_guard_group_cardinality"): (1, "SCALAR-1ROW"),
     ("operators/analytics_ext.py", "a15_kmv_distinct"): (2, "SKETCH"),
     # r14: the nested sketch() helper inlined into run_actions thunks —
     # two KMV sketch frames (K-bounded) + the 1-row exact baseline
     ("operators/analytics_ext.py", "a16_kmv_set_ops"): (3, "SKETCH"),
     ("operators/analytics_ext.py", "a20_bloom_membership"): (1, "SKETCH"),
-    ("operators/analytics_ext.py", "a21_binned_quantiles"): (2, "SKETCH"),
-    ("operators/analytics_ext.py", "a22_hll_union"): (1, "GROUP-GUARDED"),
-    ("operators/analytics_ext.py", "a23_grouped_quantiles"): (3, "GROUP-GUARDED"),
     ("operators/analytics_ext.py", "a24_cms_join_size"): (2, "SKETCH"),
     # join_plan_advice's nested hot(): share-thresholded (<1e6/SHARE_PPM
     # keys can qualify) + explicit .limit(JOIN_PLAN_HOT_TOP)
     ("operators/analytics_ext.py", "hot"): (1, "TOPK/LIMIT"),
     ("operators/analytics_ext.py", "a25_corr_matrix"): (1, "SCALAR-1ROW"),
-    ("operators/analytics_ext.py", "a26_hist_union"): (1, "SKETCH"),
-    ("operators/analytics_ext.py", "binned_quantiles"): (2, "SKETCH"),
+    ("operators/analytics_ext.py", "binned_quantiles"): (1, "SKETCH"),
     ("operators/analytics_ext.py", "cms_heavy_hitters"): (2, "SKETCH"),
     ("operators/analytics_ext.py", "hll_estimate"): (1, "SKETCH"),
     ("operators/analytics_ext.py", "ivm_join_refresh"): (3, "SCALAR-1ROW"),
@@ -133,8 +126,7 @@ COLLECT_LEDGER: dict[tuple[str, str], tuple[int, str]] = {
 }
 
 ALLOWED_CLASSES = {
-    "SCALAR-1ROW", "SCHEMA/CONST", "TOPK/LIMIT", "SKETCH", "GROUP-GUARDED",
-    "PROBE/QUERY", "PARTITION-META", "REPORT-CLI", "BOUNDED-RESULT",
+    "SCALAR-1ROW", "SCHEMA/CONST", "TOPK/LIMIT", "SKETCH", "PROBE/QUERY", "PARTITION-META", "REPORT-CLI", "BOUNDED-RESULT",
     "GUARDED-DRIVER",
 }
 

@@ -1,8 +1,7 @@
 """Round-10 pins: the four round-9 ADVICE defects (NULL handling in the
 generic sketch kernels, the 60-bit bloom hash, the CMS cache lifetime)
-and the round-9 verdict's group-cardinality guards for the grouped
-sketch collects. Each test is the degenerate input the review said the
-code mishandled."""
+and the grouped sketches' unbounded group count. Each test is the
+degenerate input the review said the code mishandled."""
 
 from __future__ import annotations
 
@@ -12,9 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from snowflake_to_postgres_spark.operators.analytics_ext import (
-    SKETCH_MAX_GROUPS,
     _bloom_pos,
-    a22_hll_union,
     a23_grouped_quantiles,
     binned_quantiles,
     cms_heavy_hitters,
@@ -39,6 +36,19 @@ def test_binned_quantiles_null_rows_do_not_shift_estimates(spark):
 def test_binned_quantiles_all_null_column_is_empty_profile(spark):
     all_null = spark.createDataFrame([(None,)] * 5, "x double")
     assert binned_quantiles(all_null, "x") == []
+
+
+def test_binned_quantiles_keeps_a_cached_input_cached(spark):
+    """The kernel reads its input through SQL; a cached input frame must
+    keep its cache entry (a spark.sql parameter would unregister it)."""
+    df = spark.createDataFrame([(float(i),) for i in range(100)], "x double").cache()
+    try:
+        df.count()
+        assert binned_quantiles(df, "x")
+        plan = df.groupBy().count()._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+    finally:
+        df.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -120,26 +130,43 @@ def test_bloom_positions_reach_above_2_32(spark):
 
 
 # ---------------------------------------------------------------------------
-# Verdict #3: group-cardinality guards on the grouped sketch collects.
+# Verdict #3: the grouped sketches no longer collect per group, so the
+# group count is unbounded and building a sketch key runs no job.
 # ---------------------------------------------------------------------------
 
 
-def test_a23_grouped_quantiles_guard_raises_on_high_cardinality(spark, sf_dir):
-    with pytest.raises(ValueError, match="approx_percentile"):
-        a23_grouped_quantiles(spark, sf_dir, max_groups=2)
+@pytest.mark.parametrize(
+    "key",
+    ["a21_binned_quantiles", "a22_hll_union", "a23_grouped_quantiles", "a26_hist_union"],
+)
+def test_sketch_key_builds_without_spark_jobs(spark, sf_dir, key):
+    from snowflake_to_postgres_spark.operators import analytics_ext
+    from snowflake_to_postgres_spark.sources import load_table
+
+    for table in ("lineitem", "orders"):
+        load_table(spark, sf_dir, table)  # the schema read is not the key's
+    sc = spark.sparkContext
+    group = f"build-{key}"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(analytics_ext, key)(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-def test_a22_hll_union_guard_raises_on_high_cardinality(spark, sf_dir):
-    with pytest.raises(ValueError, match="hll_fold"):
-        a22_hll_union(spark, sf_dir, max_groups=1)
-
-
-def test_grouped_sketches_unchanged_below_guard(spark, sf_dir):
-    # the registered keys group on ≤5-value enums — far below the
-    # ceiling; the guard must be invisible there
-    assert SKETCH_MAX_GROUPS >= 10_000
-    assert a23_grouped_quantiles(spark, sf_dir).count() > 0
-    assert a22_hll_union(spark, sf_dir).count() > 0
+def test_a23_grouped_quantiles_past_ten_thousand_groups(spark, tmp_path):
+    n_groups = 10_001
+    orders = spark.range(2 * n_groups).select(
+        (F.col("id") % n_groups).cast("string").alias("o_orderpriority"),
+        (F.col("id") * 7 % 1000 + 0.25).cast("decimal(15,2)").alias("o_totalprice"),
+    )
+    orders.write.parquet(str(tmp_path / "orders.parquet"))
+    out = a23_grouped_quantiles(spark, str(tmp_path))
+    assert out.count() == 3 * n_groups
+    assert out.select("g").distinct().count() == n_groups
 
 
 # ---------------------------------------------------------------------------

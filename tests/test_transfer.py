@@ -793,7 +793,7 @@ def test_delete_and_repair_handle_null_partition(spark, tmp_path):
     src = str(tmp_path / "src_null")
     df.write.partitionBy("_pt").parquet(src)
     stats = repair_partitions(spark, src, tgt, "_pt")
-    assert "None" in stats["stale"]
+    assert "__HIVE_DEFAULT_PARTITION__" in stats["stale"]
     assert stats["rewritten_rows"] >= 50
     a = sorted(tuple(str(x) for x in r) for r in spark.read.parquet(src).collect())
     b = sorted(tuple(str(x) for x in r) for r in spark.read.parquet(tgt).collect())
@@ -816,6 +816,7 @@ def test_delete_and_repair_drop_exponent_form_partitions(spark, tmp_path):
     value (``12345678.5``), which does not exist."""
     from snowflake_to_postgres_spark.operators.transfer import (
         delete_keys_partitioned,
+        list_partition_files,
         repair_partitions,
     )
 
@@ -835,8 +836,10 @@ def test_delete_and_repair_drop_exponent_form_partitions(spark, tmp_path):
     src = str(tmp_path / "src")
     df.filter(F.col("_pt") == 2.5).write.partitionBy("_pt").parquet(src)
     df.write.mode("overwrite").partitionBy("_pt").parquet(tgt)
+    listed = list_partition_files(spark, tgt, "_pt")
     stats = repair_partitions(spark, src, tgt, "_pt")
-    assert stats["deleted_partitions"] == ["12345678.5"]
+    assert stats["deleted_partitions"] == ["1.23456785E7"]
+    assert set(stats["stale"]) <= set(listed)
     assert not os.path.exists(os.path.join(tgt, "_pt=1.23456785E7"))
     assert spark.read.parquet(tgt).count() == 40
 
