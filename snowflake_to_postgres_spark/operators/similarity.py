@@ -3008,8 +3008,7 @@ def sim_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = m if out is None else out.unionByName(m)
     # the result is bounded (|MODS| x |queries| rows): collect it
-    # eagerly so the two cached frames unpersist before returning —
-    # the cms_heavy_hitters cache-lifetime discipline (round-10 review)
+    # eagerly so the cached frames unpersist before returning
     final = out.orderBy("filter_mod", "qid")
     rows, schema = final.collect(), final.schema
     bf.unpersist()

@@ -53,13 +53,11 @@ COLLECT_LEDGER: dict[tuple[str, str], tuple[int, str]] = {
     # two KMV sketch frames (K-bounded) + the 1-row exact baseline
     ("operators/analytics_ext.py", "a16_kmv_set_ops"): (3, "SKETCH"),
     ("operators/analytics_ext.py", "a20_bloom_membership"): (1, "SKETCH"),
-    ("operators/analytics_ext.py", "a24_cms_join_size"): (2, "SKETCH"),
     # join_plan_advice's nested hot(): share-thresholded (<1e6/SHARE_PPM
     # keys can qualify) + explicit .limit(JOIN_PLAN_HOT_TOP)
     ("operators/analytics_ext.py", "hot"): (1, "TOPK/LIMIT"),
     ("operators/analytics_ext.py", "a25_corr_matrix"): (1, "SCALAR-1ROW"),
     ("operators/analytics_ext.py", "binned_quantiles"): (1, "SKETCH"),
-    ("operators/analytics_ext.py", "cms_heavy_hitters"): (2, "SKETCH"),
     ("operators/analytics_ext.py", "hll_estimate"): (1, "SKETCH"),
     ("operators/analytics_ext.py", "ivm_join_refresh"): (3, "SCALAR-1ROW"),
     # collect_all: the shared overlapped-collect helper — boundedness is

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import hashlib
 
+import duckdb
 import pyspark.sql.functions as F
 import pytest
 
@@ -17,6 +18,9 @@ from snowflake_to_postgres_spark.operators.analytics_ext import (
     cms_heavy_hitters,
     hll_fold,
 )
+from snowflake_to_postgres_spark.registry import oracle_sql, queries
+from snowflake_to_postgres_spark.sources import table_path
+from tests.oracle_compare import compare_frames
 
 
 # ---------------------------------------------------------------------------
@@ -95,6 +99,67 @@ def test_cms_heavy_hitters_leaves_no_cached_frame_behind(spark):
     )
 
 
+def _parity(spark, tmp_path, tables, key):
+    """(ok, msg) of ``key`` against its DuckDB oracle over ``tables`` —
+    {name: DuckDB SELECT} — written as parquet fixture tables."""
+    con = duckdb.connect()
+    try:
+        for name, sql in tables.items():
+            path = tmp_path / f"{name}.parquet"
+            con.execute(f"COPY ({sql}) TO '{path}' (FORMAT PARQUET)")
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+        return compare_frames(queries()[key](spark, str(tmp_path)), con.execute(oracle_sql()[key]))
+    finally:
+        con.close()
+
+
+_A24_ORDERS = (
+    "SELECT i AS o_orderkey,"
+    " CASE WHEN i % 10 = 0 THEN NULL ELSE i % 500 + 1 END AS o_custkey"
+    " FROM range(2000) t(i)"
+)
+
+
+@pytest.mark.parametrize(
+    "customer",
+    [
+        pytest.param("SELECT i + 1 AS c_custkey FROM range(500) t(i)", id="null_keys"),
+        pytest.param("SELECT i + 10001 AS c_custkey FROM range(500) t(i)", id="disjoint"),
+    ],
+)
+def test_a24_matches_oracle_on_null_and_disjoint_keys(spark, tmp_path, customer):
+    """A NULL o_custkey joins nothing, so it stays out of both sketches
+    (the oracle's NULL-propagating hash drops it); a disjoint join has
+    no exact size, so the guarantee and the ratio are NULL."""
+    ok, msg = _parity(
+        spark, tmp_path, {"orders": _A24_ORDERS, "customer": customer}, "a24_cms_join_size"
+    )
+    assert ok, msg
+
+
+@pytest.mark.parametrize(
+    "key", ["a21_binned_quantiles", "a23_grouped_quantiles", "a26_hist_union", "x_approx_sketches"]
+)
+def test_binned_sketch_keys_match_oracle_with_null_prices(spark, sf_dir, tmp_path, key):
+    """NULL prices are outside every binned sketch, in the keys and in
+    their oracles alike (a NULL x must not land in the top bin)."""
+    src = {
+        "lineitem": (
+            "SELECT * REPLACE (CASE WHEN l_linenumber = 3 THEN NULL"
+            " ELSE l_extendedprice END AS l_extendedprice)"
+        ),
+        "orders": (
+            "SELECT * REPLACE (CASE WHEN o_orderkey % 7 = 0 THEN NULL"
+            " ELSE o_totalprice END AS o_totalprice)"
+        ),
+    }
+    tables = {
+        t: f"{sql} FROM read_parquet('{table_path(sf_dir, t)}')" for t, sql in src.items()
+    }
+    ok, msg = _parity(spark, tmp_path, tables, key)
+    assert ok, msg
+
+
 # ---------------------------------------------------------------------------
 # ADVICE #3: _bloom_pos draws 60 hash bits (15 md5 hex chars), so bit
 # positions stay reachable past m_bits = 2^32 (~5×10^8 keys).
@@ -137,13 +202,22 @@ def test_bloom_positions_reach_above_2_32(spark):
 
 @pytest.mark.parametrize(
     "key",
-    ["a21_binned_quantiles", "a22_hll_union", "a23_grouped_quantiles", "a26_hist_union"],
+    [
+        "a21_binned_quantiles",
+        "a22_hll_union",
+        "a23_grouped_quantiles",
+        "a26_hist_union",
+        "a19_cms_heavy_hitters",
+        "a24_cms_join_size",
+        "a27_cms_join_cardinality",
+        "a28_cms_merge",
+    ],
 )
 def test_sketch_key_builds_without_spark_jobs(spark, sf_dir, key):
     from snowflake_to_postgres_spark.operators import analytics_ext
     from snowflake_to_postgres_spark.sources import load_table
 
-    for table in ("lineitem", "orders"):
+    for table in ("lineitem", "orders", "customer", "events"):
         load_table(spark, sf_dir, table)  # the schema read is not the key's
     sc = spark.sparkContext
     group = f"build-{key}"
