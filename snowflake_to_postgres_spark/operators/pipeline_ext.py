@@ -642,46 +642,26 @@ def sim_doc_hashed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's top-3 neighbors by cosine over those vectors — no
     external embedding model, no vocabulary, one engine.
 
-    Determinism: weights are exact int64; dot products and squared
-    norms are computed in DECIMAL(38,0) (weights can reach ~1e10, so
-    their products overflow int64 — decimal keeps them exact and
-    order-independent in both engines); only the final cosine divides
-    in IEEE doubles, rounded to DECIMAL(10,8) like every other cosine.
+    Determinism: weights are exact int64, scored as DECIMAL(19,0)
+    components, so dot products and squared norms are DECIMAL(38,0)
+    (weights can reach ~1e10, so their products overflow int64 — decimal
+    keeps them exact and order-independent in both engines); only the
+    final cosine divides in IEEE doubles, on the shared DECIMAL(10,8)
+    grid.
 
-    Scale shape: sparse dot via equi-join on dim_idx with the query
-    block broadcast — the sim_topk_bruteforce topology over generated
-    features."""
+    Scale shape: the sim_topk_bruteforce scorer (similarity._cosine_sql)
+    over generated features — sparse dot via equi-join on dim_idx with
+    the query block broadcast."""
+    from snowflake_to_postgres_spark.operators.similarity import _cosine_sql
+    from snowflake_to_postgres_spark.util.sqlview import temp_view_for
+
     feats = tx_hashed_features(spark, sf_dir).select(
-        "doc_id", "dim_idx", F.col("weight").cast("decimal(19,0)").alias("w")
+        F.col("doc_id").alias("vec_id"),
+        F.col("dim_idx").alias("idx"),
+        F.col("weight").cast("decimal(19,0)").alias("val"),
     )
-    norms = feats.groupBy("doc_id").agg(
-        F.sum(F.col("w") * F.col("w")).cast("decimal(38,0)").alias("n2")
-    )
-    q = feats.filter(F.col("doc_id") < N_DOC_QUERIES).select(
-        F.col("doc_id").alias("qid"), "dim_idx", F.col("w").alias("qw")
-    )
-    dots = (
-        feats.join(F.broadcast(q), "dim_idx")
-        .filter(F.col("doc_id") != F.col("qid"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum(F.col("w") * F.col("qw")).cast("decimal(38,0)").alias("dot"))
-    )
-    qn = norms.select(F.col("doc_id").alias("qid"), F.col("n2").alias("qn2"))
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("qn2").cast("double")) * F.sqrt(F.col("n2").cast("double")))
-    ).cast("decimal(10,8)")
-    ranked = (
-        dots.join(F.broadcast(qn), "qid")
-        .join(norms, "doc_id")
-        .select("qid", F.col("doc_id").alias("neighbor_id"), cos.alias("cosine"))
-    )
-    w_rank = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w_rank).cast("bigint"))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "rank", "neighbor_id", "cosine")
-    )
+    feats_v = temp_view_for(feats, "doc_feats")
+    return spark.sql(_cosine_sql(feats_v, k=3, n_queries=N_DOC_QUERIES))
 
 
 SIM_DOC_HASHED_ORACLE = _TX_HASHED_CTE + f""",

@@ -77,13 +77,6 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp
 
 
-def _norms(comp: DataFrame) -> DataFrame:
-    """(vec_id, n2 DECIMAL(38,18)) exact squared norms."""
-    return comp.groupBy("vec_id").agg(
-        F.sum(F.col("val") * F.col("val")).cast("decimal(38,18)").alias("n2")
-    )
-
-
 _COMP_CTES = """
 WITH comp AS (
   SELECT vec_id, i AS idx,
@@ -121,6 +114,12 @@ def _sub(sql: str) -> str:
     return f"(\n{sql}\n)"
 
 
+def _norms_sql(comp: str) -> str:
+    """SELECT of (vec_id, n2): exact squared norms, typed by the sum of
+    ``val * val`` (DECIMAL(38,18) over the DECIMAL(18,9) grid)."""
+    return f"SELECT vec_id, SUM(val * val) AS n2 FROM {comp} GROUP BY vec_id"
+
+
 def _cosine_sql(
     comp: str, cand: str | None = None, k: int | None = None, n_queries: int = N_QUERIES
 ) -> str:
@@ -131,14 +130,14 @@ def _cosine_sql(
     ``k``, (qid, rank, neighbor_id, cosine) of the k best per query, ties
     on neighbor_id.
 
-    Rounded to DECIMAL(10,8): DuckDB's wide-decimal→double conversion can
-    differ from the JVM's by 1 ULP; 8 decimals collapses that while
-    keeping a meaningful similarity score. Ranking uses the rounded
-    value."""
-    norms = (
-        "(SELECT vec_id, CAST(SUM(val * val) AS DECIMAL(38,18)) AS n2 "
-        f"FROM {comp} GROUP BY vec_id)"
-    )
+    ``comp`` is any (vec_id, idx, val) relation of exact decimals: dots
+    and norms are typed by their sums, so integer components (DECIMAL
+    with scale 0, as the hashed document features) keep dots past 1e20
+    exact. Rounded to DECIMAL(10,8): DuckDB's wide-decimal→double
+    conversion can differ from the JVM's by 1 ULP; 8 decimals collapses
+    that while keeping a meaningful similarity score. Ranking uses the
+    rounded value."""
+    norms = _sub(_norms_sql(comp))
     q = f"(SELECT vec_id AS qid, idx, val AS qval FROM {comp} WHERE vec_id < {n_queries})"
     if cand is None:
         qid = "q.qid"
@@ -154,8 +153,7 @@ def _cosine_sql(
             / (SQRT(CAST(qn.n2 AS DOUBLE)) * SQRT(CAST(nn.n2 AS DOUBLE)))
             AS DECIMAL(10,8)) AS cosine
 FROM (
-  SELECT /*+ BROADCAST(q) */ {qid}, c.vec_id,
-         CAST(SUM(c.val * q.qval) AS DECIMAL(38,18)) AS dot
+  SELECT /*+ BROADCAST(q) */ {qid}, c.vec_id, SUM(c.val * q.qval) AS dot
   FROM {dots_from}
   GROUP BY {qid}, c.vec_id
 ) d
@@ -171,10 +169,32 @@ JOIN {norms} nn ON nn.vec_id = d.vec_id"""
 ) WHERE rank <= {k}"""
 
 
-def _ivf_cent_sql(comp: str, n_cent: int) -> str:
+# The two in-block dedups share the pair scoring below but not their dot
+# stages, because the better candidate form depends on block size. Label
+# blocks (dedup_embedding_cosine_pairs) hold about 200 vectors at sf0.1
+# and grow with N: their shuffle self-join on (label, idx) ran 4.54 s,
+# the in-block explode 7.77 s. Semantic cells (dedup_semantic_clusters)
+# are held near SEM_TARGET_OCC: there the explode beat the self-join,
+# 2.109 → 1.930 s at sf0.1 (6 alternating rounds; a SHUFFLE_HASH hint on
+# the join measured 1.943 s).
+def _pair_cosine_sql(dots: str, comp: str) -> str:
+    """SELECT of (va, vb, cosine): the exact cosine of each (va, vb, dot)
+    pair of ``dots`` over the squared norms of ``comp``, on the
+    _cosine_sql grid. Hint-free: both sides are corpus-cardinality."""
+    return f"""SELECT d.va, d.vb,
+       CAST(CAST(d.dot AS DOUBLE)
+            / (SQRT(CAST(na.n2 AS DOUBLE)) * SQRT(CAST(nb.n2 AS DOUBLE)))
+            AS DECIMAL(10,8)) AS cosine
+FROM {dots} d
+JOIN {_sub(_norms_sql(comp))} na ON na.vec_id = d.va
+JOIN {_sub(_norms_sql(comp))} nb ON nb.vec_id = d.vb"""
+
+
+def _ivf_cent_sql(comp: str, n_cent: int | str) -> str:
     """SELECT of (cid, idx, cval): the first ``n_cent`` corpus vectors, a
     deterministic stand-in for trained centroids — N_CENTROIDS for the
-    IVF search paths, a corpus-sized count for semantic dedup."""
+    IVF search paths, a corpus-sized count expression for semantic
+    dedup."""
     return f"SELECT vec_id AS cid, idx, val AS cval FROM {comp} WHERE vec_id < {n_cent}"
 
 
@@ -591,9 +611,9 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands; at scale the block key comes from a coarse quantizer)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     comp = _components(spark, sf_dir)
-    # emb (one label row per vector) and the norm frames below are
-    # corpus-cardinality — never force-broadcast them; the join keys
-    # (vec_id, then d1/d2) are the existing shuffle keys.
+    # emb (one label row per vector) and the norms are corpus-cardinality
+    # — never force-broadcast them; the join keys (vec_id, then va/vb)
+    # are the existing shuffle keys.
     labeled = comp.join(emb, "vec_id")
     a = labeled.alias("a")
     b = labeled.alias("b")
@@ -604,20 +624,13 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.idx") == F.col("b.idx"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .groupBy(F.col("a.vec_id").alias("d1"), F.col("b.vec_id").alias("d2"))
-        .agg(F.sum(F.col("a.val") * F.col("b.val")).cast("decimal(38,18)").alias("dot"))
+        .groupBy(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
+        .agg(F.sum(F.col("a.val") * F.col("b.val")).alias("dot"))
     )
-    norms = _norms(comp)
-    n1 = norms.select(F.col("vec_id").alias("d1"), F.col("n2").alias("n1sq"))
-    n2 = norms.select(F.col("vec_id").alias("d2"), F.col("n2").alias("n2sq"))
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("n1sq").cast("double")) * F.sqrt(F.col("n2sq").cast("double")))
-    ).cast("decimal(10,8)")
+    pairs = _pair_cosine_sql(temp_view_for(dots, "pair_dots"), temp_view_for(comp, "comp"))
     return (
-        dots.join(n1, "d1")
-        .join(n2, "d2")
-        .select("d1", "d2", cos.alias("cosine"))
+        spark.sql(pairs)
+        .select(F.col("va").alias("d1"), F.col("vb").alias("d2"), "cosine")
         .filter(F.col("cosine") >= NEARDUP_COS)
     )
 
@@ -789,30 +802,20 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ~6 s with this rule (k=312, occupancy ~64) — PERFORMANCE.md.
     The corpus-sized frames never self-join globally."""
     comp = _components(spark, sf_dir)
-    n_vecs = load_table(spark, sf_dir, "embeddings").count()
-    k_cells = max(SEM_CELLS, n_vecs // SEM_TARGET_OCC)
     comp_v = temp_view_for(comp, "comp")
+    emb = temp_view_for(load_table(spark, sf_dir, "embeddings"), "embeddings")
+    k_cells = f"GREATEST({SEM_CELLS}, (SELECT COUNT(*) FROM {emb}) DIV {SEM_TARGET_OCC})"
     d2 = _sub(_ivf_d2_sql(comp_v, _sub(_ivf_cent_sql(comp_v, k_cells))))
     # cached: (vec_id, cell) is two narrow columns — O(N) rows, and it
     # feeds BOTH sides of the within-cell self-join below; uncached the
     # whole assignment subtree (broadcast join + agg + window) runs twice
     assign = spark.sql(_ivf_assign_sql(d2)).cache()
-    norms = _norms(comp)
     mem = comp.join(assign, "vec_id")
-    # Round 15 (guide §2.4, the simhash in-block pattern): the pairwise
-    # stage used to SELF-JOIN mem on (cell, idx); grouping each
-    # (cell, idx) bucket into an array and exploding the in-bucket
-    # cross product replaces the join with a generator — same decimal
-    # multiply set, one fewer join build, and the (va < vb) filter
-    # keeps exactly one copy of each unordered pair as before. The
-    # arrays are bounded BY DESIGN here (unlike the simhash prefix
-    # blocks): a bucket holds one cell's members having that idx, and
-    # the k = max(SEM_CELLS, N/SEM_TARGET_OCC) rule pins cell occupancy
-    # at ~SEM_TARGET_OCC regardless of corpus size. Paired ABAB at
-    # sf0.1 (6 alternating rounds): med 2.109 → 1.930 s; a SHUFFLE_HASH
-    # hint on the old join measured 1.943 — both beat the SMJ, the
-    # array form wins and needs no hint. Rows identical both ways
-    # (decimal sums are exact, so pair-order is immaterial).
+    # In-cell dots in explode form (see _pair_cosine_sql): each (cell,
+    # idx) bucket becomes one array whose in-bucket cross product the
+    # (va < vb) filter halves. The arrays are bounded by design: the
+    # k = max(SEM_CELLS, N/SEM_TARGET_OCC) rule pins cell occupancy at
+    # ~SEM_TARGET_OCC regardless of corpus size.
     cellarr = mem.groupBy("cell", "idx").agg(
         F.collect_list(F.struct("vec_id", "val")).alias("items")
     )
@@ -821,20 +824,12 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a", F.explode("items").alias("b"))
         .filter(F.col("a.vec_id") < F.col("b.vec_id"))
         .groupBy(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-        .agg(F.sum(F.col("a.val") * F.col("b.val")).cast("decimal(38,18)").alias("dot"))
+        .agg(F.sum(F.col("a.val") * F.col("b.val")).alias("dot"))
     )
-    na = norms.select(F.col("vec_id").alias("va"), F.col("n2").alias("na2"))
-    nb = norms.select(F.col("vec_id").alias("vb"), F.col("n2").alias("nb2"))
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("na2").cast("double")) * F.sqrt(F.col("nb2").cast("double")))
-    ).cast("decimal(10,8)")
     # drop the HIGHER id of every over-threshold pair: one deterministic
     # representative (the lowest id) survives each semantic-dup chain
     dropped = (
-        dots.join(na, "va")
-        .join(nb, "vb")
-        .select("vb", cos.alias("cosine"))
+        spark.sql(_pair_cosine_sql(temp_view_for(dots, "pair_dots"), comp_v))
         .filter(F.col("cosine") >= SEMDEDUP_COS)
         .select(F.col("vb").alias("vec_id"))
         .distinct()
@@ -1373,32 +1368,7 @@ def sim_truncated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates (idx < k vs idx <= k) select the identical leading
     block. tests measure recall vs the full-dim truth."""
     comp = _components(spark, sf_dir).filter(F.col("idx") < MRL_DIMS)
-    norms = _norms(comp)
-    q = comp.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), "idx", F.col("val").alias("qval")
-    )
-    dots = (
-        comp.join(F.broadcast(q), "idx")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum(F.col("val") * F.col("qval")).cast("decimal(38,18)").alias("dot"))
-    )
-    qn = norms.select(F.col("vec_id").alias("qid"), F.col("n2").alias("qn2"))
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("qn2").cast("double")) * F.sqrt(F.col("n2").cast("double")))
-    ).cast("decimal(10,8)")
-    ranked = (
-        dots.join(F.broadcast(qn), "qid")
-        .join(norms, "vec_id")
-        .select("qid", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= ANN_EVAL_K)
-        .select("qid", "rank", "neighbor_id", "cosine")
-    )
+    return spark.sql(_cosine_sql(temp_view_for(comp, "comp"), k=ANN_EVAL_K))
 
 
 SIM_TRUNCATED_ORACLE = f"""
@@ -1711,7 +1681,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     cent.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     cb.write.mode("overwrite").parquet(f"{index_dir}/codebook")
     comp.write.mode("overwrite").parquet(f"{index_dir}/components")
-    _norms(comp).write.mode("overwrite").parquet(f"{index_dir}/norms")
+    spark.sql(_norms_sql(comp_v)).write.mode("overwrite").parquet(f"{index_dir}/norms")
 
 
 def sim_ivf_pq_search(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -2279,7 +2249,7 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(x * 1e8 + F.lit(0.5)).cast("decimal(28,0)")
         / F.lit(100000000).cast("decimal(10,0)")
     ).cast("decimal(18,8)")
-    norms = _norms(comp).select(
+    norms = spark.sql(_norms_sql(temp_view_for(comp, "comp"))).select(
         "vec_id", grid(F.sqrt(F.col("n2").cast("double"))).alias("norm")
     )
     stats = norms.agg(
@@ -3709,39 +3679,11 @@ MRL_LADDER = (8, 16, 32)  # prefix lengths audited against the full 64-dim truth
 
 def _trunc_topk(comp: DataFrame, d: "int | None") -> DataFrame:
     """(qid, neighbor_id) top-TOP_K by cosine over the first ``d``
-    components (full vector when d is None) — the _bf_cosines topology
-    with a prefix filter pushed into the component scan."""
+    components (full vector when d is None) — :func:`_cosine_sql` with a
+    prefix filter pushed into the component scan."""
     c = comp.filter(F.col("idx") < d) if d is not None else comp
-    norms = c.groupBy("vec_id").agg(
-        F.sum(F.col("val") * F.col("val")).cast("decimal(38,18)").alias("n2")
-    )
-    q = c.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), "idx", F.col("val").alias("qval")
-    )
-    dots = (
-        c.join(F.broadcast(q), "idx")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum(F.col("val") * F.col("qval")).cast("decimal(38,18)").alias("dot"))
-    )
-    qn = norms.select(F.col("vec_id").alias("qid"), F.col("n2").alias("qn2"))
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("qn2").cast("double")) * F.sqrt(F.col("n2").cast("double")))
-    ).cast("decimal(10,8)")
-    scored = (
-        dots.join(F.broadcast(qn), "qid")
-        .join(norms, "vec_id")
-        .select("qid", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "neighbor_id")
-    )
+    top = _cosine_sql(temp_view_for(c, "comp"), k=TOP_K)
+    return comp.sparkSession.sql(top).select("qid", "neighbor_id")
 
 
 def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4017,37 +3959,10 @@ def sim_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = (
         ham.withColumn("rnk", F.row_number().over(wham))
         .filter(F.col("rnk") <= HAMMING_SHORTLIST_MULT * TOP_K)
-        .select("qid", "neighbor_id")
+        .select("qid", F.col("neighbor_id").alias("vec_id"))
     )
-    norms = _norms(comp)
-    qc = comp.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), "idx", F.col("val").alias("qval")
-    )
-    cand = shortlist.join(
-        comp.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
-    )
-    dots = (
-        cand.join(F.broadcast(qc), ["qid", "idx"])
-        .groupBy("qid", "neighbor_id")
-        .agg(F.sum(F.col("val") * F.col("qval")).cast("decimal(38,18)").alias("dot"))
-    )
-    qn = norms.select(F.col("vec_id").alias("qid"), F.col("n2").alias("qn2"))
-    nn = norms.select(F.col("vec_id").alias("neighbor_id"), F.col("n2").alias("nn2"))
-    cos = (
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("qn2").cast("double")) * F.sqrt(F.col("nn2").cast("double")))
-    ).cast("decimal(10,8)")
-    scored = (
-        dots.join(F.broadcast(qn), "qid")
-        .join(nn, "neighbor_id")
-        .select("qid", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "rank", "neighbor_id", "cosine")
-    )
+    comp_v = temp_view_for(comp, "comp")
+    return spark.sql(_cosine_sql(comp_v, temp_view_for(shortlist, "cand"), TOP_K))
 
 
 def _hamming_rerank_oracle() -> str:

@@ -196,7 +196,8 @@ def test_bloom_positions_reach_above_2_32(spark):
 
 # ---------------------------------------------------------------------------
 # Verdict #3: the grouped sketches no longer collect per group, so the
-# group count is unbounded and building a sketch key runs no job.
+# group count is unbounded and building a sketch key runs no job. The
+# semantic dedup's corpus-sized cell count is a scalar subquery too.
 # ---------------------------------------------------------------------------
 
 
@@ -211,19 +212,19 @@ def test_bloom_positions_reach_above_2_32(spark):
         "a24_cms_join_size",
         "a27_cms_join_cardinality",
         "a28_cms_merge",
+        "dedup_semantic_clusters",
     ],
 )
 def test_sketch_key_builds_without_spark_jobs(spark, sf_dir, key):
-    from snowflake_to_postgres_spark.operators import analytics_ext
     from snowflake_to_postgres_spark.sources import load_table
 
-    for table in ("lineitem", "orders", "customer", "events"):
+    for table in ("lineitem", "orders", "customer", "events", "embeddings"):
         load_table(spark, sf_dir, table)  # the schema read is not the key's
     sc = spark.sparkContext
     group = f"build-{key}"
     sc.setJobGroup(group, group)
     try:
-        getattr(analytics_ext, key)(spark, sf_dir)
+        queries()[key](spark, sf_dir)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

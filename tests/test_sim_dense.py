@@ -184,3 +184,32 @@ def test_hard_negatives_exclude_positive_band(spark, sf_dir):
         for r in rows:
             assert r["neighbor_id"] != t1_id
             assert float(r["cosine"]) < HARD_NEG_REL * t1_cos
+
+
+def test_cosine_sql_keeps_integer_dots_exact(spark):
+    """_cosine_sql types its dots and norms by their sums, so integer
+    components (DECIMAL(19,0), as sim_doc_hashed_topk scores) keep dots
+    past 1e20 exact: no NULL, no overflow. A DECIMAL(38,18) cast on the
+    dot caps it below 1e20 and fails here."""
+    from decimal import Decimal
+
+    from snowflake_to_postgres_spark.operators.similarity import _cosine_sql
+    from snowflake_to_postgres_spark.util.sqlview import temp_view_for
+
+    # x 1e11: the query's dot with vec 1 is 2.5e23
+    vecs = {0: (3, 4, 0), 1: (3, 4, 0), 2: (4, 3, 0), 3: (0, 5, 0), 4: (-3, -4, 0), 5: (0, 0, 7)}
+    rows = [
+        (vid, idx, Decimal(x) * Decimal(10) ** 11)
+        for vid, v in vecs.items()
+        for idx, x in enumerate(v)
+    ]
+    comp = spark.createDataFrame(rows, "vec_id BIGINT, idx INT, val DECIMAL(19,0)")
+    view = temp_view_for(comp, "int_comp")
+    got = spark.sql(_cosine_sql(view, k=5, n_queries=1)).collect()
+    assert [(r["rank"], r["neighbor_id"], r["cosine"]) for r in got] == [
+        (1, 1, Decimal("1.00000000")),
+        (2, 2, Decimal("0.96000000")),
+        (3, 3, Decimal("0.80000000")),
+        (4, 5, Decimal("0E-8")),
+        (5, 4, Decimal("-1.00000000")),
+    ]

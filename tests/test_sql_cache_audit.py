@@ -32,9 +32,12 @@ from snowflake_to_postgres_spark.operators.similarity import (
     _ivf_cell_d2,
     _ivf_centroids,
     _rank_candidates,
+    dedup_embedding_cosine_pairs,
     dedup_semantic_clusters,
+    emb_matryoshka_recall,
     emb_pq_codes,
     sim_filtered_ann,
+    sim_hamming_rerank,
     sim_hard_negatives,
     sim_ivf_pq_topk,
     sim_ivf_topk,
@@ -43,7 +46,9 @@ from snowflake_to_postgres_spark.operators.similarity import (
     sim_pq_adc_rescore_topk,
     sim_pq_adc_topk,
     sim_rp_lsh_topk,
+    sim_truncated_topk,
 )
+from snowflake_to_postgres_spark.operators.pipeline_ext import sim_doc_hashed_topk
 from snowflake_to_postgres_spark.operators.text import (
     tx_bigram_lm_score,
     tx_bm25_topk,
@@ -69,8 +74,9 @@ def _imts(df) -> int:
 #: (builder, minimum InMemoryTableScan count). The three text queries
 #: cache the bigram model / BM25 inverted index and reference it 4-6
 #: times per plan; dedup_semantic_clusters caches its SQL-built IVF
-#: assignment; the others cache nothing themselves (min 0) but must
-#: still pass the sentinel guard below.
+#: assignment; emb_matryoshka_recall and sim_hamming_rerank persist the
+#: components their _cosine_sql builds read; the others cache nothing
+#: themselves (min 0) but must still pass the sentinel guard below.
 SQL_BUILT = [
     (tx_bigram_lm_score, 4),
     (tx_bm25_topk, 4),
@@ -88,6 +94,11 @@ SQL_BUILT = [
     (sim_pq_adc_rescore_topk, 0),
     (sim_hard_negatives, 0),
     (dedup_semantic_clusters, 1),
+    (sim_truncated_topk, 0),
+    (emb_matryoshka_recall, 1),
+    (sim_hamming_rerank, 1),
+    (dedup_embedding_cosine_pairs, 0),
+    (sim_doc_hashed_topk, 0),
 ]
 
 #: Similarity builds whose components frame must not unregister a
@@ -96,7 +107,8 @@ SQL_BUILT = [
 COMPONENT_BUILDS = [
     sim_rp_lsh_topk, sim_filtered_ann, sim_mmr_rerank, sim_ivf_topk, sim_ivf_pq_topk,
     emb_pq_codes, sim_pq_adc_topk, sim_pq_adc_rescore_topk, sim_hard_negatives,
-    dedup_semantic_clusters,
+    dedup_semantic_clusters, sim_truncated_topk, emb_matryoshka_recall, sim_hamming_rerank,
+    dedup_embedding_cosine_pairs,
 ]
 
 
